@@ -14,7 +14,8 @@ import time
 
 from pyspark.sql import functions as F
 
-from velib_lakehouse_spark.streaming.silver import run_silver_stream
+from velib_lakehouse_spark.sources.snapshots import live_files, read_commits, read_table
+from velib_lakehouse_spark.streaming.silver import SILVER_SCHEMA, run_silver_stream
 from tests.conftest import SF_DIR
 
 
@@ -23,23 +24,36 @@ def test_silver_stream_partitioned_layout_and_idempotent_restart(spark):
     ckpt = tempfile.mkdtemp(prefix="t_silver_ckpt_")
 
     meta = run_silver_stream(spark, SF_DIR, out, ckpt)
-    first = spark.read.parquet(out)
+    first = read_table(spark, out, SILVER_SCHEMA)
     n1 = first.count()
     expected = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
     assert n1 == expected > 0
     assert meta["rows_processed"] == expected  # T5 progress introspection
 
-    # hive layout: date=YYYY-MM-DD partition directories
-    parts = [d for d in os.listdir(out) if d.startswith("date=")]
-    assert len(parts) > 1
-    assert all(len(d.split("=")[1]) == 10 for d in parts)
+    # one log commit per micro-batch, adding one part=YYYY-MM-DD
+    # directory per date the batch touched
+    commits = read_commits(out)
+    assert [c["stream_txn"]["batch_id"] for c in commits] == list(
+        range(meta["n_batches"])
+    )
+    dates = {part for _, part in live_files(out)}
+    assert len(dates) > 1
+    assert all(len(d) == 10 for d in dates)
+    assert all(
+        rel.split("/")[-1] == f"part={d}" and os.path.isdir(os.path.join(out, rel))
+        for rel, d in live_files(out)
+    )
 
     # restart from the same checkpoint: nothing reprocessed
     meta2 = run_silver_stream(spark, SF_DIR, out, ckpt)
-    assert spark.read.parquet(out).count() == n1
+    assert read_table(spark, out, SILVER_SCHEMA).count() == n1
     assert meta2["rows_processed"] == 0
+    assert len(read_commits(out)) == len(commits)
 
-    # schema contract of the silver table
+    # schema contract of the silver table: the data files themselves
+    # carry SILVER_SCHEMA, the partition column included
+    on_disk = spark.read.parquet(*[os.path.join(out, rel) for rel, _ in live_files(out)])
+    assert on_disk.dtypes == first.dtypes
     assert set(first.columns) == {
         "event_id",
         "station_code",

@@ -8,13 +8,16 @@ a lake root, with every tier expressed by this package's operators:
 
   bronze   keyed-message ingestion utilities (sources/ingest.py) feed a
            stream; in tests the file source stands in for the broker
-  silver   Structured Streaming parse/derive into date-partitioned
-           parquet with checkpointing (streaming/silver.py)
+  silver   Structured Streaming parse/derive, each micro-batch an
+           idempotent date-partitioned commit to a log table
+           (streaming/silver.py, sources/snapshots.py)
   history  lag + trailing-average enrichment (the reconstructed
            velib_stats_history_silver, SURVEY.md §2.9)
-  gold     alert rules -> atomic versioned snapshot (sources/snapshots)
+  gold     alert rules -> whole-table ``overwrite`` commit to a log
+           table, one ``v=N`` directory per version (sources/snapshots)
   serving  payload dicts for the two API endpoints (serving.py)
-  retire   partition retention on silver (sources/lake.py)
+  retire   silver partition retention as a logged delete, then log
+           checkpoint + vacuum of the retired files (sources/snapshots)
 
 Orchestration stays external (cron/Dagster/Airflow call this); the
 engine owns the dataflow.
@@ -24,7 +27,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from velib_lakehouse_spark.functions.timeseries import (
@@ -33,9 +36,13 @@ from velib_lakehouse_spark.functions.timeseries import (
     trailing_avg_seconds,
 )
 from velib_lakehouse_spark.operators.velib import ALERT_MAX, CRITICAL_MAX
-from velib_lakehouse_spark.sources.lake import retention_delete
-from velib_lakehouse_spark.sources.snapshots import read_snapshot, write_snapshot
-from velib_lakehouse_spark.streaming.silver import run_silver_stream
+from velib_lakehouse_spark.sources.snapshots import (
+    read_snapshot,
+    read_table,
+    retire_partitions,
+    write_snapshot,
+)
+from velib_lakehouse_spark.streaming.silver import SILVER_SCHEMA, run_silver_stream
 
 
 def build_history(silver: DataFrame) -> DataFrame:
@@ -63,12 +70,7 @@ def build_alerts(history: DataFrame) -> DataFrame:
         )
         .drop("max_ts")
     )
-    w = Window.partitionBy("station_code").orderBy(
-        F.col("last_reported").desc(), F.col("bikes_available").desc()
-    )
-    latest = recent.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") == 1
-    )
+    latest = latest_per_key(recent, "station_code", "last_reported", "bikes_available")
     return latest.filter(
         (F.col("bikes_available") < ALERT_MAX) & (F.col("net_flow") <= 0)
     ).select(
@@ -96,32 +98,25 @@ def run_medallion(
 
     stream_meta = run_silver_stream(spark, sf_dir, silver_dir, ckpt_dir)
 
-    # Read through a partition glob + basePath (the reference's own read
-    # idiom, src/assets/velib_alerte.py:34): a root-dir read would trust
-    # the streaming sink's _spark_metadata log, which still lists files
-    # that partition retention has deleted.
-    silver = (
-        spark.read.option("basePath", silver_dir)
-        .parquet(os.path.join(silver_dir, "date=*"))
-        .withColumn("date", F.col("date").cast("string"))
-    )
+    silver = read_table(spark, silver_dir, SILVER_SCHEMA)
     history = build_history(silver)
     alerts = build_alerts(history)
     gold_version = write_snapshot(alerts, gold_table)
 
-    gold = read_snapshot(spark, gold_table)
-    n_alerts = gold.count()
-    n_critical = gold.filter(F.col("alert_level") == "CRITICAL_EMPTY").count()
+    counts = read_snapshot(spark, gold_table).agg(
+        F.count(F.lit(1)).alias("alerts"),
+        F.count_if(F.col("alert_level") == "CRITICAL_EMPTY").alias("critical"),
+    ).first()
 
     removed = 0
     if retention_min_date:
-        removed = retention_delete(silver_dir, "date", retention_min_date)
+        removed = retire_partitions(silver_dir, retention_min_date)
 
     return {
         "silver_rows": stream_meta["rows_processed"],
         "gold_version": gold_version,
-        "alerts": n_alerts,
-        "critical": n_critical,
+        "alerts": counts["alerts"],
+        "critical": counts["critical"],
         "partitions_retired": removed,
         "gold_table": gold_table,
     }

@@ -62,6 +62,10 @@ DRIVER_WINDOW = 50
 #   tpch_q10/q6, image patches).
 # Displaced r10-green rows move to the TAIL of SECONDARY (freshest
 # evidence last); the SECONDARY head is the r12 rotation queue.
+# Later: one query each for the velib, decontamination, retrieval and
+# training families (no green row in the last two artifacts) and the
+# three queries the one-table-protocol refactor drifted took seven
+# tpch slots (q4-q10, r11-green and unchanged).
 PRIORITY: tuple[str, ...] = (
     "dedup_icws_weighted_minhash",
     "dedup_icws_capped",
@@ -98,11 +102,6 @@ PRIORITY: tuple[str, ...] = (
     "tpch_q21_waiting_suppliers",
     "tpch_q22_idle_customers",
     "tpch_q2_min_cost_supplier",
-    "tpch_q4_priority_check",
-    "tpch_q5_local_supplier",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_nation_profit",
     "winnow_fingerprints",
     "seasonal_naive_backtest",
     "link_prediction_common_neighbors",
@@ -110,9 +109,14 @@ PRIORITY: tuple[str, ...] = (
     "source_concentration_gini",
     "streaming_sliding_counts",
     "trend_slope_per_user",
-    "tpch_q10_returned_items",
     "multimodal_image_patches",
-    "tpch_q6_forecast_revenue",
+    "velib_alerts",
+    "streaming_silver_availablenow",
+    "streaming_txn_sink",
+    "lake_retention_sweep",
+    "decontaminate_ngram",
+    "inverted_index",
+    "pack_sequences",
 )
 
 # Registered immediately AFTER the window, highest value first: if a
@@ -132,7 +136,6 @@ SECONDARY: tuple[str, ...] = (
     "velib_silver_parse",
     "pandas_session_gaps",
     "velib_health",
-    "streaming_silver_availablenow",
     "hypertable_rollup",
     "lake_partition_pruned",
     "asof_join_latest_state",
@@ -146,7 +149,6 @@ SECONDARY: tuple[str, ...] = (
     "pandas_text_features",
     "velib_history_enrich",
     "velib_dedup_latest",
-    "velib_alerts",
     "velib_alert_bands",
     "velib_zombie_anti",
     "velib_enrich_join",
@@ -191,8 +193,6 @@ SECONDARY: tuple[str, ...] = (
     "tpch_q1_pricing",
     "corpus_quality_report",
     "dedup_containment",
-    "decontaminate_ngram",
-    "inverted_index",
     "ann_ivf_topk",
     "ann_banded_lsh_topk",
     "ann_recall_audit",
@@ -202,7 +202,6 @@ SECONDARY: tuple[str, ...] = (
     "embedding_outliers",
     "tfidf_top_terms",
     "bm25_rank",
-    "pack_sequences",
     "theta_sketch_set_algebra",
     "compaction_execute",
     "anti_parts_never_ordered",
@@ -277,7 +276,6 @@ SECONDARY: tuple[str, ...] = (
     "grouping_sets_orders",
     "hybrid_rank_fusion",
     "join_skew_audit",
-    "lake_retention_sweep",
     "lake_schema_evolution",
     "observed_write_metrics",
     "pmi_collocations",
@@ -291,7 +289,6 @@ SECONDARY: tuple[str, ...] = (
     "streaming_stateful_enumerate",
     "streaming_static_enrich",
     "velib_sparkline",
-    "streaming_txn_sink",
     "snapshot_optimize_transactional",
     "bfs_hop_levels",
     "hll_sliding_distinct",
@@ -332,6 +329,13 @@ SECONDARY: tuple[str, ...] = (
     "snapshot_diff_cdc",
     "sorted_neighborhood_pairs",
     "streaming_join_left_outer",
+    "tpch_q8_market_share",
+    "tpch_q9_nation_profit",
+    "tpch_q10_returned_items",
+    "tpch_q6_forecast_revenue",
+    "tpch_q4_priority_check",
+    "tpch_q5_local_supplier",
+    "tpch_q7_volume_shipping",
 )
 
 

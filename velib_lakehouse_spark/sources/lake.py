@@ -65,10 +65,10 @@ def retention_delete(path: str, partition_col: str, min_keep_value: str) -> int:
     taken from the directory layout itself; with Delta this becomes
     ``DELETE WHERE`` + ``VACUUM``.
 
-    Caveat: if the table was written by a streaming file sink, its
-    ``_spark_metadata`` log still references the removed files — read
-    the table through a partition glob + ``basePath`` (see pipeline.py)
-    or migrate to a log-backed table format.
+    Caveat: this edits a plain directory tree.  A log-backed table
+    (sources/snapshots.py, e.g. the medallion's silver) must retire
+    partitions with ``snapshots.retire_partitions`` instead, or its log
+    would keep listing the deleted files.
     """
     removed = 0
     for child in Path(path).iterdir():

@@ -1,28 +1,30 @@
-"""Versioned snapshot tables: atomic overwrite + time travel + vacuum.
+"""Log-structured tables: the one table protocol of the medallion.
 
-The reference's gold table is a raw-parquet ``mode("overwrite")`` — a
-reader racing the writer can see a half-deleted directory (reference
-src/assets/velib_alerte.py:70-72).  Delta/Iceberg fix that with a
-transaction log; their jars are not in this build, so this module
-implements the minimal version of the same idea on plain parquet:
+The reference lands silver through Spark's file sink and overwrites gold
+in place with raw parquet, so a reader racing the writer can see a
+half-deleted directory (reference src/assets/velib_alerte.py:70-72).
+Delta/Iceberg fix that with a transaction log; their jars are not in
+this build, so this module implements the minimal version of the same
+idea on plain parquet, and both medallion tables use it:
 
-* each write lands in a fresh ``v=N`` directory (never mutated);
-* a tiny ``_latest`` manifest is committed by atomic rename — readers
-  always resolve a fully-written version;
-* old versions remain for time travel until ``vacuum`` drops them
-  (reference maintenance.py's 72h retention, done at table granularity).
+* data is staged in directories under the table root, invisible until
+  a commit names them: ``v=N/`` for a whole-table snapshot (gold,
+  ``write_snapshot``), ``<txn>/part=<value>/`` for partitioned writes
+  (silver's micro-batches, ``commit_stream_batch``);
+* the table state is the fold of append-only commit files in ``_log/``,
+  each created by an atomic compare-and-swap, so readers
+  (``read_snapshot``, ``read_table``) resolve only fully-written files
+  at the head or at any retained version (time travel);
+* streaming commits carry ``(app_id, batch_id)`` and are idempotent,
+  which with Spark's replayable checkpoint gives exactly-once;
+* checkpoints bound the fold, ``vacuum_log`` retires the log prefix and
+  ``vacuum_data`` deletes what no retained version reaches;
+  ``retire_partitions`` chains them into partition retention.
 
-This is the K3 upgrade + VACUUM analogue; swap in real Delta by
-replacing these four functions, call sites unchanged.
-
-Delta adoption attempt (recorded for the record): this build has no
-``delta-spark`` / ``delta-core`` / Iceberg runtime jars anywhere on the
-classpath or pip cache, no network access, and installs are disallowed —
-so ``format("delta")`` cannot initialize (the DeltaCatalog class is
-absent).  The manifest path stays; on a cluster with the jars, set
-``spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension`` and
-``spark.sql.catalog.spark_catalog=org.apache.spark.sql.delta.catalog
-.DeltaCatalog`` and point these writers at ``format("delta")``.
+Real Delta is out of reach here (no delta-spark/Iceberg jars, no
+installs), so ``format("delta")`` cannot initialize; on a cluster with
+the jars, enable Delta's session extension and catalog and point these
+writers at ``format("delta")``.
 """
 
 from __future__ import annotations
@@ -40,89 +42,12 @@ from pyspark.sql import functions as F
 
 from velib_lakehouse_spark.session import apply_safe_confs
 
-_MANIFEST = "_latest"
-
-
-def _manifest_path(table_path: str) -> Path:
-    return Path(table_path) / _MANIFEST
-
-
-def current_version(table_path: str) -> int | None:
-    p = _manifest_path(table_path)
-    if not p.exists():
-        return None
-    return int(json.loads(p.read_text())["version"])
-
-
-def write_snapshot(df: DataFrame, table_path: str, n_files: int = 1) -> int:
-    """Commit a new table version atomically; returns the version number."""
-    Path(table_path).mkdir(parents=True, exist_ok=True)
-    prev = current_version(table_path)
-    version = 0 if prev is None else prev + 1
-    vdir = os.path.join(table_path, f"v={version}")
-    df.coalesce(n_files).write.mode("overwrite").parquet(vdir)
-
-    # commit: write manifest to a temp file, then atomic rename
-    fd, tmp = tempfile.mkstemp(dir=table_path, prefix="._manifest_")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"version": version, "committed_at": time.time()}, f)
-    os.replace(tmp, _manifest_path(table_path))
-    return version
-
-
-def read_snapshot(
-    spark: SparkSession, table_path: str, version: int | None = None
-) -> DataFrame:
-    """Read the latest committed version, or time-travel to ``version``."""
-    apply_safe_confs(spark)
-    v = current_version(table_path) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version at {table_path}")
-    vdir = os.path.join(table_path, f"v={v}")
-    if not os.path.isdir(vdir):
-        raise FileNotFoundError(f"version {v} not found (vacuumed?)")
-    return spark.read.parquet(vdir)
-
-
-def list_versions(table_path: str) -> list[int]:
-    root = Path(table_path)
-    if not root.exists():
-        return []
-    return sorted(
-        int(c.name.split("=", 1)[1])
-        for c in root.iterdir()
-        if c.is_dir() and c.name.startswith("v=")
-    )
-
-
-def vacuum(table_path: str, keep_last: int = 2) -> int:
-    """Drop all but the newest ``keep_last`` versions (never the current
-    one); returns the number of versions removed."""
-    versions = list_versions(table_path)
-    cur = current_version(table_path)
-    victims = [v for v in versions[:-keep_last] if v != cur] if keep_last else [
-        v for v in versions if v != cur
-    ]
-    for v in victims:
-        shutil.rmtree(os.path.join(table_path, f"v={v}"))
-    return len(victims)
-
-
 # ---- optimistic concurrency: log-structured multi-writer commits -----------
 #
-# The manifest protocol above serializes ONE writer's versions; two
-# concurrent writers racing `write_snapshot` still last-write-win the
-# manifest (the reference's non-atomic gold overwrite, src/assets/
-# velib_alerte.py:70-72, fails the same way).  This section adds the
-# missing half of the Delta/Iceberg story: a log-structured table whose
-# state is the fold of append-only COMMIT FILES, committed by
-# atomic-create CAS, with Delta's optimistic-concurrency taxonomy
-# (ConcurrentAppend / ConcurrentDeleteRead / ConcurrentDeleteDelete)
-# deciding which losing writers must re-read and retry.
-#
-# Protocol (Delta's, on plain files):
-#   1. a writer STAGES its data files under `_staged/` (invisible —
-#      table state is defined only by the log);
+# Protocol (Delta's, on plain files, with its conflict taxonomy
+# ConcurrentAppend / ConcurrentDeleteRead / ConcurrentDeleteDelete):
+#   1. a writer STAGES its data directories under the table root
+#      (invisible — table state is defined only by the log);
 #   2. it attempts to create `_log/{version:08d}.json` with
 #      O_CREAT|O_EXCL — the filesystem's atomic compare-and-swap: for
 #      each version exactly one writer's create succeeds;
@@ -137,7 +62,6 @@ def vacuum(table_path: str, keep_last: int = 2) -> int:
 # predicates; `None` means the whole table (blind overwrite).
 
 _LOG_DIR = "_log"
-_STAGE_DIR = "_staged"
 
 
 class CommitConflict(Exception):
@@ -278,35 +202,65 @@ def read_table(
     )
 
 
+def write_snapshot(df: DataFrame, table_path: str) -> int:
+    """Commit ``df`` as the whole table: one ``overwrite`` whose single
+    add is the fresh ``v=N`` directory, N being the committed version;
+    returns N.  One writer per table (the scheduler serialises ticks):
+    racing writers would stage into the same ``v=N``."""
+
+    def stage(read_version: int) -> tuple[list, list]:
+        rel = f"v={read_version + 1}"
+        df.coalesce(1).write.mode("overwrite").parquet(os.path.join(table_path, rel))
+        return [[rel, None]], []
+
+    return optimistic_commit(table_path, "overwrite", None, "snapshot", stage)["version"]
+
+
+def read_snapshot(
+    spark: SparkSession, table_path: str, version: int | None = None
+) -> DataFrame:
+    """Read the head, or time-travel to ``version``; raises
+    FileNotFoundError for an empty log or a vacuumed version."""
+    apply_safe_confs(spark)
+    if table_head(table_path) < 0:
+        raise FileNotFoundError(f"no committed version at {table_path}")
+    paths = [os.path.join(table_path, rel) for rel, _ in live_files(table_path, version)]
+    if not all(os.path.exists(p) for p in paths):
+        raise FileNotFoundError(f"version {version} of {table_path} was vacuumed")
+    return spark.read.parquet(*paths)
+
+
 def stage_partition_files(
     df: DataFrame, table_path: str, txn: str, part_col: str
 ) -> list[list]:
-    """Stage ``df`` as one parquet directory per ``part_col`` value
-    under ``_staged/`` (invisible until committed); returns the
-    ``[relative_path, partition_value]`` add-list.
+    """Stage ``df`` as one parquet directory per ``part_col`` value,
+    ``<txn>/part=<value>/`` under the table root (invisible until
+    committed); returns the ``[relative_path, partition_value]``
+    add-list.
 
     One partitioned write job — no per-partition driver loop; the
-    partition column is duplicated into the directory key so the data
-    files keep it as a regular column (snapshot reads take a bare
-    directory list, no hive discovery).  Writer parallelism follows the
+    partition column is duplicated into the ``part`` directory key so
+    the data files keep it as a regular column (snapshot reads take a
+    bare directory list, no hive discovery), which is why ``df`` may not
+    carry a column of that name.  Writer parallelism follows the
     upstream partitioning on purpose: adds are DIRECTORIES, so the file
     count per partition is free to vary — a repartition on the
     partition value would cap the write at |partition values| tasks,
     the 100 TB straggler shape."""
-    rel = os.path.join(_STAGE_DIR, txn)
-    out = os.path.join(table_path, rel)
+    if "part" in df.columns:
+        raise ValueError("stage_partition_files reserves the column name 'part'")
+    out = os.path.join(table_path, txn)
     (
-        df.withColumn("__part", F.col(part_col))
+        df.withColumn("part", F.col(part_col))
         .write.mode("overwrite")
-        .partitionBy("__part")
+        .partitionBy("part")
         .parquet(out)
     )
-    adds = []
-    for child in sorted(Path(out).glob("__part=*")):
-        if child.is_dir():
-            adds.append([os.path.join(rel, child.name),
-                         child.name.split("=", 1)[1]])
-    return adds
+    return [
+        [os.path.join(txn, child.name), child.name.split("=", 1)[1]]
+        for child in sorted(Path(out).glob("part=*"))
+        if child.is_dir()
+    ]
 
 
 def _conflicts_with(action: str, domain: set[str] | None, other: dict) -> str | None:
@@ -640,16 +594,19 @@ def shallow_clone(
 
 
 def vacuum_data(table_path: str, keep_last: int = 1) -> dict:
-    """Physically delete staged data directories unreachable from the
-    newest ``keep_last`` versions — Delta's VACUUM, the step that
-    actually reclaims bytes after ``vacuum_log`` has reclaimed
-    metadata.  Returns ``{"removed": n, "kept": m, "horizon": v}``.
+    """Physically delete data directories unreachable from the newest
+    ``keep_last`` versions — Delta's VACUUM, the step that actually
+    reclaims bytes after ``vacuum_log`` has reclaimed metadata.
+    Returns ``{"removed": n, "kept": m, "horizon": v}`` (directories
+    deleted, top-level data directories kept).
 
     Reachability is the union of ``live_files`` over the retained
-    version window (bounded below by what the log can still fold —
-    checkpointed-away versions are already unreadable).  Everything
-    else under ``_staged/`` goes, including files only referenced by
-    aborted or superseded commits.
+    version window (checkpointed-away versions are already unreadable).
+    A top-level directory (``v=N`` or ``<txn>``) no reachable add lies
+    in goes whole; inside a kept ``<txn>``, so does every partition
+    directory no reachable add names — a batch that wrote many dates
+    frees the retired ones.  ``_``/``.``-prefixed entries (the log)
+    are never touched.
 
     Two Delta-documented hazards carry over on purpose and are pinned
     in tests rather than papered over:
@@ -664,22 +621,47 @@ def vacuum_data(table_path: str, keep_last: int = 1) -> dict:
     if head < 0:
         raise FileNotFoundError(f"no commits at {table_path}")
     horizon = max(0, head - keep_last + 1)
-    keep: set[str] = set()
+    keep: dict[str, set[str]] = {}  # top-level dir -> live partition dirs
     for v in range(horizon, head + 1):
         try:
             for rel, _part in live_files(table_path, v):
                 if not os.path.isabs(rel):
-                    # keep whole staged txn dirs: adds are directories
-                    keep.add(Path(rel).parts[1])
+                    top, *sub = Path(rel).parts
+                    keep.setdefault(top, set()).update(sub)
         except FileNotFoundError:
             continue  # below the log-retention horizon: nothing to keep
-    stage_root = Path(table_path) / _STAGE_DIR
     removed = kept = 0
-    if stage_root.is_dir():
-        for child in sorted(stage_root.iterdir()):
-            if child.name in keep:
-                kept += 1
-            else:
-                shutil.rmtree(child)
+    for child in sorted(Path(table_path).iterdir()):
+        if not child.is_dir() or child.name.startswith(("_", ".")):
+            continue
+        if child.name not in keep:
+            shutil.rmtree(child)
+            removed += 1
+            continue
+        kept += 1
+        live_parts = keep[child.name]
+        if not live_parts:
+            continue  # the add is the directory itself (``v=N``)
+        for part in sorted(child.iterdir()):
+            if part.is_dir() and part.name not in live_parts:
+                shutil.rmtree(part)
                 removed += 1
     return {"removed": removed, "kept": kept, "horizon": horizon}
+
+
+def retire_partitions(table_path: str, min_keep_value: str) -> int:
+    """Partition retention as a logged delete of every partition value
+    below ``min_keep_value``, then a log checkpoint + ``vacuum_log`` and
+    ``vacuum_data`` (time travel to earlier versions ends here).
+    Returns the number of partition values retired."""
+    retired = {part for _, part in live_files(table_path) if part < min_keep_value}
+    if not retired:
+        return 0
+    optimistic_commit(
+        table_path, "delete", retired, "retention",
+        lambda rv: ([], [f for f in live_files(table_path, rv) if f[1] in retired]),
+    )
+    write_log_checkpoint(table_path)
+    vacuum_log(table_path)
+    vacuum_data(table_path)
+    return len(retired)

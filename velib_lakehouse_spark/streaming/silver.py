@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from velib_lakehouse_spark.catalog import load_table
 from velib_lakehouse_spark.session import apply_safe_confs, tuned_shuffle
+from velib_lakehouse_spark.sources.snapshots import commit_stream_batch, read_table
 
 WINDOW_SECONDS = 300
 WATERMARK_SECONDS = 600
@@ -40,9 +41,9 @@ WATERMARK_SECONDS = 600
 # format("memory") buffers every emitted row in DRIVER memory.  That is
 # fine for the judged harness (sf<=0.1 -> <=1e5 rows) and for tests,
 # and NEVER for production volume — the production path is
-# run_silver_stream's partitioned parquet sink.  The cap turns a silent
-# driver OOM into a loud error if a future registry query routes real
-# volume through a memory sink.
+# run_silver_stream's partitioned log-table commits.  The cap turns a
+# silent driver OOM into a loud error if a future registry query routes
+# real volume through a memory sink.
 MEMORY_SINK_MAX_ROWS = 10_000_000
 
 # Scratch dirs for the parquet drains below, removed at interpreter
@@ -256,10 +257,23 @@ def silver_transform(stream: DataFrame) -> DataFrame:
     )
 
 
+SILVER_SCHEMA = (
+    "event_id bigint, station_code bigint, k bigint, event_type string,"
+    " bikes_available double, last_reported timestamp, date string"
+)
+
+
 def run_silver_stream(
     spark: SparkSession, sf_dir: str, out_dir: str, checkpoint_dir: str
 ) -> dict:
-    """Drain the stream to date-partitioned parquet (AvailableNow + checkpoint).
+    """Drain the stream into the date-partitioned silver log table
+    (AvailableNow + checkpoint); read it back with
+    ``read_table(spark, out_dir, SILVER_SCHEMA)``.
+
+    Each micro-batch is one idempotent ``commit_stream_batch``
+    (sources/snapshots.py) from ``foreachBatch``: a batch Spark replays
+    after a crash between the log commit and its own checkpoint commit
+    is dropped by the log, so every event lands exactly once.
 
     Returns run metadata from the query's progress (rows processed, batch
     count — the observability surface the reference logs per
@@ -270,12 +284,13 @@ def run_silver_stream(
     # compaction the reference does with coalesce(1),
     # reference src/assets/velib_alerte.py:72, done stream-side).
     silver = silver_transform(_event_stream(spark, sf_dir)).repartition("date")
+
+    def commit(batch: DataFrame, batch_id: int) -> None:
+        commit_stream_batch(out_dir, "silver", batch_id, batch, "date")
+
     query = (
-        silver.writeStream.format("parquet")
-        .option("path", out_dir)
+        silver.writeStream.foreachBatch(commit)
         .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("date")
-        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
@@ -290,21 +305,19 @@ def run_silver_stream(
 
 def streaming_silver_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: run the streaming silver job end-to-end, read the
-    partitioned sink back, and surface the silver schema."""
+    silver log table back, and surface the silver schema."""
     out_dir = tempfile.mkdtemp(prefix="silver_out_")
     ckpt = tempfile.mkdtemp(prefix="silver_ckpt_")
     run_silver_stream(spark, sf_dir, out_dir, ckpt)
-    back = spark.read.parquet(out_dir)
+    back = read_table(spark, out_dir, SILVER_SCHEMA)
     return back.select(
         "event_id",
         "station_code",
         "k",
         "event_type",
         "bikes_available",
-        F.unix_millis(F.col("last_reported").cast("timestamp")).alias(
-            "last_reported_ms"
-        ),
-        F.col("date").cast("string").alias("date"),
+        F.unix_millis("last_reported").alias("last_reported_ms"),
+        "date",
     )
 
 
@@ -1215,10 +1228,9 @@ def streaming_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming micro-batches committed through the snapshot
     TRANSACTION LOG with (appId, batchId) idempotence — Delta's ``txn``
     action welded onto the streaming sink, so stream and batch writers
-    finally share one table safely (the weakest remaining protocol gap
-    the r9 VERDICT named: ``run_silver_stream`` lands raw checkpointed
-    parquet a concurrent compactor/deleter cannot coordinate with,
-    reference src/assets/silver.py:55-70 has the same split-brain).
+    share one table safely (``run_silver_stream`` commits the same
+    way; the reference's file sink, src/assets/silver.py:55-70, cannot
+    coordinate with a concurrent compactor/deleter).
 
     The audited interleave, driven inline (the
     ``snapshot_concurrent_commit`` style):
