@@ -1,0 +1,103 @@
+"""Cost of the serving payloads: Spark jobs, ``events`` loads, wall and CPU.
+
+    python3 tools/serving_cost.py --ticks 24 --rounds 10
+
+Builds the ``api_reads`` lake of ``perfbench`` (seed 1, 1,500 stations,
+``--ticks`` 5-minute tick files) in a temporary directory and calls both
+route functions of ``serving.ROUTES`` once per round:
+
+* cold: the serving cache is emptied before each round, so every round
+  computes both payloads from the lake;
+* hit: the cache is left alone, so only the first round computes.
+
+For each mode it prints one JSON line with the median of the last half of
+the rounds (the first ones include the JIT warm-up): Spark jobs, calls to
+``load_table("events")``, wall seconds, and CPU seconds of this process
+and its descendants (the JVM and its Python workers).
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import shutil
+import statistics
+import sys
+import tempfile
+import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [os.path.join(ROOT, "perfbench"), ROOT]
+
+import gen  # noqa: E402
+import run as bench  # noqa: E402
+
+from velib_lakehouse_spark import serving  # noqa: E402
+from velib_lakehouse_spark.operators import velib  # noqa: E402
+
+
+def _count_event_loads(loads: list[str]) -> None:
+    """Wrap the ``load_table`` the serving queries call, recording names."""
+    orig = velib.load_table
+
+    def load_table(spark, sf_dir, name):
+        loads.append(name)
+        return orig(spark, sf_dir, name)
+
+    velib.load_table = load_table
+
+
+def measure(spark, lake: str, rounds: int, cold: bool, loads: list[str]) -> dict:
+    sc = spark.sparkContext
+    samples = []
+    for i in range(rounds):
+        if cold:
+            serving._CACHE.clear()
+        group = f"serving-cost-{'cold' if cold else 'hit'}-{i}"
+        sc.setJobGroup(group, group)
+        del loads[:]
+        cpu, wall = bench.process_cpu_s(), time.perf_counter()
+        for fn in serving.ROUTES.values():
+            fn(spark, lake)
+        samples.append(
+            {
+                "wall_s": time.perf_counter() - wall,
+                "cpu_s": bench.process_cpu_s() - cpu,
+                "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+                "events_loads": loads.count("events"),
+            }
+        )
+    tail = samples[rounds // 2 :]
+    return {
+        "mode": "cold" if cold else "hit",
+        "rounds": rounds,
+        **{k: statistics.median(s[k] for s in tail) for k in samples[0]},
+    }
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--ticks", type=int, default=24)
+    ap.add_argument("--rounds", type=int, default=10)
+    args = ap.parse_args()
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    work = tempfile.mkdtemp(prefix="serving-cost-")
+    try:
+        lake = os.path.join(work, "bronze")
+        gen.make_lake(gen.StationFeed(1, 1500, 50), lake, args.ticks)
+        loads: list[str] = []
+        _count_event_loads(loads)
+        spark = bench.start_session()
+        try:
+            for cold in (True, False):
+                print(json.dumps(measure(spark, lake, args.rounds, cold, loads)))
+        finally:
+            bench.stop_session(spark)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

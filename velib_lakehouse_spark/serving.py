@@ -1,28 +1,92 @@
-"""Serving layer: the reference's API endpoints as Spark-backed functions.
+"""Serving layer: the reference's API endpoints, answered once per lake version.
 
 The reference serves two analytical endpoints from a per-request DuckDB
 over the lake (reference src/api.py:37-84 ``/alerts/critical``,
-src/api.py:87-142 ``/health/pipeline``).  Here the same payloads are
-produced by the Spark engine itself — each endpoint is a function
-returning the JSON-able dict the FastAPI handler would emit, and
-``build_app`` wires them onto FastAPI when it is installed (it is not in
-this build, so the wiring is import-gated; the payload functions are
-fully tested without it).
+src/api.py:87-142 ``/health/pipeline``).  Here both payloads come from the
+registry's serving queries (``sparkline``, ``alert_bands`` and ``health``
+in ``operators/velib.py``) and are kept in a module-level cache, one entry
+per lake directory, keyed by the listing of the ``events`` and
+``customer`` files.  A request lists those files (one ``stat`` per file,
+so a hit's cost grows with the number of landed files): if the listing
+matches the cached one, it returns the stored payload and runs no Spark
+job; otherwise it recomputes both payloads under a lock.
 
-The driver-side Python post-aggregation the reference does (count-if
-bands, src/api.py:73-74) is folded into the engine queries — the handler
-only serializes.
+Freshness contract: an answer reflects at least the files listed at
+request time.  This rests on one assumption, the same one Spark's file
+index makes: landed files are immutable, and new data arrives under new
+file names (the Kafka/S3 append the reference uses, and what a tick
+landing does: write, then rename into the table directory).  A file that
+lands while Spark reads the lake may be in the answer already; the next
+request lists it and recomputes.  Files Spark's reader skips (names
+starting with ``.`` or ``_``) are not part of the listing.
+
+Each endpoint is a function returning the JSON-able dict the FastAPI
+handler would emit; ``serve`` puts them on the stdlib HTTP server, and
+``build_app`` on FastAPI when it is installed (it is not in this build,
+so that wiring is import-gated).  The payload dicts are shared between
+requests: callers must not mutate them.  The driver-side Python
+post-aggregation the reference does (count-if bands, src/api.py:73-74)
+is folded into the engine queries — the handler only serializes.
 """
 
 from __future__ import annotations
+
+import hashlib
+import logging
+import os
+import threading
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
 from velib_lakehouse_spark.operators.velib import alert_bands, health, sparkline
 
+ALERTS = "/alerts/critical"
+HEALTH = "/health/pipeline"
 
-def critical_alerts_payload(spark: SparkSession, sf_dir: str) -> dict:
-    """``/alerts/critical``: per-station sparklines + severity bands."""
+
+class _Version(NamedTuple):
+    key: tuple  # the listing the payloads were computed from
+    etag: str
+    payloads: dict  # route -> payload dict
+
+
+_log = logging.getLogger(__name__)
+_CACHE: dict[str, _Version] = {}  # abspath(sf_dir) -> the last computed version
+_LOCK = threading.Lock()
+_served = threading.local()  # the ETag of the version this thread last served
+
+
+def _listing(path: str) -> tuple:
+    """``(name, st_size, st_mtime_ns)`` of each file Spark reads at ``path``:
+    a single parquet file, or a directory of part files."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        for name in names:
+            if name.startswith((".", "_")):
+                continue
+            full = os.path.join(root, name)
+            try:
+                st = os.stat(full)
+            except FileNotFoundError:  # renamed away since the walk listed it
+                continue
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _lake_key(root: str) -> tuple:
+    return tuple(
+        (table, _listing(os.path.join(root, f"{table}.parquet")))
+        for table in ("events", "customer")
+    )
+
+
+def _compute(spark: SparkSession, sf_dir: str) -> dict:
+    """Both route payloads, from the registry's serving queries."""
     stations = [
         {
             "station_code": r.station_code,
@@ -32,30 +96,61 @@ def critical_alerts_payload(spark: SparkSession, sf_dir: str) -> dict:
         for r in sparkline(spark, sf_dir).orderBy("current_bikes").collect()
     ]
     bands = alert_bands(spark, sf_dir).collect()[0]
+    row = health(spark, sf_dir).collect()[0]
     return {
-        "stations": stations,
-        "critical_count": bands.critical_count,
-        "warning_count": bands.warning_count,
-        "total_stations": bands.total_stations,
+        ALERTS: {
+            "stations": stations,
+            "critical_count": bands.critical_count,
+            "warning_count": bands.warning_count,
+            "total_stations": bands.total_stations,
+        },
+        HEALTH: {
+            "total_expected": row.total_expected,
+            "active_stations": row.active_stations,
+            "zombie_stations": row.zombie_stations,
+            "latest_sync_ms": row.latest_sync_ms,
+            "total_value": row.total_value,
+            "status": "degraded" if row.zombie_stations > 0 else "healthy",
+        },
     }
+
+
+def _payloads(spark: SparkSession, sf_dir: str) -> dict:
+    """Both route payloads for the lake version at ``sf_dir`` right now.
+
+    A hit on the cached listing returns the stored payloads without
+    touching Spark.  A miss lists the files again under the lock, so a
+    request that waited on another thread's computation reuses it, then
+    computes once and stores the result under that listing; a
+    computation that raises leaves no entry.
+    """
+    root = os.path.abspath(sf_dir)
+    version = _CACHE.get(root)
+    if version is None or version.key != _lake_key(root):
+        with _LOCK:
+            key = _lake_key(root)
+            version = _CACHE.get(root)
+            if version is None or version.key != key:
+                _CACHE.pop(root, None)
+                etag = '"%s"' % hashlib.sha1(repr(key).encode()).hexdigest()[:20]
+                version = _CACHE[root] = _Version(key, etag, _compute(spark, root))
+    _served.etag = version.etag
+    return version.payloads
+
+
+def critical_alerts_payload(spark: SparkSession, sf_dir: str) -> dict:
+    """``/alerts/critical``: per-station sparklines + severity bands."""
+    return _payloads(spark, sf_dir)[ALERTS]
 
 
 def pipeline_health_payload(spark: SparkSession, sf_dir: str) -> dict:
     """``/health/pipeline``: expected-vs-observed reconciliation audit."""
-    row = health(spark, sf_dir).collect()[0]
-    return {
-        "total_expected": row.total_expected,
-        "active_stations": row.active_stations,
-        "zombie_stations": row.zombie_stations,
-        "latest_sync_ms": row.latest_sync_ms,
-        "total_value": row.total_value,
-        "status": "degraded" if row.zombie_stations > 0 else "healthy",
-    }
+    return _payloads(spark, sf_dir)[HEALTH]
 
 
 ROUTES = {
-    "/alerts/critical": critical_alerts_payload,
-    "/health/pipeline": pipeline_health_payload,
+    ALERTS: critical_alerts_payload,
+    HEALTH: pipeline_health_payload,
 }
 
 
@@ -70,13 +165,14 @@ def serve(spark: SparkSession, sf_dir: str, host: str = "127.0.0.1", port: int =
     ``shutdown()``.  ``port=0`` binds an ephemeral port, exposed as
     ``server.server_address[1]``.
 
-    The Spark driver stays the single query engine — handlers run the
-    same collect-at-the-edge payload functions the tests pin, which is
-    also the reference's shape (a per-request engine query feeding a
-    serializer, src/api.py:37-142).
+    Each request calls its ``ROUTES`` function, so it is answered from
+    the cached payloads of the lake version listed at request time; only
+    the first request after a file lands runs the Spark queries.  A 200
+    response carries an ``ETag`` derived from that listing: it changes
+    when a file lands and stays the same otherwise.  An engine failure is
+    a 500 with the error text in a JSON body.
     """
     import json
-    import threading
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
     class Handler(BaseHTTPRequestHandler):
@@ -85,16 +181,21 @@ def serve(spark: SparkSession, sf_dir: str, host: str = "127.0.0.1", port: int =
             if fn is None:
                 self.send_error(404, "unknown route")
                 return
+            _served.etag = None
             try:
-                body = json.dumps(fn(spark, sf_dir)).encode()
-            except Exception as exc:  # pragma: no cover - engine failure
-                self.send_error(500, str(exc)[:200])
-                return
-            self.send_response(200)
+                status, body = 200, fn(spark, sf_dir)
+            except Exception as exc:
+                _log.exception("GET %s failed", self.path)
+                # the status line holds one line of text: the error goes in the body
+                status, body = 500, {"error": type(exc).__name__, "detail": str(exc)}
+            data = json.dumps(body).encode()
+            self.send_response(status)
             self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
+            self.send_header("Content-Length", str(len(data)))
+            if status == 200 and _served.etag is not None:
+                self.send_header("ETag", _served.etag)
             self.end_headers()
-            self.wfile.write(body)
+            self.wfile.write(data)
 
         def log_message(self, *args):  # quiet test output
             pass
