@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).
 
 Implementation lives in ``velib_lakehouse_spark``; this module is a thin
 adapter over its registry.
@@ -37,5 +37,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query; rows-only queries are omitted."""
-    return {k: v for k, v in registry.ORACLE.items() if v is not None}
+    """DuckDB-equivalent SQL per query."""
+    return dict(registry.ORACLE)

@@ -28,7 +28,7 @@ SPARK_TO_ARROW = {
     "date": "date32[day]",
 }
 
-CASES = [(n, s) for n, s in registry.ORACLE.items() if s is not None]
+CASES = list(registry.ORACLE.items())
 
 
 @pytest.mark.parametrize("name,sql", CASES, ids=[c[0] for c in CASES])

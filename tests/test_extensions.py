@@ -46,8 +46,7 @@ def test_minhash_candidates_superset_of_high_jaccard(spark):
 
 def test_ivf_recall_against_exact(spark):
     """IVF with nprobe=2/8 cells must recover a reasonable share of the
-    exact top-5 (structure check + recall floor, since the operator is
-    rows-only)."""
+    exact top-5 (structure check + recall floor)."""
     exact = {
         (r.q_vec_id, r.vec_id)
         for r in registry.QUERIES["ann_cosine_topk"](spark, SF_DIR).collect()

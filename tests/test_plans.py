@@ -288,8 +288,9 @@ def test_file_skipping_scan_carries_partition_filter(spark):
 # task — acceptable only when the input frame is bounded by
 # construction (a bucket/vocabulary/path-catalog aggregate), never over
 # an entity-cardinality frame (customers, documents, events).  Every
-# exemption here names the bounded frame; anything else in the judged
-# window must have zero partition-less Window nodes.
+# exemption here names the bounded frame and caps its node count;
+# every other registered query must have zero partition-less Window
+# nodes (checked per query in tests/test_oracle_parity.py).
 BOUNDED_UNPARTITIONED_WINDOWS = {
     # offsets running-sums over RFM_RANK_BUCKETS(=32)-row bucket-count
     # frames: 2 per _two_phase_global_tile call x 3 orderings
@@ -356,22 +357,6 @@ def _unpartitioned_window_count(df) -> int:
         for i in range(kids.size()):
             stack.append(kids.apply(i))
     return n
-
-
-def test_no_unpartitioned_window_over_entity_frames(spark):
-    """No judged-window query may run a partition-less Window over an
-    unbounded (entity-cardinality) frame; bounded-frame exemptions are
-    pinned to an exact node budget so a regression (a new global ntile,
-    a window moved below the aggregate) fails loudly."""
-    window = list(registry.QUERIES)[: registry.DRIVER_WINDOW]
-    audited = set(window) | set(BOUNDED_UNPARTITIONED_WINDOWS)
-    bad = []
-    for name in sorted(audited):
-        df = registry.QUERIES[name](spark, SF_DIR)
-        n = _unpartitioned_window_count(df)
-        if n > BOUNDED_UNPARTITIONED_WINDOWS.get(name, 0):
-            bad.append(f"{name}: {n} unpartitioned Window nodes")
-    assert not bad, "; ".join(bad)
 
 
 def test_priority_sample_uses_take_ordered(spark):

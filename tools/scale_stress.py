@@ -178,7 +178,7 @@ def time_query(fn, spark, sf_dir: str, runs: int = 2, count_rows: bool = False) 
         df = fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         samples.append(round(time.perf_counter() - t0, 3))
-        # Isolated samples (r4 VERDICT #3, same change as bench.py):
+        # Isolated samples (r4 VERDICT #3):
         # without this, persisting operators serve run 2..n from run 1's
         # cache and the recorded min is unreproducible in isolation.
         spark.catalog.clearCache()

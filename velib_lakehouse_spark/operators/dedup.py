@@ -1752,14 +1752,12 @@ def _estimate_audit_groups(groups: DataFrame) -> DataFrame:
     four: group-by text, the two band self-join sides, group-by pair.
     (Re-derived r9 per the r8 ADVICE docstring/artifact mismatch: the
     executed plan carries exactly those 4 hash Exchanges at sf0.001 and
-    sf0.1 in isolation.  The r8 PLANS.md row's fifth Exchange was
-    DIAGNOSED, not just re-counted: a persist() registered by an
-    earlier HEADLINE query — the sibling weighted-MinHash op caches the
-    identical group-by-text frame — is substituted by the CacheManager
-    into this query's plan when both run in one session, shifting the
-    Exchange accounting.  plans/report.py now clearCache()s between
-    queries, so the audited row measures the query in isolation and
-    matches this docstring by construction.)
+    sf0.1 in isolation.  A fifth Exchange shows up only when an
+    earlier query in the same session — the sibling weighted-MinHash
+    op caches the identical group-by-text frame — has persist()ed that
+    frame: the CacheManager substitutes it into this query's plan,
+    shifting the Exchange accounting.  Call clearCache() between
+    queries to audit this one in isolation.)
 
     The ``rep_a <= rep_b`` join keeps the reflexive band matches: a
     group joined to itself matches on ALL bands with identical

@@ -570,7 +570,7 @@ def _phash_bits(spark: SparkSession, d: DataFrame) -> DataFrame:
     # honors a user partition count, so this doesn't coalesce back).
     # At scale the input already has many splits and this shuffles only
     # the filtered (doc_id, text) rows once. Interleaved A/B at sf0.1:
-    # 7.4 -> 3.9 s min-of-3, identical bits (tools/exp_phash_widen.py).
+    # 7.4 -> 3.9 s min-of-3, identical bits.
     px = (
         d.select("doc_id", "text")
         .filter(F.length("text") >= n_cells)

@@ -1678,8 +1678,7 @@ def ann_graph_beam_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (vec_id breaks cos ties) and a driver-side set dedupes the
         # copies — one exchange + one aggregate saved per hop for a few
         # duplicated map-side dot products (interleaved A/B over the
-        # hop loop: 7.13 -> 5.19 s min-of-3, identical beam asserted;
-        # tools/exp_beam_hops.py)
+        # hop loop: 7.13 -> 5.19 s min-of-3, identical beam asserted)
         beam_rows = sorted(
             {
                 (r["q_vec_id"], r["vec_id"], r["cos"])

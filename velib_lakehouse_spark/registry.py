@@ -1,11 +1,11 @@
 """Central query registry: aggregates every operator module's inventory.
 
 ``QUERIES``: name -> callable(spark, sf_dir) -> DataFrame
-``ORACLE``:  name -> DuckDB SQL mirror (or None for rows-only checks)
+``ORACLE``:  name -> DuckDB SQL mirror of the same query
 
-``__spark_entry__.py`` and ``bench.py`` both read from here, so a query
-registered once is simultaneously correctness-checked (driver oracle),
-benchmarked, and unit-testable.
+``__spark_entry__.py`` and ``tests/test_oracle_parity.py`` read from
+here, so a query registered once is checked against its DuckDB oracle and
+unit-testable.  Queries register in module order.
 """
 
 from __future__ import annotations
@@ -14,329 +14,32 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from velib_lakehouse_spark.operators import (
+    chunking,
+    curation,
+    dedup,
+    graph,
+    multimodal,
+    pandas_ops,
+    relational,
+    relational2,
+    retrieval,
+    rollups,
+    similarity,
+    sketches,
+    text,
+    tpch,
+    training,
+    udtf_ops,
+    velib,
+)
+from velib_lakehouse_spark.sources import lake, pyds, readers
+from velib_lakehouse_spark.streaming import silver
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
-ORACLE: dict[str, str | None] = {}
-
-# The driver's correctness harness checks the FIRST `DRIVER_WINDOW` registered
-# queries (in registration order) against their DuckDB oracles.  Registration
-# order is therefore a judged budget: this list pins one-or-more queries from
-# EVERY operator family inside the window — velib/reference semantics, each
-# relational join/window/agg family, every dedup flavor, similarity search,
-# text analysis, curation, pandas/Arrow boundary, multimodal plumbing,
-# rollups/SCD2, streaming, and lake layout.  Redundant relational showcases
-# and rows-only queries (no oracle → the driver records them as errors if
-# they land in the window) are registered after the window on purpose.
-# tests/test_registry_window.py guards this invariant.
-DRIVER_WINDOW = 50
-
-# ROUND-11 ROTATION (VERDICT r10 next-round #6 + ADVICE #1). Standing
-# rules, guarded by tests/test_registry_window.py:
-# * "changed => re-window" (test_changed_queries_are_in_window via
-#   tools/query_fingerprints.json — since r11 the fingerprint is
-#   TRANSITIVE over package helpers and constants, so helper-only
-#   rewrites can no longer coast on stale driver evidence).
-# * "oldest-first" (test_window_rotates_oldest_first).
-# This round's window, in order:
-# * 20 queries whose code changed in the r11 optimization round
-#   (directly or through shared helpers — the in-row WMH/ICWS
-#   signatures, the one-pass capped symmetric expansion, the in-row
-#   band-match tail consumers from r10 the ADVICE flagged as coasting
-#   (dedup_minhash_lsh, pairs_topk_capped, the _propagate_labels and
-#   _bpe_train consumers), the iterative-loop checkpoint-release
-#   change (kcore, connected components, trainers), and the late-r11
-#   key-partitioned band-signature persist + cogroup Arrow pruning
-#   (pulls dedup_incremental_minhash, editdist_verified_pairs and
-#   pandas_cogroup_paired_spend back in — transitive-fingerprint
-#   drift; they displace the 3 youngest rows of the stale tail), and
-#   the no-distinct dense_rank beam hop (ann_graph_beam_audit in,
-#   pagerank_user_graph out — graph keeps kcore/components/LPA rows),
-#   and the DCT narrow-scan widening (multimodal_image_phash_neardup
-#   in, zscore_outlier_days out — events keeps 3 r10-green rows).
-# * The 21-row staged SECONDARY head (r10 VERDICT #6: the stalest
-#   evidence — streaming_python_datasource_feed, table_checksum_audit,
-#   the tpch_q2..q22 block, winnow_fingerprints; last green r5).
-# * 9 next-stalest rows (r5/r6-era greens: seasonal backtest,
-#   link prediction, psi drift, gini, sliding counts, trend slope,
-#   tpch_q10/q6, image patches).
-# Displaced r10-green rows move to the TAIL of SECONDARY (freshest
-# evidence last); the SECONDARY head is the r12 rotation queue.
-# Later: one query each for the velib, decontamination, retrieval and
-# training families (no green row in the last two artifacts) and the
-# three queries the one-table-protocol refactor drifted took seven
-# tpch slots (q4-q10, r11-green and unchanged).
-PRIORITY: tuple[str, ...] = (
-    "dedup_icws_weighted_minhash",
-    "dedup_icws_capped",
-    "dedup_weighted_minhash",
-    "dedup_weighted_minhash_capped",
-    "dedup_minhash_lsh",
-    "pairs_topk_capped",
-    "dedup_incremental_minhash",
-    "editdist_verified_pairs",
-    "pandas_cogroup_paired_spend",
-    "ann_graph_beam_audit",
-    "multimodal_image_phash_neardup",
-    "dedup_clusters",
-    "dedup_canonicalize",
-    "dedup_clusters_recursive",
-    "bpe_train_merges",
-    "bpe_encode_tokens",
-    "bpe_train_merges_batched",
-    "wordpiece_train_merges",
-    "kcore_peeling",
-    "connected_components_star",
-    "streaming_python_datasource_feed",
-    "table_checksum_audit",
-    "tpch_q11_important_parts",
-    "tpch_q12_lateness_priority",
-    "tpch_q13_order_distribution",
-    "tpch_q14_promo_share",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_variety",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q18_large_orders",
-    "tpch_q19_bracket_revenue",
-    "tpch_q20_heavy_shippers",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q22_idle_customers",
-    "tpch_q2_min_cost_supplier",
-    "winnow_fingerprints",
-    "seasonal_naive_backtest",
-    "link_prediction_common_neighbors",
-    "psi_drift_audit",
-    "source_concentration_gini",
-    "streaming_sliding_counts",
-    "trend_slope_per_user",
-    "multimodal_image_patches",
-    "velib_alerts",
-    "streaming_silver_availablenow",
-    "streaming_txn_sink",
-    "lake_retention_sweep",
-    "decontaminate_ngram",
-    "inverted_index",
-    "pack_sequences",
-)
-
-# Registered immediately AFTER the window, highest value first: if a
-# future driver checks more than DRIVER_WINDOW queries, these are the
-# ones it should reach next.  Head = the r12 rotation queue (stalest
-# remaining evidence first); displaced r10-green rows sit at the tail
-# (freshest evidence last).
-SECONDARY: tuple[str, ...] = (
-    "clustering_coefficient",
-    "curation_dag_lineage",
-    "streaming_backfill_merge",
-    "pagerank_user_graph",
-    "zscore_outlier_days",
-    "approx_percentile_parity_audit",
-    "mad_robust_outlier_days",
-    "recency_decay_engagement",
-    "velib_silver_parse",
-    "pandas_session_gaps",
-    "velib_health",
-    "hypertable_rollup",
-    "lake_partition_pruned",
-    "asof_join_latest_state",
-    "ann_lsh_topk",
-    "dedup_exact",
-    "json_file_scan",
-    "lake_gold_snapshot",
-    "join_shuffle_revenue",
-    "range_join_periods",
-    "scd2_merge",
-    "pandas_text_features",
-    "velib_history_enrich",
-    "velib_dedup_latest",
-    "velib_alert_bands",
-    "velib_zombie_anti",
-    "velib_enrich_join",
-    "ann_cosine_topk",
-    "simhash_sketch",
-    "dedup_ngram_jaccard",
-    "sessionize_events",
-    "join_broadcast_chain",
-    "topn_orders_per_customer",
-    "quantile_sketch_merge_rollup",
-    "priority_sample_subset_sum",
-    "srp_hamming_topk_audit",
-    "backfill_dedup_reconcile",
-    "heavy_hitters_mg_audit",
-    "merge_on_read_deletes",
-    "multitouch_attribution",
-    "weighted_quantiles_exact",
-    "dimsum_cosine_estimate",
-    "partition_join_size_audit",
-    "ivm_join_view_delta",
-    "cms_join_size_audit",
-    "hll_set_overlap_audit",
-    "text_stats",
-    "lang_id_heuristic",
-    "token_count",
-    "collect_ordered_quantities",
-    "doc_fingerprint",
-    "deterministic_sample",
-    "text_clean_redact",
-    "quality_topk_mix",
-    "multimodal_decode_meta",
-    "kafka_shaped_roundtrip",
-    "streaming_gold_foreachbatch",
-    "explode_words",
-    "array_functions_showcase",
-    "skew_salted_agg",
-    "approx_distinct_stats",
-    "dedup_chunks",
-    "length_quantiles_by_source",
-    "bigram_lm_top",
-    "embedding_dispersion",
-    "tpch_q1_pricing",
-    "corpus_quality_report",
-    "dedup_containment",
-    "ann_ivf_topk",
-    "ann_banded_lsh_topk",
-    "ann_recall_audit",
-    "ann_banded_recall_audit",
-    "embedding_centroids",
-    "embedding_quantize_int8",
-    "embedding_outliers",
-    "tfidf_top_terms",
-    "bm25_rank",
-    "theta_sketch_set_algebra",
-    "compaction_execute",
-    "anti_parts_never_ordered",
-    "case_buckets",
-    "count_if_bands",
-    "cross_scalar_stats",
-    "cube_status_priority",
-    "date_interval_filter",
-    "distinct_pairs",
-    "fuzzy_name_pairs",
-    "global_sort_limit",
-    "join_left_order_counts",
-    "json_roundtrip_unnest",
-    "null_semantics",
-    "percentile_prices",
-    "pivot_status_counts",
-    "rank_family",
-    "resample_forward_fill",
-    "rollup_region_nation",
-    "semi_orders_with_lines",
-    "set_ops_intersect_except",
-    "share_of_total",
-    "stats_functions",
-    "string_functions_showcase",
-    "union_tagged",
-    "window_first_last",
-    "window_range_trailing_count",
-    "window_running_totals",
-    "vocab_coverage",
-    "unigram_logprob_score",
-    "lang_consistency_audit",
-    "quality_classifier_score",
-    "zipf_slope_audit",
-    "gopher_quality_filter",
-    "ngram_novelty",
-    "repetition_stats",
-    "bpe_merge_step",
-    "stratified_split",
-    "corpus_composition",
-    "corpus_mix_temperature",
-    "corpus_mix_apply",
-    "split_leakage_audit",
-    "source_drift_ks",
-    "export_shuffled_shards",
-    "dsir_importance_weights",
-    "multimodal_frame_sample",
-    "snapshot_concurrent_commit",
-    "dup_span_removal",
-    "minhash_estimate_audit",
-    "event_funnel",
-    "retention_cohorts",
-    "lake_zorder_layout",
-    "arrow_batch_stats",
-    "bucketed_join_priority_revenue",
-    "cdc_merge_upsert",
-    "chunk_documents",
-    "cms_frequency_audit",
-    "contrastive_triplets",
-    "corpus_profile",
-    "csv_roundtrip_scan",
-    "curriculum_phases",
-    "decontaminate_embedding",
-    "dedup_embedding_cosine",
-    "domain_cap_sample",
-    "dup_span_report",
-    "e2e_curation_report",
-    "triangle_count",
-    "event_path_mining",
-    "event_rate_anomaly",
-    "export_tokenized_sequences",
-    "fk_integrity_audit",
-    "grouping_sets_orders",
-    "hybrid_rank_fusion",
-    "join_skew_audit",
-    "lake_schema_evolution",
-    "observed_write_metrics",
-    "pmi_collocations",
-    "python_datasource_bronze",
-    "rollup_cube_orders",
-    "semdedup",
-    "streaming_dedup",
-    "streaming_dedup_within_watermark",
-    "streaming_join_click_purchase",
-    "streaming_session_windows",
-    "streaming_stateful_enumerate",
-    "streaming_static_enrich",
-    "velib_sparkline",
-    "snapshot_optimize_transactional",
-    "bfs_hop_levels",
-    "hll_sliding_distinct",
-    "snapshot_shallow_clone",
-    "bigram_perplexity_filter",
-    "multimodal_image_phash_neardup",
-    "label_propagation_communities",
-    "full_outer_activity_reconcile",
-    "streaming_windowed_counts",
-    "tpch_q3_shipping",
-    "udtf_sentence_split",
-    "unpivot_metrics",
-    "variant_shred_stats",
-    "weighted_sample_topk",
-    "basket_affinity_pairs",
-    "bloom_membership_audit",
-    "chunk_cdc",
-    "compaction_binpack_plan",
-    "cusum_changepoint_audit",
-    "expectation_suite_audit",
-    "feature_quantile_bins",
-    "global_enumerate_rows",
-    "histogram_quantile_audit",
-    "hll_distinct_audit",
-    "hll_merge_rollup",
-    "ivm_incremental_rollup",
-    "lake_file_skipping",
-    "multimodal_audio_window_stats",
-    "multimodal_image_ahash_neardup",
-    "pareto_frontier_orders",
-    "peak_concurrency_daily",
-    "ppjoin_prefix_candidates",
-    "pq_adc_topk",
-    "rake_keyphrases",
-    "rfm_segmentation",
-    "rolling_active_users",
-    "skew_salted_join",
-    "snapshot_diff_cdc",
-    "sorted_neighborhood_pairs",
-    "streaming_join_left_outer",
-    "tpch_q8_market_share",
-    "tpch_q9_nation_profit",
-    "tpch_q10_returned_items",
-    "tpch_q6_forecast_revenue",
-    "tpch_q4_priority_check",
-    "tpch_q5_local_supplier",
-    "tpch_q7_volume_shipping",
-)
+ORACLE: dict[str, str] = {}
 
 
 def _register(module) -> None:
@@ -347,81 +50,27 @@ def _register(module) -> None:
     ORACLE.update(module.ORACLE)
 
 
-def _load() -> None:
-    from velib_lakehouse_spark.operators import relational, relational2, velib
-
-    for mod in (velib, relational, relational2):
-        _register(mod)
-
-    # Optional modules land as they are implemented; import-gated so a
-    # broken extension never takes down the core inventory.
-    for name in (
-        "tpch",
-        "dedup",
-        "similarity",
-        "text",
-        "multimodal",
-        "pandas_ops",
-        "rollups",
-        "curation",
-        "training",
-        "chunking",
-        "retrieval",
-        "graph",
-        "udtf_ops",
-        "sketches",
-    ):
-        try:
-            mod = __import__(
-                f"velib_lakehouse_spark.operators.{name}", fromlist=["QUERIES"]
-            )
-            _register(mod)
-        except ImportError:
-            pass
-
-    try:
-        from velib_lakehouse_spark.streaming import silver as streaming_silver
-
-        _register(streaming_silver)
-    except ImportError:
-        pass
-
-    try:
-        from velib_lakehouse_spark.sources import lake
-
-        _register(lake)
-    except ImportError:
-        pass
-
-    try:
-        from velib_lakehouse_spark.sources import readers
-
-        _register(readers)
-    except ImportError:
-        pass
-
-    try:
-        from velib_lakehouse_spark.sources import pyds
-
-        _register(pyds)
-    except ImportError:
-        pass
-
-    _reorder()
-
-
-def _reorder() -> None:
-    """Re-key QUERIES/ORACLE so PRIORITY names register first (driver
-    window), then SECONDARY, then everything else in module order."""
-    missing = [n for n in (*PRIORITY, *SECONDARY) if n not in QUERIES]
-    if missing:  # pragma: no cover - developer error
-        raise ValueError(f"PRIORITY/SECONDARY names not registered: {missing}")
-    head = list(PRIORITY) + list(SECONDARY)
-    ordered = head + [n for n in QUERIES if n not in set(head)]
-    for mapping in (QUERIES, ORACLE):
-        snapshot = dict(mapping)
-        mapping.clear()
-        mapping.update({n: snapshot[n] for n in ordered if n in snapshot})
-
-
-_load()
+for _module in (
+    velib,
+    relational,
+    relational2,
+    tpch,
+    dedup,
+    similarity,
+    text,
+    multimodal,
+    pandas_ops,
+    rollups,
+    curation,
+    training,
+    chunking,
+    retrieval,
+    graph,
+    udtf_ops,
+    sketches,
+    silver,
+    lake,
+    readers,
+    pyds,
+):
+    _register(_module)
