@@ -6,7 +6,9 @@ import os
 
 import pytest
 
+from velib_lakehouse_spark import pipeline
 from velib_lakehouse_spark.pipeline import run_medallion
+from velib_lakehouse_spark.sources import snapshots
 from velib_lakehouse_spark.sources.snapshots import (
     live_files,
     read_snapshot,
@@ -101,3 +103,41 @@ def test_crash_between_silver_and_gold_commits(spark, tmp_path, monkeypatch):
     assert want.count() > 0
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
     assert (meta["alerts"], meta["critical"]) == (one_shot["alerts"], one_shot["critical"])
+
+
+def _gold_plan(spark, silver_dir: str) -> str:
+    gold = pipeline.build_alerts(
+        pipeline.build_history(read_table(spark, silver_dir, silver_mod.SILVER_SCHEMA))
+    )
+    return gold._jdf.queryExecution().executedPlan().toString()
+
+
+def test_gold_is_one_pass_over_silver(spark, tmp_path):
+    """Gold scans silver once and shuffles once, on the station: the 4 h
+    cutoff runs over the latest rows in the write's single partition,
+    not as a second scan joined back in."""
+    silver_dir = str(tmp_path / "silver")
+    silver_mod.run_silver_stream(spark, SF_DIR, silver_dir, str(tmp_path / "ckpt"))
+    plan = _gold_plan(spark, silver_dir)
+    exchanges = [l for l in plan.splitlines() if "Exchange" in l]
+    assert len(exchanges) == 1, plan
+    assert "hashpartitioning(station_code" in exchanges[0], plan
+    assert "Broadcast" not in plan and "NestedLoopJoin" not in plan, plan
+    assert plan.count("FileScan") == 1, plan
+
+
+def test_medallion_reads_no_gold_back(spark, tmp_path, monkeypatch):
+    """The alert counts come from the write itself: ``run_medallion``
+    never reads the committed gold snapshot back."""
+
+    def no_read_back(*_a, **_kw):
+        raise AssertionError("run_medallion read the gold snapshot back")
+
+    monkeypatch.setattr(pipeline, "read_snapshot", no_read_back)
+    monkeypatch.setattr(snapshots, "read_snapshot", no_read_back)
+    meta = pipeline.run_medallion(spark, SF_DIR, str(tmp_path / "lake"))
+    monkeypatch.undo()
+
+    gold = read_snapshot(spark, meta["gold_table"])
+    assert meta["alerts"] == gold.count() > 0
+    assert meta["critical"] == gold.filter("alert_level = 'CRITICAL_EMPTY'").count()

@@ -473,3 +473,49 @@ def test_stage_partition_files_reserves_part_column(spark, tmp_path):
     df = spark.createDataFrame([(1, "x")], "part bigint, p string")
     with pytest.raises(ValueError, match="part"):
         snap.stage_partition_files(df, str(tmp_path), "t", "p")
+
+
+def test_checkpoint_only_log_serves_every_read(spark, tmp_path):
+    """After ``vacuum_log`` retires every commit (zero tail commits) the
+    checkpoint alone gives the head, the live files and the streaming
+    high-water mark: a replayed batch is still dropped, and the next
+    batch commits on top of the checkpoint."""
+    from velib_lakehouse_spark.sources import snapshots as snap
+
+    table = str(tmp_path / "t")
+    for b in range(3):
+        snap.commit_stream_batch(table, "s", b, _mk(spark, [(b, "U")]), "prio")
+    before = snap.live_files(table)
+    assert snap.write_log_checkpoint(table) == 2
+    assert snap.vacuum_log(table) == 3
+    assert snap.read_commits(table) == []
+
+    assert snap.table_head(table) == 2
+    assert snap.live_files(table) == before
+    assert snap.last_txn_batch(table, "s") == 2
+    assert snap.last_txn_batch(table, "other") == -1
+    assert snap.commit_stream_batch(table, "s", 2, _mk(spark, [(9, "U")]), "prio") is None
+    e = snap.commit_stream_batch(table, "s", 3, _mk(spark, [(3, "L")]), "prio")
+    assert e["version"] == 3 and e["read_version"] == 2
+    assert snap.last_txn_batch(table, "s") == 3
+    rows = snap.read_table(spark, table, "k bigint, prio string").collect()
+    assert sorted(r.k for r in rows) == [0, 1, 2, 3]
+
+
+def test_table_head_parses_no_commit_file(tmp_path):
+    """The head comes from the ``_log/`` file names: unparsable commit
+    and checkpoint files above it do not stop ``table_head``, and temp
+    files are not versions."""
+    from velib_lakehouse_spark.sources import snapshots as snap
+
+    table = str(tmp_path / "t")
+    assert snap.table_head(table) == -1
+    assert snap.try_commit(table, 0, {"version": 0})
+    d = snap._log_dir(table)
+    (d / "00000007.json").write_text("{not json")
+    assert snap.table_head(table) == 7
+    (d / "00000009.ckpt.json").write_text("{not json")
+    (d / "._commit_tmp").write_text("{not json")
+    assert snap.table_head(table) == 9
+    with pytest.raises(json.JSONDecodeError):
+        snap.read_commits(table)

@@ -14,10 +14,16 @@ a lake root, with every tier expressed by this package's operators:
   history  lag + trailing-average enrichment (the reconstructed
            velib_stats_history_silver, SURVEY.md §2.9)
   gold     alert rules -> whole-table ``overwrite`` commit to a log
-           table, one ``v=N`` directory per version (sources/snapshots)
+           table, one ``v=N`` directory per version (sources/snapshots);
+           one pass over silver (one scan, one shuffle on the station),
+           and the alert counts are observed on the write itself, so
+           nothing is read back
   serving  payload dicts for the two API endpoints (serving.py)
   retire   silver partition retention as a logged delete, then log
            checkpoint + vacuum of the retired files (sources/snapshots)
+
+A steady tick runs three Spark jobs: the silver micro-batch write, the
+gold shuffle's map stage and the gold write (``tools/tick_cost.py``).
 
 Orchestration stays external (cron/Dagster/Airflow call this); the
 engine owns the dataflow.
@@ -27,7 +33,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from velib_lakehouse_spark.functions.timeseries import (
@@ -36,7 +42,10 @@ from velib_lakehouse_spark.functions.timeseries import (
     trailing_avg_seconds,
 )
 from velib_lakehouse_spark.operators.velib import ALERT_MAX, CRITICAL_MAX
-from velib_lakehouse_spark.sources.snapshots import (
+# read_snapshot is not called here: it stays importable from this
+# module, next to write_snapshot, for the callers that read gold back
+# (tests, perfbench/tracing.py wraps both by attribute)
+from velib_lakehouse_spark.sources.snapshots import (  # noqa: F401
     read_snapshot,
     read_table,
     retire_partitions,
@@ -61,17 +70,29 @@ def build_history(silver: DataFrame) -> DataFrame:
 
 
 def build_alerts(history: DataFrame) -> DataFrame:
-    """History -> current alert snapshot (Q3 rules over latest state)."""
-    cutoff = history.agg(F.max("last_reported").alias("max_ts"))
-    recent = (
-        history.crossJoin(F.broadcast(cutoff))
-        .filter(
-            F.col("last_reported") >= F.col("max_ts") - F.expr("INTERVAL 4 HOURS")
-        )
-        .drop("max_ts")
-    )
-    latest = latest_per_key(recent, "station_code", "last_reported", "bikes_available")
-    return latest.filter(
+    """History -> current alert snapshot (Q3 rules over latest state).
+
+    The reference keeps the rows of the last 4 h before the global max
+    ``last_reported``, then each station's latest of those (reference
+    src/assets/velib_alerte.py:19-48).  This takes each station's latest
+    row first and applies the cutoff after, which is exact: a station's
+    latest row is within 4 h of the global max if and only if the
+    station has any row in that range, the global max is the max over
+    the latest rows, and the ``bikes_available DESC`` tiebreak picks the
+    same row either way.  So silver is scanned once and the only shuffle
+    is the per-station one the history windows already need.
+
+    The cutoff's max is an unpartitioned window over the latest rows,
+    one per station (bounded by the station count, ~1.5k for Paris),
+    after ``coalesce(1)``: the one partition the gold write has anyway.
+    """
+    latest = latest_per_key(
+        history, "station_code", "last_reported", "bikes_available"
+    ).coalesce(1)
+    recent = latest.withColumn(
+        "max_ts", F.max("last_reported").over(Window.partitionBy())
+    ).filter(F.col("last_reported") >= F.col("max_ts") - F.expr("INTERVAL 4 HOURS"))
+    return recent.filter(
         (F.col("bikes_available") < ALERT_MAX) & (F.col("net_flow") <= 0)
     ).select(
         "station_code",
@@ -101,12 +122,15 @@ def run_medallion(
     silver = read_table(spark, silver_dir, SILVER_SCHEMA)
     history = build_history(silver)
     alerts = build_alerts(history)
-    gold_version = write_snapshot(alerts, gold_table)
-
-    counts = read_snapshot(spark, gold_table).agg(
-        F.count(F.lit(1)).alias("alerts"),
-        F.count_if(F.col("alert_level") == "CRITICAL_EMPTY").alias("critical"),
-    ).first()
+    counts = Observation("gold")
+    gold_version = write_snapshot(
+        alerts.observe(
+            counts,
+            F.count(F.lit(1)).alias("alerts"),
+            F.count_if(F.col("alert_level") == "CRITICAL_EMPTY").alias("critical"),
+        ),
+        gold_table,
+    )
 
     removed = 0
     if retention_min_date:
@@ -115,8 +139,8 @@ def run_medallion(
     return {
         "silver_rows": stream_meta["rows_processed"],
         "gold_version": gold_version,
-        "alerts": counts["alerts"],
-        "critical": counts["critical"],
+        "alerts": counts.get["alerts"],
+        "critical": counts.get["critical"],
         "partitions_retired": removed,
         "gold_table": gold_table,
     }

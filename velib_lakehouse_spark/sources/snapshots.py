@@ -79,28 +79,47 @@ def _log_dir(table_path: str) -> Path:
     return Path(table_path) / _LOG_DIR
 
 
-def read_commits(table_path: str) -> list[dict]:
-    """All retained commit entries, version order (checkpoint files —
-    ``*.ckpt.json``, see the retention section below — are state
-    snapshots, not commits, and are excluded)."""
+# commit files are ``{V:08d}.json``; checkpoints (see the retention
+# section below) are ``{V:08d}.ckpt.json``; ``._``-prefixed temp files
+# never match
+_LOG_NAME = re.compile(r"^(\d{8})\.(ckpt\.)?json$")
+
+
+def _log_versions(table_path: str) -> tuple[list[int], list[int]]:
+    """(commit versions, checkpoint versions), each ascending, from the
+    ``_log/`` file names alone: no log file is opened."""
     d = _log_dir(table_path)
     if not d.is_dir():
-        return []
-    out = []
-    for p in sorted(d.glob("*.json")):
-        if re.match(r"^\d{8}\.json$", p.name):
-            out.append(json.loads(p.read_text()))
-    return out
+        return [], []
+    commits, ckpts = [], []
+    for name in os.listdir(d):
+        m = _LOG_NAME.match(name)
+        if m:
+            (ckpts if m.group(2) else commits).append(int(m.group(1)))
+    return sorted(commits), sorted(ckpts)
+
+
+def _head(commit_vs: list[int], ckpt_vs: list[int]) -> int:
+    return max(commit_vs[-1:] + ckpt_vs[-1:], default=-1)
+
+
+def _load(table_path: str, version: int, suffix: str = "json") -> dict:
+    return json.loads((_log_dir(table_path) / f"{version:08d}.{suffix}").read_text())
+
+
+def read_commits(table_path: str, after: int = -1) -> list[dict]:
+    """Retained commit entries above version ``after``, version order
+    (checkpoint files are state snapshots, not commits, and are
+    excluded).  Only those commit files are parsed."""
+    return [_load(table_path, v) for v in _log_versions(table_path)[0] if v > after]
 
 
 def table_head(table_path: str) -> int:
-    """Highest committed version, or -1 for an empty log.  After log
-    retention the newest checkpoint may BE the head (zero tail
-    commits)."""
-    commits = read_commits(table_path)
-    tail = commits[-1]["version"] if commits else -1
-    ckpt = _latest_checkpoint(table_path)
-    return max(tail, ckpt["version"] if ckpt else -1)
+    """Highest committed version, or -1 for an empty log: the highest
+    commit or checkpoint file name (after log retention the newest
+    checkpoint may BE the head, with zero tail commits).  Parses no
+    log file, so its cost does not grow with the commits' size."""
+    return _head(*_log_versions(table_path))
 
 
 def try_commit(table_path: str, version: int, entry: dict) -> bool:
@@ -112,8 +131,8 @@ def try_commit(table_path: str, version: int, entry: dict) -> bool:
     ``os.link`` — an atomic create-with-content that raises on loss.
     A bare ``O_CREAT|O_EXCL`` open followed by the json write would
     leave the commit file visible empty/partial between the two calls,
-    and a rival's validation read (``read_commits`` inside
-    ``optimistic_commit``) could parse the torn entry."""
+    and a rival's validation read inside ``optimistic_commit`` could
+    parse the torn entry."""
     d = _log_dir(table_path)
     d.mkdir(parents=True, exist_ok=True)
     path = d / f"{version:08d}.json"
@@ -141,37 +160,36 @@ def live_files(table_path: str, version: int | None = None) -> list[list]:
     whichever shape the gap takes (no covering checkpoint, a stale
     covering checkpoint with the bridging commits vacuumed, or a
     checkpoint-only log asked for an older version)."""
+    commit_vs, ckpt_vs = _log_versions(table_path)
+    head = _head(commit_vs, ckpt_vs)
+    if version is not None and version > head:
+        raise FileNotFoundError(
+            f"version {version} does not exist yet (head: {head})"
+        )
     live: dict[str, str] = {}
     base_version = -1
-    ckpt = _latest_checkpoint(table_path, version)
+    ckpt = _latest_checkpoint(table_path, ckpt_vs, version)
     if ckpt is not None:
         live = {path: part for path, part in ckpt["live"]}
         base_version = ckpt["version"]
-    commits = read_commits(table_path)
-    if version is not None and version > table_head(table_path):
-        raise FileNotFoundError(
-            f"version {version} does not exist yet"
-            f" (head: {table_head(table_path)})"
-        )
-    target = version if version is not None else max(
-        base_version, commits[-1]["version"] if commits else -1
-    )
+    target = version if version is not None else head
     if target > base_version:
         # the fold needs EVERY commit in (base_version, target]
         # contiguously retained; versions are contiguous by
         # construction, so oldest_retained <= base_version + 1 proves it
-        oldest_retained = commits[0]["version"] if commits else None
+        oldest_retained = commit_vs[0] if commit_vs else None
         if oldest_retained is None or oldest_retained > base_version + 1:
             raise FileNotFoundError(
                 f"version {target} predates the log-retention horizon"
                 f" (base checkpoint: v{base_version}, oldest retained"
                 f" commit: {oldest_retained})"
             )
-    for c in commits:
-        if c["version"] <= base_version:
+    for v in commit_vs:
+        if v <= base_version:
             continue
-        if version is not None and c["version"] > version:
+        if v > target:
             break
+        c = _load(table_path, v)
         if c["action"] == "overwrite" and c.get("domain") is None:
             live.clear()
         for path, _part in c.get("removes", []):
@@ -335,14 +353,14 @@ def optimistic_commit(
         adds, removes = stage_fn(read_version)
     conflicts: list[dict] = []
     for attempt in range(1, max_attempts + 1):
-        head = table_head(table_path)
-        retained = read_commits(table_path)
+        commit_vs, ckpt_vs = _log_versions(table_path)
+        head = _head(commit_vs, ckpt_vs)
         # validation needs EVERY commit in (read_version, head]; log
         # retention (vacuum_log) may have retired part of that window,
         # in which case the transaction cannot prove itself conflict-
         # free and must restart from a fresh snapshot (Delta raises the
         # same way when a txn outlives the log retention period)
-        oldest = retained[0]["version"] if retained else head + 1
+        oldest = commit_vs[0] if commit_vs else head + 1
         if read_version < oldest - 1 and head > read_version:
             raise RuntimeError(
                 f"txn {txn}: read snapshot v{read_version} predates the"
@@ -350,9 +368,10 @@ def optimistic_commit(
                 f" v{oldest}); restart from a fresh snapshot"
             )
         conflict = None
-        for other in retained:
-            if other["version"] <= read_version:
+        for v in commit_vs:
+            if v <= read_version:
                 continue
+            other = _load(table_path, v)
             kind = _conflicts_with(action, domain, other)
             if kind is not None:
                 conflict = CommitConflict(kind, other["version"])
@@ -401,12 +420,13 @@ def optimistic_commit(
 def last_txn_batch(table_path: str, app_id: str) -> int:
     """Highest batch_id committed by streaming app ``app_id`` (-1 if
     never): the newest checkpoint's carried mark, advanced by the
-    retained tail commits."""
-    best = -1
-    ckpt = _latest_checkpoint(table_path)
+    commits after it (the checkpoint already folded the ones before)."""
+    best = after = -1
+    ckpt = _latest_checkpoint(table_path, _log_versions(table_path)[1])
     if ckpt is not None:
         best = int(ckpt.get("txns", {}).get(app_id, -1))
-    for c in read_commits(table_path):
+        after = ckpt["version"]
+    for c in read_commits(table_path, after):
         t = c.get("stream_txn")
         if t is not None and t["app_id"] == app_id:
             best = max(best, int(t["batch_id"]))
@@ -424,7 +444,9 @@ def commit_stream_batch(
     the log entry, or ``None`` when ``batch_id`` is already committed
     (a restart replaying the batch after a crash between the log commit
     and Spark's own checkpoint commit — the double-write Delta's `txn`
-    action exists to absorb).
+    action exists to absorb).  The log is parsed once, for that test:
+    the commit itself validates against the commits after the head it
+    staged at, usually none.
 
     The domain recorded on the entry is the REAL partition set the
     batch touched (derived from the staged directories), so a racing
@@ -463,9 +485,6 @@ def commit_stream_batch(
 # tmp-then-atomic-rename (readers never see a torn checkpoint), and
 # commit files keep the `{V:08d}.json` CAS contract.
 
-_COMMIT_RE = r"^\d{8}\.json$"
-
-
 def write_log_checkpoint(table_path: str) -> int:
     """Materialize the live-file state at the current head into a
     checkpoint file; returns the checkpointed version.  Idempotent —
@@ -479,7 +498,7 @@ def write_log_checkpoint(table_path: str) -> int:
     if head < 0:
         raise FileNotFoundError(f"no commits to checkpoint at {table_path}")
     state = live_files(table_path, head)
-    prev = _latest_checkpoint(table_path)
+    prev = _latest_checkpoint(table_path, _log_versions(table_path)[1])
     txns: dict[str, int] = dict(prev.get("txns", {})) if prev else {}
     for c in read_commits(table_path):
         t = c.get("stream_txn")
@@ -495,18 +514,13 @@ def write_log_checkpoint(table_path: str) -> int:
     return head
 
 
-def _latest_checkpoint(table_path: str, version: int | None = None) -> dict | None:
-    """Newest checkpoint at or below ``version`` (None = any)."""
-    d = _log_dir(table_path)
-    if not d.is_dir():
-        return None
-    best = None
-    for p in sorted(d.glob("*.ckpt.json")):
-        v = int(p.name.split(".", 1)[0])
-        if version is not None and v > version:
-            continue
-        best = p
-    return json.loads(best.read_text()) if best else None
+def _latest_checkpoint(
+    table_path: str, ckpt_vs: list[int], version: int | None = None
+) -> dict | None:
+    """Newest of the checkpoints ``ckpt_vs`` at or below ``version``
+    (None = any)."""
+    below = [v for v in ckpt_vs if version is None or v <= version]
+    return _load(table_path, below[-1], "ckpt.json") if below else None
 
 
 def vacuum_log(table_path: str) -> int:
@@ -515,18 +529,12 @@ def vacuum_log(table_path: str) -> int:
     below the checkpoint dies with it (Delta's log-retention trade) —
     `live_files` raises for such requests rather than silently
     returning a partial fold."""
-    ckpt = _latest_checkpoint(table_path)
-    if ckpt is None:
+    commit_vs, ckpt_vs = _log_versions(table_path)
+    if not ckpt_vs:
         return 0
-    d = _log_dir(table_path)
-    victims = [
-        p
-        for p in d.glob("*.json")
-        if re.match(_COMMIT_RE, p.name)
-        and int(p.name.split(".", 1)[0]) <= ckpt["version"]
-    ]
-    for p in victims:
-        p.unlink()
+    victims = [v for v in commit_vs if v <= ckpt_vs[-1]]
+    for v in victims:
+        (_log_dir(table_path) / f"{v:08d}.json").unlink()
     return len(victims)
 
 

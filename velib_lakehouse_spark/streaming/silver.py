@@ -142,20 +142,29 @@ def _drain_memory_sink(
     return out
 
 
+# The bronze events schema, fixed as the reference fixes its Kafka
+# payload schema (reference src/assets/silver.py:16).  Streaming needs
+# an explicit schema, and a fixed one costs no Spark job per query
+# start (inferring it from the files runs one).
+BRONZE_SCHEMA = (
+    "event_id bigint, ts timestamp, user_id bigint, event_type string,"
+    " value double, props string"
+)
+
+
 def _event_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """File-source streaming scan of the events table (Kafka stand-in).
+    """File-source streaming scan of the events table (Kafka stand-in),
+    read with the fixed ``BRONZE_SCHEMA``.  A naive microsecond ``ts``
+    (the test data's and ``perfbench/gen.py``'s) reads as the UTC
+    instant with the same digits, whatever the session time zone.
 
-    The schema is taken from the batch reader (streaming requires an
-    explicit schema — the reference makes the same point, silver.py:16),
-    and the nanosecond epoch is normalized exactly as the catalog does.
     ``max_files_per_trigger`` caps files per micro-batch (tests use it to
     force multi-batch runs and exercise state carry-over).
     """
     apply_safe_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    reader = spark.readStream.schema(raw_schema)
+    reader = spark.readStream.schema(BRONZE_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     # Two on-disk layouts exist: events.parquet as a DIRECTORY of part
@@ -172,15 +181,8 @@ def _event_stream(
     #   pth.getFileSystem(spark._jsc.hadoopConfiguration()).isDirectory(pth)
     tbl = os.path.join(sf_dir, "events.parquet")
     if os.path.isdir(tbl):
-        stream = reader.parquet(tbl)
-    else:
-        stream = reader.option("pathGlobFilter", "events*.parquet").parquet(sf_dir)
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+        return reader.parquet(tbl)
+    return reader.option("pathGlobFilter", "events*.parquet").parquet(sf_dir)
 
 
 def kafka_stream(spark: SparkSession, brokers: str, topic: str) -> DataFrame:
@@ -279,11 +281,12 @@ def run_silver_stream(
     count — the observability surface the reference logs per
     materialization, reference src/assets/silver.py:73-82).
     """
-    # repartition by the partition column: one output file per date per
-    # micro-batch instead of one per task per date (the small-file
-    # compaction the reference does with coalesce(1),
-    # reference src/assets/velib_alerte.py:72, done stream-side).
-    silver = silver_transform(_event_stream(spark, sf_dir)).repartition("date")
+    # one writer task per micro-batch: one output file per date per
+    # batch, the small-file compaction the reference does with
+    # coalesce(1) (reference src/assets/velib_alerte.py:72), with no
+    # shuffle.  A 5-minute tick is ~1.5k rows; a large backfill drained
+    # as one batch also writes from one task.
+    silver = silver_transform(_event_stream(spark, sf_dir)).coalesce(1)
 
     def commit(batch: DataFrame, batch_id: int) -> None:
         commit_stream_batch(out_dir, "silver", batch_id, batch, "date")
