@@ -212,23 +212,6 @@ def test_multimodal_decode_is_batched_and_stub_guarded(spark):
     assert out.columns == ["doc_id", "n_bytes", "width", "height", "n_frames"]
 
 
-def test_retention_delete_drops_old_partitions(spark, tmp_path):
-    from velib_lakehouse_spark.sources.lake import retention_delete, write_partitioned
-
-    df = registry.QUERIES["velib_silver_parse"](spark, SF_DIR)
-    out = str(tmp_path / "lake")
-    write_partitioned(df, out, "date", mode="overwrite")
-    import os
-
-    before = {d for d in os.listdir(out) if d.startswith("date=")}
-    removed = retention_delete(out, "date", "2024-01-10")
-    after = {d for d in os.listdir(out) if d.startswith("date=")}
-    assert removed == len(before) - len(after) > 0
-    assert all(d.split("=")[1] >= "2024-01-10" for d in after)
-    # data for retained partitions still reads cleanly
-    assert spark.read.parquet(out).count() > 0
-
-
 def test_gopher_rules_fire_individually(spark, tmp_path):
     """Crafted docs, one per rule violation, plus one clean pass."""
     from velib_lakehouse_spark.catalog import TABLES, load_table

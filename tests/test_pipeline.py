@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -141,3 +143,23 @@ def test_medallion_reads_no_gold_back(spark, tmp_path, monkeypatch):
     gold = read_snapshot(spark, meta["gold_table"])
     assert meta["alerts"] == gold.count() > 0
     assert meta["critical"] == gold.filter("alert_level = 'CRITICAL_EMPTY'").count()
+
+
+def test_core_imports_no_showcase_module():
+    """The medallion core (pipeline + serving) loads no registry showcase
+    module: the only query inventory it imports is ``operators.velib``,
+    whose queries serving answers from."""
+    probe = (
+        "import sys\n"
+        "import velib_lakehouse_spark.pipeline, velib_lakehouse_spark.serving\n"
+        "print(sorted(n for n, m in list(sys.modules.items())"
+        " if n.startswith('velib_lakehouse_spark') and hasattr(m, 'QUERIES')))"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))
+    env = {**os.environ, "PYTHONPATH": path}
+    out = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True,
+        check=True, env=env, cwd=repo,
+    ).stdout
+    assert out.strip() == "['velib_lakehouse_spark.operators.velib']"

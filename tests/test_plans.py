@@ -57,28 +57,34 @@ def test_column_pruning_reads_only_needed_columns(spark):
     assert "o_totalprice" not in read_schema
 
 
-def test_lake_read_partition_prunes(spark):
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from velib_lakehouse_spark.sources.lake import (
-        read_partition_pruned,
-        write_partitioned,
+def test_lake_read_partition_prunes(spark, tmp_path):
+    """A ``domain`` read of a log table opens only the retained
+    partitions' files: every input file sits under a kept ``part=``
+    directory, and there are fewer of them than the table's live files."""
+    from velib_lakehouse_spark.catalog import load_table
+    from velib_lakehouse_spark.sources.lake import PRUNE_CUTOFF
+    from velib_lakehouse_spark.sources.snapshots import (
+        commit_stream_batch,
+        live_files,
+        read_table,
+    )
+    from velib_lakehouse_spark.streaming.silver import (
+        SILVER_SCHEMA,
+        silver_transform,
     )
 
-    e = registry.QUERIES["velib_silver_parse"](spark, SF_DIR)
-    out = tempfile.mkdtemp(prefix="t_prune_")
-    write_partitioned(
-        e.withColumn("date", F.col("date")), out, "date", mode="overwrite"
-    )
-    pruned = read_partition_pruned(spark, out, "date", "2024-01-15")
-    plan = _formatted(pruned)
-    assert "PartitionFilters" in plan
-    # the scan's partition count must be below the total partition count
-    total_parts = spark.read.parquet(out).select("date").distinct().count()
-    kept_parts = pruned.select("date").distinct().count()
-    assert 0 < kept_parts < total_parts
+    table = str(tmp_path / "silver")
+    silver = silver_transform(load_table(spark, SF_DIR, "events"))
+    commit_stream_batch(table, "load", 0, silver, "date")
+    dates = {part for _, part in live_files(table)}
+    kept = {d for d in dates if d >= PRUNE_CUTOFF}
+    assert 0 < len(kept) < len(dates)
+
+    pruned = read_table(spark, table, SILVER_SCHEMA, domain=kept).inputFiles()
+    live = read_table(spark, table, SILVER_SCHEMA).inputFiles()
+    assert pruned
+    assert all(f.split("/part=")[1].split("/")[0] in kept for f in pruned)
+    assert len(pruned) < len(live)
 
 
 def test_history_windows_share_one_shuffle(spark):
@@ -291,14 +297,14 @@ def test_file_skipping_scan_carries_partition_filter(spark):
 # exemption here names the bounded frame and caps its node count;
 # every other registered query must have zero partition-less Window
 # nodes (checked per query in tests/test_oracle_parity.py).  Each cap
-# is the count measured at sf0.001, so a new global window fails.
+# is the count measured at sf0.001, windows inside persisted subplans
+# included, so a new global window fails.
 BOUNDED_UNPARTITIONED_WINDOWS = {
     # offsets running-sums over RFM_RANK_BUCKETS(=32)-row bucket-count
-    # frames, one Window node per _two_phase_global_tile call; the walk
-    # sees only the last call's, because each call persists its input
-    # (the previous call's output) and the walk does not enter cached
-    # relations
-    "rfm_segmentation": 1,
+    # frames, one Window node per _two_phase_global_tile call, three
+    # calls; each call persists its input (the previous call's output),
+    # so the first two calls' windows sit in cached relations
+    "rfm_segmentation": 3,
     # offsets over the per-month count frame (~#months rows)
     "global_enumerate_rows": 1,
     # documented vocabulary/catalog-bounded frames (VERDICT r4 #3:
@@ -346,15 +352,31 @@ BOUNDED_UNPARTITIONED_WINDOWS = {
 
 
 def _unpartitioned_window_count(df) -> int:
-    jplan = df._jdf.queryExecution().optimizedPlan()
-    stack, n = [jplan], 0
+    """Partition-less Window nodes in the optimized plan, including those
+    inside cached relations (a ``persist()`` in the query).  A cached
+    relation is entered once per distinct cache, since it is computed
+    once, through its physical plan: there a nested cache is again an
+    in-memory scan rather than the inlined plan it caches."""
+    jvm = df.sparkSession._jvm
+    stack, n, seen = [df._jdf.queryExecution().optimizedPlan()], 0, set()
     while stack:
         node = stack.pop()
-        if (
-            node.getClass().getSimpleName() == "Window"
-            and node.partitionSpec().isEmpty()
-        ):
+        kind = node.getClass().getSimpleName()
+        if kind in ("Window", "WindowExec") and node.partitionSpec().isEmpty():
             n += 1
+        if kind == "InMemoryTableScanExec":
+            node = node.relation()
+            kind = "InMemoryRelation"
+        if kind == "InMemoryRelation":
+            builder = node.cacheBuilder()
+            key = jvm.System.identityHashCode(builder)
+            if key not in seen:
+                seen.add(key)
+                stack.append(builder.cachedPlan())
+            continue
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.inputPlan())
+            continue
         kids = node.children()
         for i in range(kids.size()):
             stack.append(kids.apply(i))

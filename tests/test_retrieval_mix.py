@@ -19,7 +19,7 @@ from velib_lakehouse_spark.operators.retrieval import (
     RRF_K,
     hybrid_rank_fusion,
 )
-from velib_lakehouse_spark.streaming.silver import (
+from velib_lakehouse_spark.operators.streaming import (
     JOIN_WINDOW_SECONDS,
     streaming_join_click_purchase,
 )

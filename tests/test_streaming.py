@@ -69,7 +69,7 @@ def test_streaming_sessions_agree_with_batch(spark):
     """Every session the stream closes must exist identically in the
     batch sessionization (same gap): same (station, start, end, count)."""
     from velib_lakehouse_spark.operators.relational2 import sessionize_events
-    from velib_lakehouse_spark.streaming.silver import streaming_session_windows
+    from velib_lakehouse_spark.operators.streaming import streaming_session_windows
 
     streamed = {
         (r.station_code, r.session_start_ms, r.n_events)
@@ -89,7 +89,7 @@ def test_streaming_dedup_deterministic_winner_on_crafted_duplicates(spark):
     no duplicate (station, ts) pairs, so this crafts some)."""
     from pyspark.sql import functions as F
 
-    from velib_lakehouse_spark.streaming.silver import streaming_dedup
+    from velib_lakehouse_spark.operators.streaming import streaming_dedup
 
     e = spark.read.parquet(f"{SF_DIR}/events.parquet")
     # duplicate 50 early rows with a HIGHER event_id and a shifted value:
@@ -134,7 +134,7 @@ def test_stateful_enumerate_state_carries_across_batches(spark):
     two must be measured against batch one's last event (state), so the
     multi-batch output equals the single-batch/window semantics."""
     from velib_lakehouse_spark.catalog import load_table
-    from velib_lakehouse_spark.streaming.silver import (
+    from velib_lakehouse_spark.operators.streaming import (
         streaming_stateful_enumerate,
     )
 
@@ -177,10 +177,10 @@ def test_transform_with_state_gated_on_protobuf(spark):
     without the gate, query start crashes the streaming Python runner.
     Where available, the emitted table must match the per-user batch
     aggregate; where not, the registry must not expose it."""
-    from velib_lakehouse_spark.streaming import silver
+    from velib_lakehouse_spark.operators import streaming
     from velib_lakehouse_spark import registry
 
-    if not silver.tws_available():
+    if not streaming.tws_available():
         assert "streaming_tws_user_stats" not in registry.QUERIES
         return
 
@@ -188,8 +188,8 @@ def test_transform_with_state_gated_on_protobuf(spark):
     from tests.conftest import SF_DIR
 
     problems = compare(
-        silver.streaming_tws_user_stats(spark, SF_DIR),
-        silver.ORACLE["streaming_tws_user_stats"],
+        streaming.streaming_tws_user_stats(spark, SF_DIR),
+        streaming.ORACLE["streaming_tws_user_stats"],
         SF_DIR,
     )
     assert not problems, "; ".join(problems)
@@ -204,10 +204,8 @@ def test_dedup_within_watermark_expires_key_state(spark):
     grows forever."""
     import datetime
 
-    from velib_lakehouse_spark.streaming.silver import (
-        _drain_memory_sink,
-        _event_stream,
-    )
+    from velib_lakehouse_spark.operators.streaming import _drain_parquet_sink
+    from velib_lakehouse_spark.streaming.silver import _event_stream
 
     base = datetime.datetime(2026, 1, 1)
 
@@ -249,7 +247,7 @@ def test_dedup_within_watermark_expires_key_state(spark):
     )
     got = sorted(
         (r.user_id, int((r.ts - base).total_seconds()), r.event_type)
-        for r in _drain_memory_sink(spark, stream, "t_wm_dedup_sink").collect()
+        for r in _drain_parquet_sink(spark, stream, "t_wm_dedup_sink").collect()
     )
     assert got == [
         (1, 1000, "view"),

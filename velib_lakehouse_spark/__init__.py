@@ -8,7 +8,8 @@ windowed/batch gold -> serving SQL), built Spark-first:
 * batch relational core: DataFrame/Spark-SQL (scans, filters, windows,
   joins, aggregations) — ``operators/relational.py``, ``operators/velib.py``
 * streaming: Structured Streaming with ``Trigger.AvailableNow`` +
-  checkpointed partitioned sinks — ``streaming/silver.py``
+  checkpointed partitioned sinks — ``streaming/silver.py`` (the
+  medallion's silver stream), ``operators/streaming.py`` (showcase)
 * large-scale training-data operators (dedup, similarity search, text
   analysis, multimodal plumbing) — ``operators/{dedup,similarity,text,
   multimodal}.py``

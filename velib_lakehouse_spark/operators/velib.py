@@ -26,53 +26,54 @@ from pyspark.sql import functions as F
 from velib_lakehouse_spark.catalog import load_table
 from velib_lakehouse_spark.functions.collections import csv_scaled, ordered_collect
 from velib_lakehouse_spark.functions.exact import dec_sum
-from velib_lakehouse_spark.functions.timeseries import (
-    latest_per_key,
-    net_flow,
-    trailing_avg_seconds,
-)
+from velib_lakehouse_spark.functions.timeseries import latest_per_key, net_flow
+# the alert thresholds are the medallion's; they stay importable from here
+from velib_lakehouse_spark.pipeline import ALERT_MAX, CRITICAL_MAX, build_history
+from velib_lakehouse_spark.streaming.silver import silver_transform
 
-# Rescaled business-rule thresholds (events.value plays bikes_available).
+# Rescaled serving threshold (events.value plays bikes_available).
 TARGET_MAX = 60.0  # reference: gold scan keeps bikes <= 5 (src/api.py:45)
-ALERT_MAX = 50.0  # reference: bikes < 3 (src/assets/velib_alerte.py:61)
-CRITICAL_MAX = 10.0  # reference: bikes == 0 (src/api.py:73)
 
 
 def silver_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bronze->silver parse+derive (reference src/assets/silver.py:40-49).
+    """Bronze->silver parse+derive (reference src/assets/silver.py:40-49)
+    as a batch query: the medallion's ``silver_transform`` over the
+    ``events`` table, with the event time as epoch millis.
 
     JSON payload decode (P1: from_json + projection), timestamp
     derivation (P2: to_timestamp) and partition-date derivation (P3:
     to_date).  ``props`` plays the raw Kafka value; the extracted ``k``
     plays the typed payload fields.  Pure map-side — no shuffle.
     """
-    e = load_table(spark, sf_dir, "events")
-    return e.select(
-        F.col("event_id"),
-        F.col("user_id").alias("station_code"),
-        F.get_json_object("props", "$.k").cast("bigint").alias("k"),
-        F.col("event_type"),
-        F.col("value").alias("bikes_available"),
-        F.unix_millis("ts").alias("last_reported_ms"),
-        F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("date"),
+    silver = silver_transform(load_table(spark, sf_dir, "events"))
+    return silver.select(
+        "event_id",
+        "station_code",
+        "k",
+        "event_type",
+        "bikes_available",
+        F.unix_millis("last_reported").alias("last_reported_ms"),
+        "date",
     )
 
 
 def history_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reconstructed ``velib_stats_history_silver`` (SURVEY.md §2.9).
+    """The reconstructed ``velib_stats_history_silver`` (SURVEY.md §2.9):
+    the medallion's ``build_history`` over the silver parse of
+    ``events``, with the event time as epoch millis.
 
     Renames + per-station ``net_flow`` (lag, W3) + trailing 1h moving
     average (RANGE frame over epoch seconds, W4).  Both windows share one
     hash partitioning on station_code: a single shuffle feeds both.
     """
-    e = load_table(spark, sf_dir, "events")
-    return e.select(
-        F.col("user_id").alias("station_code"),
-        F.col("value").alias("bikes_available"),
-        net_flow("user_id", "ts", "event_id", "value").alias("net_flow"),
-        trailing_avg_seconds("user_id", "ts", "value", 3600).alias("moving_avg_1h"),
-        F.unix_millis("ts").alias("last_reported_ms"),
-        F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("date"),
+    history = build_history(silver_transform(load_table(spark, sf_dir, "events")))
+    return history.select(
+        "station_code",
+        "bikes_available",
+        "net_flow",
+        "moving_avg_1h",
+        F.unix_millis("last_reported").alias("last_reported_ms"),
+        "date",
     )
 
 
@@ -245,7 +246,7 @@ _DEDUP_LATEST_CTE = """
       PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
 """
 
-ORACLE: dict[str, str | None] = {
+ORACLE: dict[str, str] = {
     "velib_silver_parse": """
         SELECT event_id,
                user_id AS station_code,

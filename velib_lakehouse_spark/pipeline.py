@@ -41,7 +41,6 @@ from velib_lakehouse_spark.functions.timeseries import (
     net_flow,
     trailing_avg_seconds,
 )
-from velib_lakehouse_spark.operators.velib import ALERT_MAX, CRITICAL_MAX
 # read_snapshot is not called here: it stays importable from this
 # module, next to write_snapshot, for the callers that read gold back
 # (tests, perfbench/tracing.py wraps both by attribute)
@@ -52,6 +51,11 @@ from velib_lakehouse_spark.sources.snapshots import (  # noqa: F401
     write_snapshot,
 )
 from velib_lakehouse_spark.streaming.silver import SILVER_SCHEMA, run_silver_stream
+
+# Alert thresholds, rescaled to the events value domain (0..~200) where
+# ``value`` plays bikes_available (operators/velib.py's column mapping).
+ALERT_MAX = 50.0  # reference: bikes < 3 (src/assets/velib_alerte.py:61)
+CRITICAL_MAX = 10.0  # reference: bikes == 0 (src/api.py:73)
 
 
 def build_history(silver: DataFrame) -> DataFrame:

@@ -27,6 +27,7 @@ from velib_lakehouse_spark.operators import (
     rollups,
     similarity,
     sketches,
+    streaming,
     text,
     tpch,
     training,
@@ -34,7 +35,6 @@ from velib_lakehouse_spark.operators import (
     velib,
 )
 from velib_lakehouse_spark.sources import lake, pyds, readers
-from velib_lakehouse_spark.streaming import silver
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -68,7 +68,7 @@ for _module in (
     graph,
     udtf_ops,
     sketches,
-    silver,
+    streaming,
     lake,
     readers,
     pyds,

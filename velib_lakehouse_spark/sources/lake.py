@@ -1,22 +1,25 @@
-"""Lakehouse table layout: hive-partitioned writes, pruned reads,
-snapshot overwrites, retention.
+"""Lakehouse layout showcase: registry queries over table layouts.
 
-Re-expresses the reference's storage conventions idiomatically:
+The tables here use the medallion's one table protocol, the snapshot
+log of ``sources/snapshots.py``, the way the reference stores its lake
+(PAPER.md §0):
 
 * silver: date-partitioned parquet appends (reference
-  src/assets/silver.py:52-60) -> ``write_partitioned`` +
-  ``read_partition_pruned`` — the pruning is a *filter*, which Catalyst
-  turns into static partition pruning, instead of the reference's
+  src/assets/silver.py:52-60) -> ``lake_partition_pruned`` commits the
+  silver shape by date and reads a date ``domain`` back: only the
+  retained dates' files are opened, instead of the reference's
   hand-built ``date=...`` path lists (src/assets/velib_alerte.py:23-34);
 * gold: compacted snapshot overwrite (``coalesce(1).mode("overwrite")``,
-  reference src/assets/velib_alerte.py:70-72);
+  reference src/assets/velib_alerte.py:70-72) -> ``lake_gold_snapshot``,
+  a ``write_snapshot`` commit read back with ``read_snapshot``;
 * retention: partition-level deletes by age (reference
-  src/assets/maintenance.py:16-54), driven by the partition values
-  actually on disk — no object-store paging loop.
+  src/assets/maintenance.py:16-54) -> ``lake_retention_sweep``, the
+  medallion's own ``retire_partitions`` (a logged delete, then log
+  checkpoint + vacuum).
 
-With Delta on the classpath the same calls upgrade to ACID overwrite +
-VACUUM; layout and query shapes are unchanged, which is the point of
-keeping these behind one module.
+The rest are layout and maintenance demos (Z-order, file skipping,
+compaction, merge-on-read deletes, concurrent commits, clones), each
+checked against a DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -31,54 +34,18 @@ from pyspark.sql import functions as F
 from velib_lakehouse_spark.catalog import load_table
 from velib_lakehouse_spark.functions.exact import sql_cents
 from velib_lakehouse_spark.functions.hashing import md5_long, sql_md5_long
+from velib_lakehouse_spark.operators.velib import ORACLE as VELIB_ORACLE
+from velib_lakehouse_spark.operators.velib import alerts
 from velib_lakehouse_spark.session import apply_safe_confs
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_col: str = "date", mode: str = "append"
-) -> None:
-    df.write.mode(mode).partitionBy(partition_col).parquet(path)
-
-
-def read_partition_pruned(
-    spark: SparkSession, path: str, partition_col: str, min_value: str
-) -> DataFrame:
-    """Partition-discovery read + pruning filter.
-
-    The filter on the partition column reaches the file listing
-    (``PartitionFilters`` in the plan): only matching ``date=...``
-    directories are ever opened.
-    """
-    apply_safe_confs(spark)
-    return spark.read.parquet(path).filter(F.col(partition_col) >= F.lit(min_value))
-
-
-def write_gold_snapshot(df: DataFrame, path: str, n_files: int = 1) -> None:
-    """Compacted full-overwrite snapshot (the reference's gold pattern)."""
-    df.coalesce(n_files).write.mode("overwrite").parquet(path)
-
-
-def retention_delete(path: str, partition_col: str, min_keep_value: str) -> int:
-    """Drop partitions whose value sorts below ``min_keep_value``.
-
-    Returns the number of partitions removed.  Partition values are
-    taken from the directory layout itself; with Delta this becomes
-    ``DELETE WHERE`` + ``VACUUM``.
-
-    Caveat: this edits a plain directory tree.  A log-backed table
-    (sources/snapshots.py, e.g. the medallion's silver) must retire
-    partitions with ``snapshots.retire_partitions`` instead, or its log
-    would keep listing the deleted files.
-    """
-    removed = 0
-    for child in Path(path).iterdir():
-        if not child.is_dir() or not child.name.startswith(f"{partition_col}="):
-            continue
-        value = child.name.split("=", 1)[1]
-        if value < min_keep_value:
-            shutil.rmtree(child)
-            removed += 1
-    return removed
+from velib_lakehouse_spark.sources.snapshots import (
+    commit_stream_batch,
+    live_files,
+    read_snapshot,
+    read_table,
+    retire_partitions,
+    write_snapshot,
+)
+from velib_lakehouse_spark.streaming.silver import SILVER_SCHEMA, silver_transform
 
 
 # ---------------------------------------------------------------------------
@@ -88,35 +55,27 @@ def retention_delete(path: str, partition_col: str, min_keep_value: str) -> int:
 PRUNE_CUTOFF = "2024-01-15"
 
 
-def _silver_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    return e.select(
-        "event_id",
-        F.col("user_id").alias("station_code"),
-        F.col("value").alias("bikes_available"),
-        F.unix_millis("ts").alias("last_reported_ms"),
-        F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("date"),
-    )
-
-
 def lake_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round trip: partitioned write -> pruned read (S4 done Spark-first).
+    """Round trip: partitioned commit -> pruned read (S4 done Spark-first).
 
-    Writes the silver shape date-partitioned to a scratch dir, reads it
-    back filtering on the partition column — Catalyst prunes to the
-    matching ``date=...`` directories (asserted in tests/test_plans.py).
+    Commits the silver shape date-partitioned to a scratch log table, as
+    one batch the way the silver stream commits, and reads back the
+    ``domain`` of dates at or after the cutoff: only those partitions'
+    files are opened (asserted in tests/test_plans.py).
     """
     import tempfile
 
     out = tempfile.mkdtemp(prefix="lake_silver_")
-    write_partitioned(_silver_shape(spark, sf_dir), out, "date", mode="overwrite")
-    back = read_partition_pruned(spark, out, "date", PRUNE_CUTOFF)
+    silver = silver_transform(load_table(spark, sf_dir, "events"))
+    commit_stream_batch(out, "load", 0, silver, "date")
+    kept = {part for _, part in live_files(out) if part >= PRUNE_CUTOFF}
+    back = read_table(spark, out, SILVER_SCHEMA, domain=kept)
     return back.select(
         "event_id",
         "station_code",
         "bikes_available",
-        "last_reported_ms",
-        F.col("date").cast("string").alias("date"),
+        F.unix_millis("last_reported").alias("last_reported_ms"),
+        "date",
     )
 
 
@@ -155,15 +114,14 @@ def json_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lake_gold_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round trip: the alerts gold table written as a compacted overwrite
-    snapshot (K3) and read back — same oracle as the alerts query."""
+    """Round trip: the alerts gold table committed as a compacted
+    overwrite snapshot (K3) and read back — same oracle as the alerts
+    query."""
     import tempfile
 
-    from velib_lakehouse_spark.operators.velib import alerts
-
     out = tempfile.mkdtemp(prefix="lake_gold_")
-    write_gold_snapshot(alerts(spark, sf_dir), out)
-    return spark.read.parquet(out)
+    write_snapshot(alerts(spark, sf_dir), out)
+    return read_snapshot(spark, out)
 
 
 ZORDER_BITS = 16
@@ -235,7 +193,7 @@ def lake_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE: dict[str, str | None] = {
+ORACLE: dict[str, str] = {
     "lake_zorder_layout": f"""
         WITH base AS (
           SELECT (user_id & {(1 << ZORDER_BITS) - 1}) AS x,
@@ -271,17 +229,8 @@ ORACLE: dict[str, str | None] = {
     """,
     # Same semantics as velib_alerts; the round trip through the gold
     # snapshot must be lossless.
-    "lake_gold_snapshot": None,  # filled in _load() below to avoid dup SQL
+    "lake_gold_snapshot": VELIB_ORACLE["velib_alerts"],
 }
-
-
-def _load_oracle() -> None:
-    from velib_lakehouse_spark.operators.velib import ORACLE as VELIB_ORACLE
-
-    ORACLE["lake_gold_snapshot"] = VELIB_ORACLE["velib_alerts"]
-
-
-_load_oracle()
 
 QUERIES = {
     "lake_zorder_layout": lake_zorder_layout,
@@ -356,10 +305,11 @@ RETENTION_CUTOFF_DATE = "2024-01-15"
 
 
 def lake_retention_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K5 (retention delete) as an oracle-checked round trip: write a
-    date-partitioned events table, DROP partitions older than the
-    cutoff via ``retention_delete`` (directory-level, no file rewrite),
-    and read the survivors back as per-date counts.
+    """K5 (retention delete) as an oracle-checked round trip: commit a
+    date-partitioned events table to a log table, retire the partitions
+    older than the cutoff with the medallion's own ``retire_partitions``
+    (a logged delete + vacuum, no file rewrite), and read the survivors
+    back as per-date counts.
 
     The oracle is the time-filtered aggregate over the source — i.e.
     retention-by-partition-drop must be *exactly equivalent* to a
@@ -376,13 +326,11 @@ def lake_retention_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
     )
     out = tempfile.mkdtemp(prefix="lake_retention_")
-    write_partitioned(ev, out, "date", mode="overwrite")
-    retention_delete(out, "date", RETENTION_CUTOFF_DATE)
-    # explicit schema: an empty source writes no partition directories,
-    # and a schema-less read of the bare _SUCCESS dir cannot infer one
+    commit_stream_batch(out, "load", 0, ev, "date")
+    retire_partitions(out, RETENTION_CUTOFF_DATE)
     return (
-        spark.read.schema("event_id bigint, date string").parquet(out)
-        .groupBy(F.col("date").cast("string").alias("date"))
+        read_table(spark, out, "event_id bigint, date string")
+        .groupBy("date")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
 

@@ -1,146 +1,27 @@
-"""Streaming silver pipeline (reference src/assets/silver.py re-expressed).
+"""Streaming silver: the medallion's bronze -> silver stream (reference
+src/assets/silver.py re-expressed).
 
 The reference drains a Kafka topic with ``Trigger.AvailableNow`` into
 date-partitioned parquet with a checkpoint (reference
-src/assets/silver.py:29-70).  Here the source is abstracted: tests and
-the oracle harness use a *file* source (same Structured Streaming
-engine, deterministic, no broker needed — SURVEY.md §7 hard-part 4),
-and ``kafka_stream`` shows the production wiring.
+src/assets/silver.py:29-70).  Here the source is abstracted: tests, the
+pipeline and the benchmark use a *file* source (same Structured
+Streaming engine, deterministic, no broker needed — SURVEY.md §7
+hard-part 4), and ``kafka_stream`` shows the production wiring.
 
-Three judged behaviours:
-
-* ``streaming_silver_availablenow`` — parse + derive + partitioned
-  append sink + run-to-completion; restarting from the same checkpoint
-  reprocesses nothing (exactly-once bookkeeping, T1/T2/T4).
-* ``streaming_windowed_counts``     — event-time tumbling windows with a
-  watermark (the late-data upgrade the reference lacks, T6): append
-  mode emits exactly the windows whose end <= final watermark, which
-  the oracle reproduces arithmetically.
-* ``streaming_dedup``               — watermarked streaming aggregation
-  keeping the deterministic min-event_id row per (station, event-time):
-  the streaming dedup upgrade without dropDuplicates' arbitrary-winner
-  nondeterminism.
+``run_silver_stream`` drains the stream into the silver log table, one
+idempotent commit per micro-batch (sources/snapshots.py).  The registry's
+streaming showcase queries live in ``operators/streaming.py``.
 """
 
 from __future__ import annotations
 
-import atexit
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from velib_lakehouse_spark.catalog import load_table
-from velib_lakehouse_spark.session import apply_safe_confs, tuned_shuffle
-from velib_lakehouse_spark.sources.snapshots import commit_stream_batch, read_table
-
-WINDOW_SECONDS = 300
-WATERMARK_SECONDS = 600
-
-# format("memory") buffers every emitted row in DRIVER memory.  That is
-# fine for the judged harness (sf<=0.1 -> <=1e5 rows) and for tests,
-# and NEVER for production volume — the production path is
-# run_silver_stream's partitioned log-table commits.  The cap turns a
-# silent driver OOM into a loud error if a future registry query routes
-# real volume through a memory sink.
-MEMORY_SINK_MAX_ROWS = 10_000_000
-
-# Scratch dirs for the parquet drains below, removed at interpreter
-# exit (the drained DataFrame is lazy over these files, so they cannot
-# be deleted before the caller materializes it).
-_DRAIN_DIRS: list[str] = []
-
-
-def _cleanup_drain_dirs() -> None:  # pragma: no cover - exit hook
-    import shutil
-
-    for d in _DRAIN_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-atexit.register(_cleanup_drain_dirs)
-
-
-def _drain_parquet_sink(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    name: str,
-    shuffle_n: int | None = None,
-) -> DataFrame:
-    """Drain a bounded (availableNow) stream through a PARQUET sink in a
-    scratch dir and read it back — the scale-honest drain the judged
-    registry queries use (r3 VERDICT #3).
-
-    The memory sink buffers every emitted row in driver memory, which
-    misrepresented the streaming operators' own scaling: at 64x
-    replicated data the watermarked dedup read 70 s through the memory
-    sink while the stateful operator itself is linear (13.7 s via a
-    noop sink) — the delta was the driver materializing 6.4 M rows.
-    The parquet sink writes distributed, exactly like the production
-    path (run_silver_stream), so the drained timing IS the operator's
-    timing.  ``shuffle_n`` sizes the state-store count, same knob as
-    :func:`_drain_memory_sink` (see its docstring for the measured
-    rationale).
-    """
-    out_dir = tempfile.mkdtemp(prefix=f"drain_{name}_")
-    ckpt = os.path.join(out_dir, "_checkpoint")
-    data = os.path.join(out_dir, "data")
-    _DRAIN_DIRS.append(out_dir)
-    schema = stream_df.schema
-    with tuned_shuffle(spark, shuffle_n):
-        query = (
-            stream_df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", data)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    # Explicit schema: a zero-row drain leaves no part files to infer
-    # from (the _spark_metadata log alone), and it pins streaming/batch
-    # dtype agreement.
-    return spark.read.schema(schema).parquet(data)
-
-
-def _drain_memory_sink(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    name: str,
-    shuffle_n: int | None = None,
-):
-    """Drain a bounded (availableNow) stream into a named in-memory
-    table and return it; see MEMORY_SINK_MAX_ROWS for the size caveat.
-
-    ``shuffle_n`` sizes the state-store count for stateful queries
-    (shuffle partitions = state stores): every store pays a fixed
-    commit/snapshot cost per micro-batch, so heavily-stateful operators
-    (stream-stream joins keep FOUR stores per partition) want fewer,
-    fuller stores unless key volume demands otherwise — measured 2.4x
-    on the attribution join locally.  Results are partition-count
-    invariant (the operators are partition-order exact), so this is a
-    pure deployment knob.
-    """
-    with tuned_shuffle(spark, shuffle_n):
-        query = (
-            stream_df.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    out = spark.table(name)
-    n = out.count()
-    if n > MEMORY_SINK_MAX_ROWS:  # pragma: no cover - guard for misuse
-        raise RuntimeError(
-            f"memory sink {name} buffered {n} rows on the driver "
-            f"(cap {MEMORY_SINK_MAX_ROWS}); route volume through the "
-            "parquet sink instead"
-        )
-    return out
-
+from velib_lakehouse_spark.session import apply_safe_confs
+from velib_lakehouse_spark.sources.snapshots import commit_stream_batch
 
 # The bronze events schema, fixed as the reference fixes its Kafka
 # payload schema (reference src/assets/silver.py:16).  Streaming needs
@@ -200,54 +81,10 @@ def kafka_stream(spark: SparkSession, brokers: str, topic: str) -> DataFrame:
     )
 
 
-KAFKA_VALUE_SCHEMA = (
-    "STRUCT<event_id: BIGINT, station_code: BIGINT, event_type: STRING,"
-    " bikes_available: DOUBLE, last_reported_us: BIGINT>"
-)
-
-
-def kafka_shaped_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's exact bronze->silver parse (silver.py:40-42):
-    a Kafka-shaped frame (binary key, binary JSON value) decoded with
-    ``from_json(value.cast(string), schema)`` + star-expansion.
-
-    The Kafka frame is built from events (key = station code bytes,
-    value = JSON payload — mirroring sources/ingest.to_keyed_messages),
-    then parsed back; a lossless round trip proves the P1 path.
-    """
-    e = load_table(spark, sf_dir, "events")
-    kafka_shaped = e.select(
-        F.encode(F.col("user_id").cast("string"), "UTF-8").alias("key"),
-        F.encode(
-            F.to_json(
-                F.struct(
-                    F.col("event_id"),
-                    F.col("user_id").alias("station_code"),
-                    F.col("event_type"),
-                    F.col("value").alias("bikes_available"),
-                    F.unix_micros(F.col("ts").cast("timestamp")).alias(
-                        "last_reported_us"
-                    ),
-                )
-            ),
-            "UTF-8",
-        ).alias("value"),
-    )
-    parsed = kafka_shaped.select(
-        F.from_json(F.col("value").cast("string"), KAFKA_VALUE_SCHEMA).alias("data")
-    ).select("data.*")
-    return parsed.select(
-        "event_id",
-        "station_code",
-        "event_type",
-        "bikes_available",
-        F.expr("last_reported_us div 1000").alias("last_reported_ms"),
-    )
-
-
 def silver_transform(stream: DataFrame) -> DataFrame:
     """The silver parse+derive (reference silver.py:40-49): payload parse,
-    event-time and partition-date derivation."""
+    event-time and partition-date derivation.  Pure map-side; it takes a
+    streaming or a batch ``events`` frame alike."""
     return stream.select(
         F.col("event_id"),
         F.col("user_id").alias("station_code"),
@@ -304,1052 +141,3 @@ def run_silver_stream(
         "n_batches": len(progress),
         "sink_path": out_dir,
     }
-
-
-def streaming_silver_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry entry: run the streaming silver job end-to-end, read the
-    silver log table back, and surface the silver schema."""
-    out_dir = tempfile.mkdtemp(prefix="silver_out_")
-    ckpt = tempfile.mkdtemp(prefix="silver_ckpt_")
-    run_silver_stream(spark, sf_dir, out_dir, ckpt)
-    back = read_table(spark, out_dir, SILVER_SCHEMA)
-    return back.select(
-        "event_id",
-        "station_code",
-        "k",
-        "event_type",
-        "bikes_available",
-        F.unix_millis("last_reported").alias("last_reported_ms"),
-        "date",
-    )
-
-
-def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked tumbling-window aggregation, drained with AvailableNow.
-
-    Append mode emits exactly the windows closed by the final watermark
-    (max event time - WATERMARK_SECONDS) — reproduced arithmetically by
-    the oracle.
-    """
-    ev = _event_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", f"{WATERMARK_SECONDS} seconds")
-        .groupBy(
-            F.window("ts", f"{WINDOW_SECONDS} seconds").alias("win"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
-            .cast("double")
-            .alias("total_value"),
-        )
-    )
-    return _drain_parquet_sink(
-        spark, agg, "windowed_counts_sink",
-        shuffle_n=max(4, spark.sparkContext.defaultParallelism // 4),
-    ).select(
-        F.unix_millis("win.start").alias("window_start_ms"),
-        F.unix_millis("win.end").alias("window_end_ms"),
-        "event_type",
-        "n_events",
-        "total_value",
-    )
-
-
-def streaming_gold_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming -> gold via ``foreachBatch`` + atomic snapshot commit.
-
-    Each micro-batch runs arbitrary batch logic and commits a new
-    version of the gold snapshot table (sources/snapshots.py) — the
-    exactly-once upsert pattern Delta's streaming MERGE performs,
-    composed from this repo's own primitives.  With a file source and
-    AvailableNow the drain is a single batch, so the committed snapshot
-    equals the batch transform (which is what the oracle computes).
-    """
-    from velib_lakehouse_spark.sources.snapshots import (
-        read_snapshot,
-        write_snapshot,
-    )
-
-    table = tempfile.mkdtemp(prefix="gold_snap_")
-    ckpt = tempfile.mkdtemp(prefix="gold_snap_ckpt_")
-    ev = _event_stream(spark, sf_dir)
-    low = ev.filter(F.col("value") < 50).select(
-        "event_id",
-        F.col("user_id").alias("station_code"),
-        F.col("value").alias("bikes_available"),
-        F.unix_millis("ts").alias("last_reported_ms"),
-    )
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_snapshot(batch_df, table)
-
-    with tuned_shuffle(spark):
-        query = (
-            low.writeStream.foreachBatch(commit_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return read_snapshot(spark, table)
-
-
-def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful session windows in-stream: per-station sessions with a
-    30-minute inactivity gap, emitted as the watermark closes them.
-
-    Oracle-checked (round 3): append mode emits exactly the sessions
-    whose end (last event + gap) <= the final watermark (max(ts) -
-    delay), and session boundaries are gap-based islands (a new session
-    starts when ts - prev >= gap, since Spark's per-event window
-    [ts, ts+gap) is end-exclusive) — both reproduced arithmetically in
-    the DuckDB mirror at microsecond precision, the same convention
-    ``streaming_windowed_counts`` pinned.  tests/test_streaming.py
-    additionally checks agreement with the batch sessionization
-    operator.
-    """
-    ev = _event_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", f"{WATERMARK_SECONDS} seconds")
-        .groupBy(
-            F.session_window("ts", "1800 seconds").alias("sw"), "user_id"
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return _drain_parquet_sink(
-        spark, agg, "session_windows_sink",
-        shuffle_n=max(4, spark.sparkContext.defaultParallelism // 4),
-    ).select(
-        F.col("user_id").alias("station_code"),
-        F.unix_millis("sw.start").alias("session_start_ms"),
-        F.unix_millis("sw.end").alias("session_end_ms"),
-        "n_events",
-    )
-
-
-JOIN_WINDOW_SECONDS = 3600
-
-
-def streaming_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked stream-stream inner join: each purchase matched to the
-    clicks the same station/user emitted in the preceding hour —
-    the attribution-join family, previously missing from the streaming
-    surface (T6's join sibling).
-
-    Both sides carry a watermark and the join condition carries the
-    event-time range bound; together they let the engine expire join
-    state (a click older than the range + watermark can never match
-    again), which is what makes the operator runnable unbounded — state
-    is O(events per watermark horizon), not O(stream so far).  An inner
-    join emits each match in the micro-batch that completes it, so the
-    drained AvailableNow run (single batch — one source file) emits
-    exactly the batch range-join, which the oracle computes directly.
-    """
-    ev = _event_stream(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", f"{WATERMARK_SECONDS} seconds")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("value").alias("amount"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", f"{WATERMARK_SECONDS} seconds")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "p_user = c_user AND purchase_ts >= click_ts AND "
-            f"purchase_ts <= click_ts + interval {JOIN_WINDOW_SECONDS} seconds"
-        ),
-        "inner",
-    )
-    # stream-stream joins keep 4 state stores per shuffle partition;
-    # size the store count down so per-batch commit overhead doesn't
-    # dominate (see _drain_memory_sink docstring — measured 2.4x here)
-    return _drain_parquet_sink(
-        spark,
-        joined,
-        "stream_stream_join_sink",
-        shuffle_n=max(4, spark.sparkContext.defaultParallelism // 4),
-    ).select(
-        F.col("p_user").alias("station_code"),
-        "purchase_id",
-        "click_id",
-        "amount",
-        (F.unix_millis("purchase_ts") - F.unix_millis("click_ts")).alias(
-            "click_to_purchase_ms"
-        ),
-    )
-
-
-def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming dedup to a *deterministic* winner per (station,
-    event-time) under a watermark — the T6 upgrade (the reference dedups
-    only downstream in batch).
-
-    ``dropDuplicates`` keeps an arbitrary first-seen row, which diverges
-    across partitionings whenever true duplicates carry different
-    payloads; this uses a watermarked streaming aggregation keeping the
-    min-event_id row instead (min_by), so the result is a pure function
-    of the data.  Append mode emits exactly the groups closed by the
-    final watermark (ts < max(ts) - delay), which the oracle reproduces
-    arithmetically — same convention as ``streaming_windowed_counts``.
-    tests/test_streaming.py pins the winner on a crafted duplicate
-    fixture.
-    """
-    ev = _event_stream(spark, sf_dir)
-    deduped = (
-        ev.withWatermark("ts", f"{WATERMARK_SECONDS} seconds")
-        .groupBy("user_id", "ts")
-        .agg(
-            F.min("event_id").alias("event_id"),
-            F.min_by("value", "event_id").alias("value"),
-        )
-    )
-    return _drain_parquet_sink(
-        spark, deduped, "streaming_dedup_sink",
-        shuffle_n=max(4, spark.sparkContext.defaultParallelism // 4),
-    ).select(
-        "event_id",
-        F.col("user_id").alias("station_code"),
-        F.col("value").alias("bikes_available"),
-        F.unix_millis("ts").alias("last_reported_ms"),
-    )
-
-
-def streaming_stateful_enumerate(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Custom stateful operator (``applyInPandasWithState``): per-station
-    event enumeration with gap-to-previous-event, state = (events seen,
-    last event-time) carried across micro-batches.
-
-    This is the escape hatch the built-in operators don't cover —
-    arbitrary per-key sequential logic with explicit state — expressed
-    the Spark way: keys are hash-distributed, each executor runs the
-    Python function over Arrow batches for its keys only, and state
-    lives in the state store (RocksDB on a cluster), so 100 TB of
-    events costs one shuffle by key plus O(1) state per station.
-
-    Within a batch the function sorts its key's rows by (ts, event_id),
-    making the output a pure function of the data; the batch-window
-    oracle (row_number + lag) is the exact semantic mirror, which is
-    the point: custom stateful code should reduce to declarative
-    semantics wherever the two overlap, or it can't be tested.
-
-    Arrival-order contract (explicit): there is no watermark here, so
-    the row_number/lag oracle is matched only when micro-batches arrive
-    in global event-time order per key — true for the single-file
-    fixture and for ``maxFilesPerTrigger`` splits of a time-sorted
-    file, which is what the multi-batch test feeds it.  A later batch
-    containing *earlier* timestamps is late data by this operator's
-    definition; the state guard below keeps ``last_ts_us`` monotone
-    (max) so one late batch yields locally-negative gaps but cannot
-    corrupt the gap of every subsequent in-order batch.  Late-tolerant
-    enumeration belongs to the watermarked operators
-    (``streaming_windowed_counts``/``streaming_dedup``), not here.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    ev = _event_stream(spark, sf_dir, max_files_per_trigger).select(
-        "event_id", "ts", "user_id"
-    )
-
-    def enumerate_events(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        n_seen, last_us = state.get if state.exists else (0, None)
-        rows = pd.concat(list(pdf_iter), ignore_index=True)
-        rows["ts_us"] = rows["ts"].astype("int64") // (
-            1 if rows["ts"].dtype == "datetime64[us]" else 1000
-        )
-        rows = rows.sort_values(["ts_us", "event_id"], ignore_index=True)
-        prev_us = rows["ts_us"].shift(1)
-        if last_us is not None:
-            prev_us.iloc[0] = last_us
-        gap = ((rows["ts_us"] - prev_us) // 1_000_000).astype("Int64")
-        out = pd.DataFrame(
-            {
-                "station_code": user_id,
-                "event_id": rows["event_id"],
-                "ordinal": rows.index.to_series() + n_seen + 1,
-                "gap_s": gap,
-                "ts_ms": rows["ts_us"] // 1000,
-            }
-        )
-        batch_max_us = int(rows["ts_us"].iloc[-1])
-        if last_us is not None:
-            batch_max_us = max(batch_max_us, last_us)
-        state.update((n_seen + len(rows), batch_max_us))
-        yield out
-
-    enumerated = ev.groupBy("user_id").applyInPandasWithState(
-        enumerate_events,
-        outputStructType=(
-            "station_code bigint, event_id bigint, ordinal bigint,"
-            " gap_s bigint, ts_ms bigint"
-        ),
-        stateStructType="n_seen bigint, last_ts_us bigint",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return _drain_parquet_sink(spark, enumerated, "stateful_enumerate_sink")
-
-
-ORACLE: dict[str, str | None] = {
-    "streaming_stateful_enumerate": """
-        SELECT user_id AS station_code,
-               event_id,
-               CAST(row_number() OVER w AS BIGINT) AS ordinal,
-               (epoch_us(ts) - lag(epoch_us(ts)) OVER w) // 1000000 AS gap_s,
-               epoch_us(ts) // 1000 AS ts_ms
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """,
-    "streaming_silver_availablenow": """
-        SELECT event_id,
-               user_id AS station_code,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-               event_type,
-               value AS bikes_available,
-               epoch_ms(ts) AS last_reported_ms,
-               strftime(ts, '%Y-%m-%d') AS "date"
-        FROM events
-    """,
-    "streaming_windowed_counts": f"""
-        WITH b AS (
-          SELECT (epoch_ms(ts) // {WINDOW_SECONDS * 1000})
-                   * {WINDOW_SECONDS * 1000} AS window_start_ms,
-                 event_type, value
-          FROM events
-        ),
-        w AS (
-          SELECT window_start_ms,
-                 window_start_ms + {WINDOW_SECONDS * 1000} AS window_end_ms,
-                 event_type,
-                 count(*) AS n_events,
-                 CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE)
-                   AS total_value
-          FROM b GROUP BY 1, 2, 3
-        )
-        SELECT w.* FROM w
-        CROSS JOIN (SELECT max(epoch_ms(ts)) AS mx FROM events) m
-        WHERE w.window_end_ms <= m.mx - {WATERMARK_SECONDS * 1000}
-    """,
-    "kafka_shaped_roundtrip": """
-        SELECT event_id,
-               user_id AS station_code,
-               event_type,
-               value AS bikes_available,
-               epoch_us(ts) // 1000 AS last_reported_ms
-        FROM events
-    """,
-    "streaming_gold_foreachbatch": """
-        SELECT event_id,
-               user_id AS station_code,
-               value AS bikes_available,
-               epoch_ms(ts) AS last_reported_ms
-        FROM events
-        WHERE value < 50
-    """,
-    "streaming_session_windows": f"""
-        WITH e AS (
-          SELECT user_id, epoch_us(ts) AS us FROM events
-        ),
-        marks AS (
-          SELECT user_id, us,
-                 CASE WHEN lag(us) OVER w IS NULL
-                        OR us - lag(us) OVER w >= {1800 * 1_000_000}
-                      THEN 1 ELSE 0 END AS new_sess
-          FROM e
-          WINDOW w AS (PARTITION BY user_id ORDER BY us)
-        ),
-        sess AS (
-          SELECT user_id, us,
-                 SUM(new_sess) OVER (PARTITION BY user_id ORDER BY us
-                                     ROWS UNBOUNDED PRECEDING) AS sid
-          FROM marks
-        ),
-        agg AS (
-          SELECT user_id AS station_code,
-                 min(us) // 1000 AS session_start_ms,
-                 (max(us) + {1800 * 1_000_000}) // 1000 AS session_end_ms,
-                 max(us) + {1800 * 1_000_000} AS session_end_us,
-                 count(*) AS n_events
-          FROM sess GROUP BY user_id, sid
-        )
-        SELECT station_code, session_start_ms, session_end_ms, n_events
-        FROM agg
-        CROSS JOIN (SELECT max(epoch_us(ts)) AS mx FROM events) m
-        WHERE session_end_us <= m.mx - {WATERMARK_SECONDS * 1_000_000}
-    """,
-    "streaming_join_click_purchase": f"""
-        SELECT p.user_id AS station_code,
-               p.event_id AS purchase_id,
-               c.event_id AS click_id,
-               p.value AS amount,
-               epoch_ms(p.ts) - epoch_ms(c.ts) AS click_to_purchase_ms
-        FROM events p
-        JOIN events c
-          ON p.user_id = c.user_id
-         AND p.ts >= c.ts
-         AND p.ts <= c.ts + INTERVAL {JOIN_WINDOW_SECONDS} SECOND
-        WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-    """,
-    "streaming_dedup": f"""
-        WITH m AS (SELECT max(epoch_ms(ts)) AS mx FROM events),
-        dedup AS (
-          SELECT * FROM events
-          QUALIFY row_number() OVER (
-              PARTITION BY user_id, ts ORDER BY event_id) = 1
-        )
-        SELECT event_id,
-               user_id AS station_code,
-               value AS bikes_available,
-               epoch_ms(ts) AS last_reported_ms
-        FROM dedup CROSS JOIN m
-        WHERE epoch_ms(ts) < mx - {WATERMARK_SECONDS * 1000}
-    """,
-}
-
-QUERIES = {
-    "kafka_shaped_roundtrip": kafka_shaped_roundtrip,
-    "streaming_silver_availablenow": streaming_silver_availablenow,
-    "streaming_gold_foreachbatch": streaming_gold_foreachbatch,
-    "streaming_windowed_counts": streaming_windowed_counts,
-    "streaming_session_windows": streaming_session_windows,
-    "streaming_join_click_purchase": streaming_join_click_purchase,
-    "streaming_dedup": streaming_dedup,
-    "streaming_stateful_enumerate": streaming_stateful_enumerate,
-}
-
-
-def streaming_tws_user_stats(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Arbitrary stateful streaming via ``transformWithStateInPandas``
-    (SPARK-49564, the state-v2 API that supersedes
-    ``applyInPandasWithState``): per-user running totals carried in a
-    typed ``ValueState`` across micro-batches.
-
-    Why both APIs are covered: ``applyInPandasWithState``
-    (``streaming_stateful_enumerate``) is the stable v1 escape hatch;
-    this is the v2 shape — explicit ``StatefulProcessor`` lifecycle
-    (init/handleInputRows/close), named state variables fetched from a
-    handle, timers available — which is where custom stateful operators
-    land going forward.  Same scale posture as v1: keys are
-    hash-distributed, state is O(1) per user in the state store, one
-    shuffle by key per batch.
-
-    Emission contract: each batch emits one row per user seen in that
-    batch carrying the RUNNING totals (count, exact micro-unit value
-    sum, max event-time).  With the default single availableNow batch
-    the emitted table is exactly the per-user batch aggregate — the
-    DuckDB oracle; the multi-batch state-carry path asserts the final
-    per-user row equals the same aggregate (tests).  Sums are exact:
-    values quantized floor(v*1e4 + 0.5) to int64 BEFORE summing (the
-    2-decimal inputs are within 1 ULP of the grid, never at a half-way
-    point), so accumulation order cannot change the result.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    ev = _event_stream(spark, sf_dir, max_files_per_trigger).select(
-        "event_id", "ts", "user_id", "value"
-    )
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n bigint, sum_micro bigint, max_ts_us bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, sum_micro, max_ts_us = (
-                self._state.get() if self._state.exists() else (0, 0, None)
-            )
-            for pdf in rows:
-                ts_us = pdf["ts"].astype("int64") // (
-                    1 if pdf["ts"].dtype == "datetime64[us]" else 1000
-                )
-                micro = np.floor(
-                    pdf["value"].to_numpy() * 1e4 + 0.5
-                ).astype("int64")
-                n += len(pdf)
-                sum_micro += int(micro.sum())
-                batch_max = int(ts_us.max())
-                max_ts_us = (
-                    batch_max
-                    if max_ts_us is None
-                    else max(max_ts_us, batch_max)
-                )
-            self._state.update((n, sum_micro, max_ts_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value_micro": [sum_micro],
-                    "last_ts_ms": [max_ts_us // 1000],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    stats = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserStats(),
-        outputStructType=(
-            "user_id bigint, n_events bigint, sum_value_micro bigint,"
-            " last_ts_ms bigint"
-        ),
-        outputMode="append",
-        timeMode="none",
-    )
-    return _drain_parquet_sink(
-        spark,
-        stats,
-        "tws_user_stats_sink",
-        shuffle_n=max(4, spark.sparkContext.defaultParallelism // 4),
-    )
-
-
-def streaming_static_enrich(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Stream-STATIC join: the streaming side enriches against a batch
-    (static) dimension — the third join mode next to the watermarked
-    stream-stream join and the batch joins.  Spark plans it as a
-    map-side lookup per micro-batch (the static side broadcasts; no
-    state store involved, unlike stream-stream), which is how a stream
-    enriches against a slowly-changing dimension table at 100 TB: the
-    dim is re-resolved per batch, so a dim refresh between batches is
-    picked up without restarting the query.
-
-    The static dim here is derived from the same events table read as
-    a BATCH frame (user -> cohort bucket), so the oracle is pure SQL
-    over one table; production would read a real dim table.
-    """
-    ev = _event_stream(spark, sf_dir, max_files_per_trigger).select(
-        "event_id", "user_id", "value"
-    )
-    static_dim = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id")
-        .distinct()
-        .select(
-            "user_id", (F.col("user_id") % 5).cast("bigint").alias("cohort")
-        )
-    )
-    joined = ev.join(F.broadcast(static_dim), "user_id")
-    agg = joined.groupBy("cohort").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(
-            F.floor(F.col("value") * F.lit(1e4) + F.lit(0.5)).cast("bigint")
-        ).alias("sum_value_micro"),
-    )
-    # complete mode: an unwatermarked aggregate cannot append (no
-    # closed-window signal); the memory sink holds the current result
-    # table, overwritten per batch — fine for a cohort-sized aggregate
-    with tuned_shuffle(spark, max(4, spark.sparkContext.defaultParallelism // 4)):
-        query = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("static_enrich_sink")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table("static_enrich_sink")
-
-
-ORACLE["streaming_static_enrich"] = """
-    SELECT (user_id % 5) AS cohort,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT)
-             AS sum_value_micro
-    FROM events
-    GROUP BY 1
-"""
-QUERIES["streaming_static_enrich"] = streaming_static_enrich
-
-
-def tws_available() -> bool:
-    """``transformWithStateInPandas`` talks to the JVM state server over
-    a protobuf protocol; without ``google.protobuf`` the driver-side
-    Python runner crashes at query start (probed: STREAM_FAILED,
-    'cannot import google.protobuf').  This sandbox ships no protobuf
-    and installs are disallowed, so the operator registers only where
-    the protocol can actually run — the same honest gating as the
-    Delta attempt (DELTA_ATTEMPT.md)."""
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except (ImportError, ValueError):
-        return False
-
-
-if tws_available():  # pragma: no cover - sandbox lacks protobuf
-    ORACLE["streaming_tws_user_stats"] = """
-        SELECT user_id,
-               CAST(count(*) AS BIGINT) AS n_events,
-               CAST(SUM(CAST(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT)
-                 AS sum_value_micro,
-               epoch_us(max(ts)) // 1000 AS last_ts_ms
-        FROM events
-        GROUP BY user_id
-    """
-    QUERIES["streaming_tws_user_stats"] = streaming_tws_user_stats
-
-
-# ---- dropDuplicatesWithinWatermark -----------------------------------------
-
-DEDUP_WM_DELAY = "3650 days"  # judged run: horizon covers the fixture
-
-
-def streaming_dedup_within_watermark(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Watermark-TTL streaming dedup (``dropDuplicatesWithinWatermark``,
-    Spark 3.5+): keep the first arrival per key, and — unlike plain
-    ``dropDuplicates`` whose key state grows forever — expire each
-    key's state once the watermark passes its event time + delay.
-
-    That TTL is the 100 TB point: unbounded-stream dedup state becomes
-    O(keys per watermark horizon) instead of O(keys ever seen), which
-    is the difference between a dedup you can run for a year and one
-    that OOMs in a week.  Keys here are full projected rows
-    (user_id, event-time, event_type), so whichever physical row is
-    "first" the emitted payload is identical — the determinism
-    convention every dedup in this repo follows (arbitrary-winner
-    semantics diverge across partitionings and cannot be judged).
-
-    The judged run sets the delay beyond the fixture's time span, so
-    nothing expires mid-run and the drained result is exactly
-    ``SELECT DISTINCT`` over the projection (the oracle).  The
-    expiry-then-re-emit behavior with a short delay is pinned
-    separately in tests/test_streaming.py with a forced multi-batch
-    run — the semantics a fixed-horizon oracle cannot express.
-    """
-    ev = _event_stream(spark, sf_dir, max_files_per_trigger)
-    deduped = (
-        ev.select("user_id", "ts", "event_type")
-        .withWatermark("ts", DEDUP_WM_DELAY)
-        .dropDuplicatesWithinWatermark(["user_id", "ts", "event_type"])
-    )
-    return _drain_parquet_sink(
-        spark, deduped, "streaming_dedup_wm_sink",
-        shuffle_n=max(4, spark.sparkContext.defaultParallelism // 4),
-    ).select(
-        "user_id",
-        F.unix_millis("ts").alias("ts_ms"),
-        "event_type",
-    )
-
-
-ORACLE["streaming_dedup_within_watermark"] = """
-    SELECT DISTINCT user_id,
-           epoch_us(ts) // 1000 AS ts_ms,
-           event_type
-    FROM events
-"""
-QUERIES["streaming_dedup_within_watermark"] = streaming_dedup_within_watermark
-
-
-# ---- Sliding (hopping) windows: the overlap variant of T6 ----
-
-SLIDE_SECONDS = 300
-SLIDE_DUR_SECONDS = 600  # each event lands in DUR/SLIDE = 2 windows
-
-
-def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked SLIDING-window aggregation (hopping windows: 10 min
-    duration, 5 min hop) drained with AvailableNow — the overlap
-    variant `streaming_windowed_counts`' tumbling windows cannot
-    express (a rate chart that updates every 5 minutes over the last
-    10).  Each event contributes to exactly DUR/SLIDE = 2 windows;
-    append mode emits the windows closed by the final watermark.
-
-    The oracle reproduces Spark's epoch-aligned window assignment
-    arithmetically: an event at t belongs to start times
-    ``(t div slide - k) * slide`` for k in 0..DUR/SLIDE-1 (each start
-    is > t - DUR by construction when DUR = 2*slide), then applies the
-    same closed-window cutoff as the tumbling query.
-
-    Scale: state is bounded by (watermark horizon / slide) x key
-    cardinality window panes; the 2x per-event fan-out happens inside
-    the streaming agg's partial aggregation, not as a shuffle
-    multiplier.
-    """
-    ev = _event_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", f"{WATERMARK_SECONDS} seconds")
-        .groupBy(
-            F.window(
-                "ts",
-                f"{SLIDE_DUR_SECONDS} seconds",
-                f"{SLIDE_SECONDS} seconds",
-            ).alias("win"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
-            .cast("double")
-            .alias("total_value"),
-        )
-    )
-    return _drain_parquet_sink(
-        spark, agg, "sliding_counts_sink",
-        shuffle_n=max(4, spark.sparkContext.defaultParallelism // 4),
-    ).select(
-        F.unix_millis("win.start").alias("window_start_ms"),
-        F.unix_millis("win.end").alias("window_end_ms"),
-        "event_type",
-        "n_events",
-        "total_value",
-    )
-
-
-ORACLE["streaming_sliding_counts"] = f"""
-    WITH panes AS (
-      SELECT ((epoch_ms(ts) // {SLIDE_SECONDS * 1000}) - k.k)
-               * {SLIDE_SECONDS * 1000} AS window_start_ms,
-             event_type, value
-      FROM events
-      CROSS JOIN (SELECT unnest(generate_series(0,
-          {SLIDE_DUR_SECONDS // SLIDE_SECONDS - 1})) AS k) k
-    ),
-    w AS (
-      SELECT window_start_ms,
-             window_start_ms + {SLIDE_DUR_SECONDS * 1000} AS window_end_ms,
-             event_type,
-             count(*) AS n_events,
-             CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE)
-               AS total_value
-      FROM panes GROUP BY 1, 2, 3
-    )
-    SELECT w.* FROM w
-    CROSS JOIN (SELECT max(epoch_ms(ts)) AS mx FROM events) m
-    WHERE w.window_end_ms <= m.mx - {WATERMARK_SECONDS * 1000}
-"""
-QUERIES["streaming_sliding_counts"] = streaming_sliding_counts
-
-
-# ---- Watermarked stream-stream LEFT OUTER join ----
-
-# sentinel spacing past which all real-event join state must be final
-_LOJ_FLUSH_GAP_S = WATERMARK_SECONDS + JOIN_WINDOW_SECONDS + 60
-
-
-def _stage_ordered_files(spark: SparkSession, batches: list[DataFrame]) -> str:
-    """Write each frame as ONE parquet file into a scratch source dir
-    with strictly increasing mtimes, so a ``maxFilesPerTrigger=1``
-    file-source replays them as deterministic micro-batches in order
-    (the file source picks oldest-mtime first; the name is the
-    tiebreak).  Dir is cleaned up at interpreter exit."""
-    import glob as _glob
-    import shutil as _shutil
-    import time as _time
-
-    src_dir = tempfile.mkdtemp(prefix="staged_stream_src_")
-    _DRAIN_DIRS.append(src_dir)
-    t0 = _time.time() - 3600
-    for i, b in enumerate(batches):
-        stage = os.path.join(src_dir, f"_stage_{i}")
-        b.coalesce(1).write.parquet(stage)
-        part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(src_dir, f"b{i:03d}.parquet")
-        _shutil.move(part, dst)
-        _shutil.rmtree(stage)
-        os.utime(dst, (t0 + i, t0 + i))
-    return src_dir
-
-
-def streaming_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked stream-stream LEFT OUTER join: every purchase row is
-    emitted exactly once — matched rows as soon as a click pairs with
-    them, UNMATCHED rows null-padded only once the global watermark
-    proves no click can ever arrive for them.  This is the outer-join
-    tier of the streaming join family (inner:
-    ``streaming_join_click_purchase``; stream-static:
-    ``streaming_static_enrich``): the one that turns "no signal yet"
-    into a definite "no signal", which attribution and SLA pipelines
-    need.
-
-    Outer-join nulls emit only when the watermark PASSES the row's
-    match horizon, and the watermark used by micro-batch N is computed
-    from batch N-1 — so a single-batch drain would never emit them.
-    The query therefore stages a deterministic multi-batch replay
-    (``_stage_ordered_files``): [all real events] + two sentinel
-    batches ``_LOJ_FLUSH_GAP_S`` apart, whose event times push the
-    watermark past every real row on BOTH join sides (sentinels carry
-    both event types; watermark advancement is per-side and the join
-    uses the min).  Sentinels are keyed user_id = -1 and filtered from
-    the result; the oracle is the plain batch left join over real
-    events.  State stays O(watermark horizon) — the unbounded-run
-    property the watermark + range bound buy — and the drain is the
-    distributed parquet sink.
-    """
-    ev_batch = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    mx = ev_batch.agg(F.max("ts").alias("mx")).collect()[0]["mx"]
-    if mx is None:  # empty source: nothing to join, nothing to flush
-        return spark.createDataFrame(
-            [],
-            "station_code bigint, purchase_id bigint, click_id bigint,"
-            " amount double, matched bigint, click_to_purchase_ms bigint",
-        )
-    sentinels = []
-    for r in (1, 2):
-        sentinels.append(
-            spark.createDataFrame(
-                [
-                    (-(2 * r), "click"),
-                    (-(2 * r + 1), "purchase"),
-                ],
-                "event_id bigint, event_type string",
-            ).select(
-                "event_id",
-                (
-                    F.lit(mx).cast("timestamp")
-                    + F.expr(f"interval {r * _LOJ_FLUSH_GAP_S} seconds")
-                ).alias("ts"),
-                F.lit(-1).cast("bigint").alias("user_id"),
-                "event_type",
-                F.lit(0.0).alias("value"),
-            )
-        )
-    src_dir = _stage_ordered_files(
-        spark, [ev_batch] + [s.select(*ev_batch.columns) for s in sentinels]
-    )
-    stream = (
-        spark.readStream.schema(ev_batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", f"{WATERMARK_SECONDS} seconds")
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("value").alias("amount"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", f"{WATERMARK_SECONDS} seconds")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "p_user = c_user AND purchase_ts >= click_ts AND "
-            f"purchase_ts <= click_ts + interval {JOIN_WINDOW_SECONDS} seconds"
-        ),
-        "left_outer",
-    )
-    return (
-        _drain_parquet_sink(
-            spark,
-            joined,
-            "stream_stream_loj_sink",
-            # dp//8: a stream-stream join keeps FOUR state stores per
-            # partition per side, and every store pays a fixed commit +
-            # snapshot cost PER MICRO-BATCH (this query replays three).
-            # Store count should track key volume, not core count; the
-            # r10 A/B (same session, min-of-2) read 7.9 s at dp//4=8
-            # stores vs 5.8 s at dp//8=4 with identical output.
-            shuffle_n=max(4, spark.sparkContext.defaultParallelism // 8),
-        )
-        .filter(F.col("p_user") >= 0)
-        .select(
-            F.col("p_user").alias("station_code"),
-            "purchase_id",
-            "click_id",
-            "amount",
-            F.col("click_id").isNotNull().cast("bigint").alias("matched"),
-            (F.unix_millis("purchase_ts") - F.unix_millis("click_ts")).alias(
-                "click_to_purchase_ms"
-            ),
-        )
-    )
-
-
-ORACLE["streaming_join_left_outer"] = f"""
-    WITH clicks AS (
-      SELECT event_id AS click_id, user_id AS c_user, ts AS click_ts
-      FROM events WHERE event_type = 'click'
-    ),
-    purchases AS (
-      SELECT event_id AS purchase_id, user_id AS p_user, value AS amount,
-             ts AS purchase_ts
-      FROM events WHERE event_type = 'purchase'
-    )
-    SELECT p.p_user AS station_code,
-           p.purchase_id,
-           c.click_id,
-           p.amount,
-           CAST(c.click_id IS NOT NULL AS BIGINT) AS matched,
-           epoch_ms(p.purchase_ts) - epoch_ms(c.click_ts)
-             AS click_to_purchase_ms
-    FROM purchases p LEFT JOIN clicks c
-      ON p.p_user = c.c_user
-     AND p.purchase_ts >= c.click_ts
-     AND p.purchase_ts <= c.click_ts + INTERVAL {JOIN_WINDOW_SECONDS} SECONDS
-"""
-QUERIES["streaming_join_left_outer"] = streaming_join_left_outer
-
-
-# ---- streaming writes through the transaction log (r9 VERDICT #2) -----------
-
-TXN_SINK_APP_ID = "silver_txn_sink"
-TXN_SINK_N_FILES = 3
-TXN_SINK_SCHEMA = "event_id bigint, event_type string, value double"
-
-
-def streaming_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming micro-batches committed through the snapshot
-    TRANSACTION LOG with (appId, batchId) idempotence — Delta's ``txn``
-    action welded onto the streaming sink, so stream and batch writers
-    share one table safely (``run_silver_stream`` commits the same
-    way; the reference's file sink, src/assets/silver.py:55-70, cannot
-    coordinate with a concurrent compactor/deleter).
-
-    The audited interleave, driven inline (the
-    ``snapshot_concurrent_commit`` style):
-
-    * events split into ``TXN_SINK_N_FILES`` files; a file-source
-      stream with ``maxFilesPerTrigger=1`` drains them as that many
-      micro-batches, each committed to the log as a blind append whose
-      entry records ``stream_txn = (app_id, batch_id)`` and the REAL
-      partition domain it touched;
-    * an injected crash fires in batch 1 AFTER the log commit but
-      BEFORE Spark records the batch in its own checkpoint — exactly
-      the torn window where a log-less sink double-writes;
-    * the restarted query (same checkpoint) replays batch 1 with the
-      same batch id; ``commit_stream_batch`` sees the app's high-water
-      mark and drops it — the replay is COUNTED but commits nothing —
-      then batch 2 commits normally.
-
-    Output: per-event_type counts / id-sums / value-sums read THROUGH
-    the log, plus the log-derived commit and replay counters.  The
-    values only match the oracle (a plain batch aggregate over events)
-    if every event landed EXACTLY once — a double-committed replay
-    inflates every aggregate and the commit count.
-
-    Scale shape: each micro-batch is one partitioned write + one O(1)
-    CAS commit (no driver loop, validation reads the tiny JSON log);
-    idempotence state is one integer per app, folded into log
-    checkpoints so retention cannot reopen the window.
-    """
-    from velib_lakehouse_spark.sources import snapshots as snap
-
-    table = tempfile.mkdtemp(prefix="txn_sink_table_")
-    src = tempfile.mkdtemp(prefix="txn_sink_src_")
-    ckpt = tempfile.mkdtemp(prefix="txn_sink_ckpt_")
-    _DRAIN_DIRS.extend([table, src, ckpt])
-
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    if not events.limit(1).count():
-        # empty-input hardening: no files drained means no batches, no
-        # commits, and nothing for the crash/replay audit to assert on
-        return spark.createDataFrame(
-            [],
-            "event_type string, n_events bigint, id_sum bigint,"
-            " total_value double, n_commits bigint, n_replays_skipped bigint",
-        )
-    events.repartition(TXN_SINK_N_FILES).write.mode("overwrite").parquet(
-        os.path.join(src, "events.parquet")
-    )
-
-    state = {"replays_skipped": 0, "inject_crash": True}
-
-    def commit_batch(bdf: DataFrame, batch_id: int) -> None:
-        out = bdf.select("event_id", "event_type", "value")
-        entry = snap.commit_stream_batch(
-            table, TXN_SINK_APP_ID, batch_id, out, "event_type"
-        )
-        if entry is None:
-            state["replays_skipped"] += 1
-        if batch_id == 1 and state["inject_crash"]:
-            state["inject_crash"] = False
-            raise RuntimeError(
-                "injected crash: after log commit, before spark checkpoint"
-            )
-
-    def run_once() -> None:
-        stream = _event_stream(spark, src, max_files_per_trigger=1)
-        query = (
-            stream.writeStream.foreachBatch(commit_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-
-    try:
-        run_once()
-        raise AssertionError("the injected crash must abort the first run")
-    except Exception as e:  # noqa: BLE001 - StreamingQueryException wrapper
-        if "injected crash" not in str(e):
-            raise
-    run_once()  # restart from the same checkpoint: replay + finish
-
-    commits = snap.read_commits(table)
-    batch_ids = sorted(c["stream_txn"]["batch_id"] for c in commits)
-    assert batch_ids == list(range(TXN_SINK_N_FILES)), batch_ids
-    assert state["replays_skipped"] == 1, state
-
-    final = snap.read_table(spark, table, TXN_SINK_SCHEMA)
-    return final.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("event_id").alias("id_sum"),
-        F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
-        .cast("double")
-        .alias("total_value"),
-    ).select(
-        "event_type",
-        "n_events",
-        "id_sum",
-        "total_value",
-        F.lit(len(commits)).cast("bigint").alias("n_commits"),
-        F.lit(state["replays_skipped"]).cast("bigint").alias(
-            "n_replays_skipped"
-        ),
-    )
-
-
-ORACLE["streaming_txn_sink"] = f"""
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(event_id) AS BIGINT) AS id_sum,
-           CAST(round(sum(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE)
-             AS total_value,
-           CAST({TXN_SINK_N_FILES} AS BIGINT) AS n_commits,
-           CAST(1 AS BIGINT) AS n_replays_skipped
-    FROM events
-    GROUP BY event_type
-"""
-QUERIES["streaming_txn_sink"] = streaming_txn_sink
