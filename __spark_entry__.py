@@ -25,8 +25,9 @@ from velib_lakehouse_spark import registry  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
 
-    The serving sparkline query (reference src/api.py:37-84): semi-join
-    targeted stations, top-5-recent window, ordered list aggregation.
+    The serving sparkline query (reference src/api.py:37-84): one
+    per-station pass (top-5-recent window and ordered list aggregation on
+    one shuffle), filtered to the targeted stations.
     """
     return registry.QUERIES["velib_sparkline"](spark, "/root/testdata/sf0.001")
 

@@ -129,3 +129,11 @@ def test_empty_input_yields_empty_output(spark, empty_sf_dir, name):
 def test_empty_input_yields_defined_aggregate(spark, empty_sf_dir, name):
     rows = registry.QUERIES[name](spark, empty_sf_dir).collect()
     assert len(rows) == 1
+
+
+def test_empty_health_counts_zero(spark, empty_sf_dir):
+    """The station roll-up keeps the empty-lake answer: no events and no
+    active stations, not NULLs."""
+    (row,) = registry.QUERIES["velib_health"](spark, empty_sf_dir).collect()
+    assert row.n_events == 0
+    assert row.active_stations == 0

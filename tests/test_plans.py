@@ -35,13 +35,17 @@ def test_semi_and_anti_join_strategies(spark):
     assert "LeftAnti" in anti
 
 
-def test_sparkline_semi_join_stays_broadcast(spark):
-    """The target-station semi-join side is a distinct-station list —
-    tiny at any data scale — and must stay broadcast, never degrade to a
-    shuffled SortMergeJoin as the events side grows."""
+def test_sparkline_is_one_station_pass(spark):
+    """``velib_sparkline`` is a projection of ``station_summary``: one
+    ``events`` scan and one Exchange, hashed on the station, feeding
+    both the ``row_number`` window and the ``groupBy``, with no join of
+    any kind (so no shuffled SortMergeJoin as ``events`` grows)."""
     plan = _plan(registry.QUERIES["velib_sparkline"](spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    assert "SortMergeJoin" not in plan
+    assert plan.count("Exchange") == 1
+    assert "Exchange hashpartitioning(user_id#" in plan
+    assert "Join" not in plan and "CartesianProduct" not in plan
+    assert plan.count("FileScan") == 1
+    assert "/events.parquet" in plan
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark):

@@ -264,38 +264,47 @@ def test_compaction_reduces_files_and_preserves_checksums(spark):
     assert any(r["n_files_after"] < r["n_files_before"] for r in rows)
 
 
-def test_compaction_physical_file_count_matches_audit(spark):
+def _compacted_dir(spark, monkeypatch) -> tuple[list, str]:
+    """Run ``compaction_execute``; return its rows and the compacted
+    output directory, recorded as it is made through ``scratch_dir``."""
+    from velib_lakehouse_spark.sources import lake
+
+    made = []
+    scratch_dir = lake.scratch_dir
+
+    def recording(prefix):
+        made.append(scratch_dir(prefix))
+        return made[-1]
+
+    monkeypatch.setattr(lake, "scratch_dir", recording)
+    rows = registry.QUERIES["compaction_execute"](spark, SF_DIR).collect()
+    out = [d for d in made if "compact_out_" in d]
+    assert out, "compacted dir not made through scratch_dir"
+    return rows, out[-1]
+
+
+def test_compaction_physical_file_count_matches_audit(spark, monkeypatch):
     """One physical parquet file per (date, bin) — the writer keys the
     shuffle by exactly the partition columns, so the audited
     n_files_after equals what is actually on disk."""
     import glob
     import os
 
-    from velib_lakehouse_spark.sources import lake
-
-    before = set(lake._BACKFILL_DIRS)
-    rows = registry.QUERIES["compaction_execute"](spark, SF_DIR).collect()
-    new_dirs = [d for d in lake._BACKFILL_DIRS if d not in before]
-    out = [d for d in new_dirs if "compact_out_" in d]
-    assert out, "compacted scratch dir not registered for cleanup"
+    rows, out = _compacted_dir(spark, monkeypatch)
     per_date: dict[str, int] = {}
-    for f in glob.glob(os.path.join(out[-1], "date=*", "bin_id=*", "*.parquet")):
+    for f in glob.glob(os.path.join(out, "date=*", "bin_id=*", "*.parquet")):
         date = os.path.basename(os.path.dirname(os.path.dirname(f))).split("=")[1]
         per_date[date] = per_date.get(date, 0) + 1
     audited = {r["date"]: r["n_files_after"] for r in rows}
     assert per_date == audited
 
 
-def test_compaction_drops_all_deleted_rows(spark):
+def test_compaction_drops_all_deleted_rows(spark, monkeypatch):
     """No position-deleted or equality-deleted row may survive into the
     compacted files (delete-file state is folded, not copied)."""
     from velib_lakehouse_spark.sources.lake import MOR_EQ_MOD
-    from velib_lakehouse_spark.sources import lake
 
-    before = set(lake._BACKFILL_DIRS)
-    registry.QUERIES["compaction_execute"](spark, SF_DIR).collect()
-    new_dirs = [d for d in lake._BACKFILL_DIRS if d not in before]
-    out = [d for d in new_dirs if "compact_out_" in d][-1]
+    _, out = _compacted_dir(spark, monkeypatch)
     compacted = spark.read.parquet(out)
     assert compacted.filter(F.col("event_type") == "error").count() == 0
     assert compacted.filter(F.col("user_id") % MOR_EQ_MOD == 0).count() == 0

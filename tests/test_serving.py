@@ -15,6 +15,7 @@ import pytest
 
 from velib_lakehouse_spark import serving
 from velib_lakehouse_spark.catalog import TABLES
+from velib_lakehouse_spark.operators import velib
 from velib_lakehouse_spark.registry import ORACLE
 from tests.conftest import SF_DIR, SF_DIR_MED
 from tests.oracle_harness import run_oracle
@@ -75,6 +76,31 @@ def test_served_payloads_equal_oracle(spark, sf_dir):
     got, want = _served(spark, sf_dir), _expected(sf_dir)
     assert len(got["stations"]) == len(want["stations"]) > 0
     assert got == want  # total_value compared exactly
+
+
+def test_cache_miss_is_one_events_pass(spark, monkeypatch):
+    """A miss collects one per-station summary: one ``events`` load and
+    at most 6 Spark jobs for both payloads (18 jobs and 3 loads when each
+    serving query ran on its own)."""
+    loads = []
+    load_table = velib.load_table
+
+    def counted(spark, sf_dir, name):
+        loads.append(name)
+        return load_table(spark, sf_dir, name)
+
+    monkeypatch.setattr(velib, "load_table", counted)
+    serving._CACHE.pop(os.path.abspath(SF_DIR), None)
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("serving-miss", "cache miss")
+        serving.critical_alerts_payload(spark, SF_DIR)
+        serving.pipeline_health_payload(spark, SF_DIR)
+        jobs = sc.statusTracker().getJobIdsForGroup("serving-miss")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert loads.count("events") == 1
+    assert 0 < len(jobs) <= 6
 
 
 def test_cache_hit_runs_no_spark_job(spark):
@@ -152,6 +178,30 @@ def test_cache_follows_landed_files(spark, lake):
     assert list(serving._CACHE).count(os.path.abspath(root)) == 1
 
 
+def test_hit_sends_the_stored_body(spark, lake, monkeypatch):
+    """A hit writes the body encoded with the lake version: the bytes are
+    the payload's JSON, and no request encodes it again."""
+    root, _ = lake
+    server = serving.serve(spark, root)
+    port = server.server_address[1]
+    try:
+        _get(port, "/alerts/critical")
+        encoded = []
+        dumps = json.dumps
+        monkeypatch.setattr(json, "dumps", lambda *a, **kw: encoded.append(1) or dumps(*a, **kw))
+        for route in ("/alerts/critical", "/health/pipeline", "/alerts/critical"):
+            url = f"http://127.0.0.1:{port}{route}"
+            with urllib.request.urlopen(url, timeout=120) as r:
+                body = r.read()
+            version = serving._CACHE[os.path.abspath(root)]
+            assert r.headers["ETag"] == version.etag
+            assert body == dumps(version.payloads[route]).encode()
+        assert encoded == []
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
 def test_failed_computation_is_not_cached(spark, lake, monkeypatch):
     root, rest = lake
     serving.pipeline_health_payload(spark, root)
@@ -160,7 +210,7 @@ def test_failed_computation_is_not_cached(spark, lake, monkeypatch):
     def broken(*args, **kwargs):
         raise RuntimeError("engine down")
 
-    monkeypatch.setattr(serving, "sparkline", broken)
+    monkeypatch.setattr(velib, "station_summary", broken)
     with pytest.raises(RuntimeError, match="engine down"):
         serving.pipeline_health_payload(spark, root)
     assert os.path.abspath(root) not in serving._CACHE

@@ -10,10 +10,13 @@ route functions of ``serving.ROUTES`` once per round:
   computes both payloads from the lake;
 * hit: the cache is left alone, so only the first round computes.
 
-For each mode it prints one JSON line with the median of the last half of
-the rounds (the first ones include the JIT warm-up): Spark jobs, calls to
-``load_table("events")``, wall seconds, and CPU seconds of this process
-and its descendants (the JVM and its Python workers).
+It prints the first cold round on its own JSON line (``"mode": "first"``):
+that is the first miss in a fresh JVM, the one ``api_reads`` ``setup_s``
+includes.  Then, for each mode, one JSON line with the median of the last
+half of the rounds (the first ones include the JIT warm-up).  Each line
+holds Spark jobs, calls to ``load_table("events")``, wall seconds, and
+CPU seconds of this process and its descendants (the JVM and its Python
+workers).
 """
 
 from __future__ import annotations
@@ -48,7 +51,7 @@ def _count_event_loads(loads: list[str]) -> None:
     velib.load_table = load_table
 
 
-def measure(spark, lake: str, rounds: int, cold: bool, loads: list[str]) -> dict:
+def measure(spark, lake: str, rounds: int, cold: bool, loads: list[str]) -> list[dict]:
     sc = spark.sparkContext
     samples = []
     for i in range(rounds):
@@ -68,10 +71,14 @@ def measure(spark, lake: str, rounds: int, cold: bool, loads: list[str]) -> dict
                 "events_loads": loads.count("events"),
             }
         )
-    tail = samples[rounds // 2 :]
+    return samples
+
+
+def median_line(samples: list[dict], mode: str) -> dict:
+    tail = samples[len(samples) // 2 :]
     return {
-        "mode": "cold" if cold else "hit",
-        "rounds": rounds,
+        "mode": mode,
+        "rounds": len(samples),
         **{k: statistics.median(s[k] for s in tail) for k in samples[0]},
     }
 
@@ -90,8 +97,11 @@ def main() -> int:
         _count_event_loads(loads)
         spark = bench.start_session()
         try:
-            for cold in (True, False):
-                print(json.dumps(measure(spark, lake, args.rounds, cold, loads)))
+            cold = measure(spark, lake, args.rounds, True, loads)
+            print(json.dumps({"mode": "first", **cold[0]}))
+            print(json.dumps(median_line(cold, "cold")))
+            hit = measure(spark, lake, args.rounds, False, loads)
+            print(json.dumps(median_line(hit, "hit")))
         finally:
             bench.stop_session(spark)
     finally:

@@ -19,11 +19,19 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def ordered_collect(value: Column, *sort_keys: Column) -> Column:
-    """collect ``value`` ordered by ``sort_keys`` (ascending, nulls last)."""
+def ordered_collect(
+    value: Column, *sort_keys: Column, where: Column | None = None
+) -> Column:
+    """collect ``value`` ordered by ``sort_keys`` (ascending, nulls last).
+
+    With ``where``, only the rows it holds for are collected: the others
+    become null structs, which ``collect_list`` skips.
+    """
     struct = F.struct(
         *[k.alias(f"k{i}") for i, k in enumerate(sort_keys)], value.alias("v")
     )
+    if where is not None:
+        struct = F.when(where, struct)
     return F.transform(F.array_sort(F.collect_list(struct)), lambda x: x["v"])
 
 

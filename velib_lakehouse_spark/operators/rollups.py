@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from velib_lakehouse_spark.catalog import load_table
+from velib_lakehouse_spark.tempdirs import scratch_dir
 
 
 def hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -635,7 +636,6 @@ def ivm_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the date filter reaches the parquet scan), one merge shuffle on
     the view key.  Money stays integer cents end to end.
     """
-    import tempfile
 
     from velib_lakehouse_spark.functions.exact import cents
 
@@ -650,7 +650,7 @@ def ivm_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cents(F.col("o_totalprice"))).alias("revenue_cents"),
         )
 
-    view_path = tempfile.mkdtemp(prefix="ivm_view_")
+    view_path = scratch_dir("ivm_view_")
     rollup(None, IVM_CUT_BASE).write.mode("overwrite").parquet(view_path)
     stored = spark.read.parquet(view_path)
     delta = rollup(IVM_CUT_BASE, IVM_CUT_NEW)

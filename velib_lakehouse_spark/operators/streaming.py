@@ -23,9 +23,7 @@ in ``streaming/silver.py``; these demos exercise the rest of the engine:
 
 from __future__ import annotations
 
-import atexit
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,24 +37,10 @@ from velib_lakehouse_spark.streaming.silver import (
     _event_stream,
     run_silver_stream,
 )
+from velib_lakehouse_spark.tempdirs import scratch_dir
 
 WINDOW_SECONDS = 300
 WATERMARK_SECONDS = 600
-
-# Scratch dirs for the parquet drains below, removed at interpreter
-# exit (the drained DataFrame is lazy over these files, so they cannot
-# be deleted before the caller materializes it).
-_DRAIN_DIRS: list[str] = []
-
-
-def _cleanup_drain_dirs() -> None:  # pragma: no cover - exit hook
-    import shutil
-
-    for d in _DRAIN_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-atexit.register(_cleanup_drain_dirs)
 
 
 def _drain_parquet_sink(
@@ -87,10 +71,9 @@ def _drain_parquet_sink(
     invariant (the operators are partition-order exact), so this is a
     pure deployment knob.
     """
-    out_dir = tempfile.mkdtemp(prefix=f"drain_{name}_")
+    out_dir = scratch_dir(f"drain_{name}_")
     ckpt = os.path.join(out_dir, "_checkpoint")
     data = os.path.join(out_dir, "data")
-    _DRAIN_DIRS.append(out_dir)
     schema = stream_df.schema
     with tuned_shuffle(spark, shuffle_n):
         query = (
@@ -156,8 +139,8 @@ def kafka_shaped_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_silver_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: run the streaming silver job end-to-end, read the
     silver log table back, and surface the silver schema."""
-    out_dir = tempfile.mkdtemp(prefix="silver_out_")
-    ckpt = tempfile.mkdtemp(prefix="silver_ckpt_")
+    out_dir = scratch_dir("silver_out_")
+    ckpt = scratch_dir("silver_ckpt_")
     run_silver_stream(spark, sf_dir, out_dir, ckpt)
     back = read_table(spark, out_dir, SILVER_SCHEMA)
     return back.select(
@@ -218,8 +201,8 @@ def streaming_gold_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="gold_snap_")
-    ckpt = tempfile.mkdtemp(prefix="gold_snap_ckpt_")
+    table = scratch_dir("gold_snap_")
+    ckpt = scratch_dir("gold_snap_ckpt_")
     ev = _event_stream(spark, sf_dir)
     low = ev.filter(F.col("value") < 50).select(
         "event_id",
@@ -903,8 +886,7 @@ def _stage_ordered_files(spark: SparkSession, batches: list[DataFrame]) -> str:
     import shutil as _shutil
     import time as _time
 
-    src_dir = tempfile.mkdtemp(prefix="staged_stream_src_")
-    _DRAIN_DIRS.append(src_dir)
+    src_dir = scratch_dir("staged_stream_src_")
     t0 = _time.time() - 3600
     for i, b in enumerate(batches):
         stage = os.path.join(src_dir, f"_stage_{i}")
@@ -1103,10 +1085,9 @@ def streaming_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from velib_lakehouse_spark.sources import snapshots as snap
 
-    table = tempfile.mkdtemp(prefix="txn_sink_table_")
-    src = tempfile.mkdtemp(prefix="txn_sink_src_")
-    ckpt = tempfile.mkdtemp(prefix="txn_sink_ckpt_")
-    _DRAIN_DIRS.extend([table, src, ckpt])
+    table = scratch_dir("txn_sink_table_")
+    src = scratch_dir("txn_sink_src_")
+    ckpt = scratch_dir("txn_sink_ckpt_")
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"

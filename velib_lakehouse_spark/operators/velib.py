@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from velib_lakehouse_spark.catalog import load_table
 from velib_lakehouse_spark.functions.collections import csv_scaled, ordered_collect
-from velib_lakehouse_spark.functions.exact import dec_sum
+from velib_lakehouse_spark.functions.exact import DEC
 from velib_lakehouse_spark.functions.timeseries import latest_per_key, net_flow
 # the alert thresholds are the medallion's; they stay importable from here
 from velib_lakehouse_spark.pipeline import ALERT_MAX, CRITICAL_MAX, build_history
@@ -120,32 +120,56 @@ def alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sparkline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serving query Q1 ``/alerts/critical`` (reference src/api.py:37-84).
+def station_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row per station: everything the two serving routes read.
 
-    target stations (latest value <= threshold) -> left-semi join of
-    history onto targets (J2) -> top-5-recent per station (W2) ->
-    ordered list-agg of readings by time asc (A5, the LIST(ORDER BY)
-    idiom) -> current value from rank 1.  The semi-join side is tiny
-    (distinct stations) and broadcast; one window shuffle total.
+    One ``events`` scan, one ``row_number`` window on the station ordered
+    newest first (``ts DESC, event_id DESC``) and one ``groupBy`` on the
+    same key, so the plan has a single Exchange.  Columns:
+
+    * ``current_bikes``: the rank-1 (latest) value;
+    * ``sparkline_data``: the rank <= 5 readings in time order (W2 + A5,
+      the ``LIST(ORDER BY)`` idiom);
+    * ``value_sum``: the exact ``DECIMAL(18,4)`` sum of the values;
+    * ``n_events`` and ``latest_sync_ms``: the count and the newest
+      ``ts`` in epoch millis.
+
+    :func:`sparkline`, :func:`alert_bands` and :func:`health` are
+    projections of it, and ``serving`` folds both payloads from its
+    collected rows (at most one per station).
     """
     e = load_table(spark, sf_dir, "events")
-    latest = latest_per_key(e, "user_id", "ts", "event_id")
-    targets = latest.filter(F.col("value") <= TARGET_MAX).select("user_id")
-
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
-    ranked = (
-        e.join(F.broadcast(targets), "user_id", "left_semi")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+    return (
+        e.withColumn("rank", F.row_number().over(w))
+        .groupBy(F.col("user_id").alias("station_code"))
+        .agg(
+            F.max(F.when(F.col("rank") == 1, F.col("value"))).alias("current_bikes"),
+            ordered_collect(
+                F.col("value"),
+                F.unix_millis("ts"),
+                F.col("event_id"),
+                where=F.col("rank") <= 5,
+            ).alias("sparkline_data"),
+            F.sum(F.col("value").cast(DEC)).alias("value_sum"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.max(F.unix_millis("ts")).alias("latest_sync_ms"),
+        )
     )
-    return ranked.groupBy(F.col("user_id").alias("station_code")).agg(
-        ordered_collect(
-            F.col("value"), F.unix_millis("ts"), F.col("event_id")
-        ).alias("sparkline_data"),
-        F.max(F.when(F.col("rank") == 1, F.col("value"))).alias("current_bikes"),
+
+
+def sparkline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Serving query Q1 ``/alerts/critical`` (reference src/api.py:37-84):
+    the stations whose latest value is <= ``TARGET_MAX``, each with its
+    last 5 readings in time order and its current value.  A projection
+    of :func:`station_summary`; a NULL station never matches a target,
+    as in the reference's ``IN`` filter."""
+    return (
+        station_summary(spark, sf_dir)
+        .filter(F.col("station_code").isNotNull() & (F.col("current_bikes") <= TARGET_MAX))
+        .select("station_code", "sparkline_data", "current_bikes")
     )
 
 
@@ -165,14 +189,14 @@ def sparkline_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def alert_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The driver-side count-if bands folded into the engine (A7;
-    reference src/api.py:73-74 computes them in Python post-hoc)."""
-    e = load_table(spark, sf_dir, "events")
-    latest = latest_per_key(e, "user_id", "ts", "event_id")
-    return latest.agg(
-        F.count_if(F.col("value") < CRITICAL_MAX).alias("critical_count"),
-        F.count_if(
-            (F.col("value") >= CRITICAL_MAX) & (F.col("value") < ALERT_MAX)
-        ).alias("warning_count"),
+    reference src/api.py:73-74 computes them in Python post-hoc), over
+    each station's latest value in :func:`station_summary`."""
+    latest = F.col("current_bikes")
+    return station_summary(spark, sf_dir).agg(
+        F.count_if(latest < CRITICAL_MAX).alias("critical_count"),
+        F.count_if((latest >= CRITICAL_MAX) & (latest < ALERT_MAX)).alias(
+            "warning_count"
+        ),
         F.count(F.lit(1)).alias("total_stations"),
     )
 
@@ -182,17 +206,17 @@ def health(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Two single-row aggregate CTEs (A8) cross-joined (J3): expected
     station count from the dimension (customer plays the GBFS reference
-    doc) vs. observed activity from events; ``zombie_stations`` is the
-    data-loss audit (reference src/api.py:121).
+    doc) vs. observed activity, rolled up from the per-station counters
+    of :func:`station_summary`; ``zombie_stations`` is the data-loss
+    audit (reference src/api.py:121).
     """
     c = load_table(spark, sf_dir, "customer")
-    e = load_table(spark, sf_dir, "events")
     ref = c.agg(F.count(F.lit(1)).alias("total_expected"))
-    obs = e.agg(
-        F.max(F.unix_millis("ts")).alias("latest_sync_ms"),
-        F.countDistinct("user_id").alias("active_stations"),
-        dec_sum("value", "total_value"),
-        F.count(F.lit(1)).alias("n_events"),
+    obs = station_summary(spark, sf_dir).agg(
+        F.max("latest_sync_ms").alias("latest_sync_ms"),
+        F.count("station_code").alias("active_stations"),
+        F.round(F.sum("value_sum"), 2).cast("double").alias("total_value"),
+        F.coalesce(F.sum("n_events"), F.lit(0)).alias("n_events"),
     )
     return ref.crossJoin(obs).withColumn(
         "zombie_stations", F.col("total_expected") - F.col("active_stations")

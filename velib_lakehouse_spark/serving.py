@@ -2,14 +2,22 @@
 
 The reference serves two analytical endpoints from a per-request DuckDB
 over the lake (reference src/api.py:37-84 ``/alerts/critical``,
-src/api.py:87-142 ``/health/pipeline``).  Here both payloads come from the
-registry's serving queries (``sparkline``, ``alert_bands`` and ``health``
-in ``operators/velib.py``) and are kept in a module-level cache, one entry
-per lake directory, keyed by the listing of the ``events`` and
-``customer`` files.  A request lists those files (one ``stat`` per file,
-so a hit's cost grows with the number of landed files): if the listing
-matches the cached one, it returns the stored payload and runs no Spark
-job; otherwise it recomputes both payloads under a lock.
+src/api.py:87-142 ``/health/pipeline``) and computes the severity bands
+in Python from the rows it fetched (src/api.py:73-74).  Here both
+payloads are kept in a module-level cache, one entry per lake directory,
+keyed by the listing of the ``events`` and ``customer`` files.  A
+request lists those files (one ``stat`` per file, so a hit's cost grows
+with the number of landed files): if the listing matches the cached one,
+it returns the stored payload and runs no Spark job; otherwise it
+recomputes both payloads under a lock.
+
+A miss is one pass over ``events``: it collects the registry's
+``station_summary`` (``operators/velib.py``, one row per station, one
+Exchange) and counts ``customer``, then folds both payloads on the
+driver, as the reference does.  The registry's ``sparkline``,
+``alert_bands`` and ``health`` queries are the same fold as Spark
+projections of that summary.  Each version also stores each route's
+JSON body, encoded once, which the HTTP handler sends as is.
 
 Freshness contract: an answer reflects at least the files listed at
 request time.  This rests on one assumption, the same one Spark's file
@@ -24,37 +32,39 @@ Each endpoint is a function returning the JSON-able dict the FastAPI
 handler would emit; ``serve`` puts them on the stdlib HTTP server, and
 ``build_app`` on FastAPI when it is installed (it is not in this build,
 so that wiring is import-gated).  The payload dicts are shared between
-requests: callers must not mutate them.  The driver-side Python
-post-aggregation the reference does (count-if bands, src/api.py:73-74)
-is folded into the engine queries — the handler only serializes.
+requests: callers must not mutate them.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import logging
 import os
 import threading
+from decimal import ROUND_HALF_UP, Decimal
 from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
-from velib_lakehouse_spark.operators.velib import alert_bands, health, sparkline
+from velib_lakehouse_spark.operators import velib
 
 ALERTS = "/alerts/critical"
 HEALTH = "/health/pipeline"
+_CENT = Decimal("0.01")
 
 
 class _Version(NamedTuple):
     key: tuple  # the listing the payloads were computed from
     etag: str
     payloads: dict  # route -> payload dict
+    bodies: dict  # route -> the payload encoded as the JSON response body
 
 
 _log = logging.getLogger(__name__)
 _CACHE: dict[str, _Version] = {}  # abspath(sf_dir) -> the last computed version
 _LOCK = threading.Lock()
-_served = threading.local()  # the ETag of the version this thread last served
+_served = threading.local()  # the _Version this thread last served
 
 
 def _listing(path: str) -> tuple:
@@ -86,31 +96,55 @@ def _lake_key(root: str) -> tuple:
 
 
 def _compute(spark: SparkSession, sf_dir: str) -> dict:
-    """Both route payloads, from the registry's serving queries."""
-    stations = [
-        {
-            "station_code": r.station_code,
-            "current_bikes": r.current_bikes,
-            "sparkline": list(r.sparkline_data),
-        }
-        for r in sparkline(spark, sf_dir).orderBy("current_bikes").collect()
-    ]
-    bands = alert_bands(spark, sf_dir).collect()[0]
-    row = health(spark, sf_dir).collect()[0]
+    """Both route payloads, folded on the driver from one collected
+    :func:`~velib_lakehouse_spark.operators.velib.station_summary` (one
+    row per station) and the ``customer`` count.
+
+    The fold is what the registry's ``sparkline``, ``alert_bands`` and
+    ``health`` projections compute in Spark; the exact decimal sum is
+    rounded the way ``ROUND(x, 2)`` does (half up) before it becomes a
+    float.
+    """
+    rows = velib.station_summary(spark, sf_dir).collect()
+    total_expected = velib.load_table(spark, sf_dir, "customer").count()
+    stations = [r for r in rows if r.station_code is not None]
+    latest = [r.current_bikes for r in rows if r.current_bikes is not None]
+    targets = sorted(
+        (
+            r
+            for r in stations
+            if r.current_bikes is not None and r.current_bikes <= velib.TARGET_MAX
+        ),
+        key=lambda r: (r.current_bikes, r.station_code),
+    )
+    sums = [r.value_sum for r in rows if r.value_sum is not None]
+    syncs = [r.latest_sync_ms for r in rows if r.latest_sync_ms is not None]
+    zombies = total_expected - len(stations)
     return {
         ALERTS: {
-            "stations": stations,
-            "critical_count": bands.critical_count,
-            "warning_count": bands.warning_count,
-            "total_stations": bands.total_stations,
+            "stations": [
+                {
+                    "station_code": r.station_code,
+                    "current_bikes": r.current_bikes,
+                    "sparkline": list(r.sparkline_data),
+                }
+                for r in targets
+            ],
+            "critical_count": sum(v < velib.CRITICAL_MAX for v in latest),
+            "warning_count": sum(
+                velib.CRITICAL_MAX <= v < velib.ALERT_MAX for v in latest
+            ),
+            "total_stations": len(rows),
         },
         HEALTH: {
-            "total_expected": row.total_expected,
-            "active_stations": row.active_stations,
-            "zombie_stations": row.zombie_stations,
-            "latest_sync_ms": row.latest_sync_ms,
-            "total_value": row.total_value,
-            "status": "degraded" if row.zombie_stations > 0 else "healthy",
+            "total_expected": total_expected,
+            "active_stations": len(stations),
+            "zombie_stations": zombies,
+            "latest_sync_ms": max(syncs, default=None),
+            "total_value": (
+                float(sum(sums).quantize(_CENT, ROUND_HALF_UP)) if sums else None
+            ),
+            "status": "degraded" if zombies > 0 else "healthy",
         },
     }
 
@@ -133,8 +167,10 @@ def _payloads(spark: SparkSession, sf_dir: str) -> dict:
             if version is None or version.key != key:
                 _CACHE.pop(root, None)
                 etag = '"%s"' % hashlib.sha1(repr(key).encode()).hexdigest()[:20]
-                version = _CACHE[root] = _Version(key, etag, _compute(spark, root))
-    _served.etag = version.etag
+                payloads = _compute(spark, root)
+                bodies = {r: json.dumps(p).encode() for r, p in payloads.items()}
+                version = _CACHE[root] = _Version(key, etag, payloads, bodies)
+    _served.version = version
     return version.payloads
 
 
@@ -167,12 +203,13 @@ def serve(spark: SparkSession, sf_dir: str, host: str = "127.0.0.1", port: int =
 
     Each request calls its ``ROUTES`` function, so it is answered from
     the cached payloads of the lake version listed at request time; only
-    the first request after a file lands runs the Spark queries.  A 200
-    response carries an ``ETag`` derived from that listing: it changes
-    when a file lands and stays the same otherwise.  An engine failure is
-    a 500 with the error text in a JSON body.
+    the first request after a file lands runs the Spark queries.  When
+    the function returns that version's payload, the handler sends the
+    body encoded once with it; any other dict is encoded per request.  A
+    200 response carries an ``ETag`` derived from that listing: it
+    changes when a file lands and stays the same otherwise.  An engine
+    failure is a 500 with the error text in a JSON body.
     """
-    import json
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
     class Handler(BaseHTTPRequestHandler):
@@ -181,19 +218,23 @@ def serve(spark: SparkSession, sf_dir: str, host: str = "127.0.0.1", port: int =
             if fn is None:
                 self.send_error(404, "unknown route")
                 return
-            _served.etag = None
+            _served.version = None
             try:
                 status, body = 200, fn(spark, sf_dir)
             except Exception as exc:
                 _log.exception("GET %s failed", self.path)
                 # the status line holds one line of text: the error goes in the body
                 status, body = 500, {"error": type(exc).__name__, "detail": str(exc)}
-            data = json.dumps(body).encode()
+            version = _served.version if status == 200 else None
+            if version is not None and body is version.payloads.get(self.path):
+                data = version.bodies[self.path]
+            else:
+                data = json.dumps(body).encode()
             self.send_response(status)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(data)))
-            if status == 200 and _served.etag is not None:
-                self.send_header("ETag", _served.etag)
+            if version is not None:
+                self.send_header("ETag", version.etag)
             self.end_headers()
             self.wfile.write(data)
 

@@ -24,7 +24,6 @@ checked against a DuckDB oracle.
 
 from __future__ import annotations
 
-import atexit as _atexit
 import shutil
 from pathlib import Path
 
@@ -46,6 +45,7 @@ from velib_lakehouse_spark.sources.snapshots import (
     write_snapshot,
 )
 from velib_lakehouse_spark.streaming.silver import SILVER_SCHEMA, silver_transform
+from velib_lakehouse_spark.tempdirs import scratch_dir
 
 
 # ---------------------------------------------------------------------------
@@ -63,9 +63,7 @@ def lake_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``domain`` of dates at or after the cutoff: only those partitions'
     files are opened (asserted in tests/test_plans.py).
     """
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="lake_silver_")
+    out = scratch_dir("lake_silver_")
     silver = silver_transform(load_table(spark, sf_dir, "events"))
     commit_stream_batch(out, "load", 0, silver, "date")
     kept = {part for _, part in live_files(out) if part >= PRUNE_CUTOFF}
@@ -85,7 +83,6 @@ def json_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/api.py:104): write nested station documents as JSON files, read
     them back letting Spark infer the nested schema, then explode.
     """
-    import tempfile
 
     c = load_table(spark, sf_dir, "customer")
     docs = c.groupBy("c_nationkey").agg(
@@ -100,7 +97,7 @@ def json_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("stations")
         ).alias("data")
     )
-    out = tempfile.mkdtemp(prefix="lake_json_")
+    out = scratch_dir("lake_json_")
     docs.write.mode("overwrite").json(out)
 
     inferred = spark.read.json(out)  # schema inference, no hints
@@ -117,9 +114,7 @@ def lake_gold_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round trip: the alerts gold table committed as a compacted
     overwrite snapshot (K3) and read back — same oracle as the alerts
     query."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="lake_gold_")
+    out = scratch_dir("lake_gold_")
     write_snapshot(alerts(spark, sf_dir), out)
     return read_snapshot(spark, out)
 
@@ -319,13 +314,12 @@ def lake_retention_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a session forced to UTC by the catalog), so partition values are
     TZ-stable.
     """
-    import tempfile
 
     ev = load_table(spark, sf_dir, "events").select(
         F.to_date(F.col("ts")).cast("string").alias("date"),
         "event_id",
     )
-    out = tempfile.mkdtemp(prefix="lake_retention_")
+    out = scratch_dir("lake_retention_")
     commit_stream_batch(out, "load", 0, ev, "date")
     retire_partitions(out, RETENTION_CUTOFF_DATE)
     return (
@@ -366,7 +360,6 @@ def lake_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema; this operator demonstrates the evolution-tolerant read
     path itself, which stays identical either way.
     """
-    import tempfile
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -376,7 +369,7 @@ def lake_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "event_type",
     )
-    out = tempfile.mkdtemp(prefix="lake_evolve_")
+    out = scratch_dir("lake_evolve_")
     ev.filter(F.col("event_id") % 2 == 0).drop("event_type").write.mode(
         "overwrite"
     ).parquet(f"{out}/batch=1")
@@ -441,9 +434,7 @@ def bucketed_join_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFram
     Money stays integer (cents) end to end, the repo's exactness
     convention.
     """
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="lake_buckets_")
+    base = scratch_dir("lake_buckets_")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
@@ -603,7 +594,6 @@ def snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers incrementally sync a gold table without re-reading it —
     the diff's cost is the two snapshots, not the fact table.
     """
-    import tempfile
 
     from velib_lakehouse_spark.sources.snapshots import (
         read_snapshot,
@@ -620,7 +610,7 @@ def snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cents(F.col("o_totalprice"))).alias("revenue_cents"),
         )
 
-    tbl = tempfile.mkdtemp(prefix="snap_diff_")
+    tbl = scratch_dir("snap_diff_")
     v0 = write_snapshot(gold(SNAPDIFF_CUT0), tbl)
     v1 = write_snapshot(gold(SNAPDIFF_CUT1), tbl)
     old = read_snapshot(spark, tbl, version=v0).select(
@@ -690,22 +680,12 @@ _SKIP_EPOCH_YEAR = 1995
 _SKIP_LO = "1996-06-01 00:00:00"
 _SKIP_HI = "1997-03-31 00:00:00"
 
-# One clustered layout per (session, sf_dir), removed at interpreter
-# exit — repeated bench/fuzz invocations must not leak a full orders
-# copy to /tmp each call (r4 ADVICE), and reusing the layout is also
+# One clustered layout per (session, sf_dir), in a scratch directory
+# removed at interpreter exit — repeated bench/fuzz invocations must not
+# write a full orders copy each call, and reusing the layout is also
 # what a real table format does: cluster once at write time, skip on
 # every query.
 _SKIP_LAYOUT_DIRS: dict[str, str] = {}
-
-
-def _cleanup_skip_layouts() -> None:
-    import shutil as _shutil
-
-    for d in _SKIP_LAYOUT_DIRS.values():
-        _shutil.rmtree(d, ignore_errors=True)
-
-
-_atexit.register(_cleanup_skip_layouts)
 
 
 def _skip_layout_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -730,13 +710,10 @@ def _skip_layout_dir(spark: SparkSession, sf_dir: str) -> str:
     # rewritten corpus at the same path (every fuzz example) must not
     # accumulate one full clustered orders copy per rewrite until
     # interpreter exit.
-    import shutil as _shutil
-    import tempfile
-
     for stale in [k for k in _SKIP_LAYOUT_DIRS if k.startswith(f"{src}|")]:
-        _shutil.rmtree(_SKIP_LAYOUT_DIRS.pop(stale), ignore_errors=True)
+        shutil.rmtree(_SKIP_LAYOUT_DIRS.pop(stale), ignore_errors=True)
 
-    out = tempfile.mkdtemp(prefix="lake_skip_")
+    out = scratch_dir("lake_skip_")
     orders = load_table(spark, sf_dir, "orders")
     sliced = orders.withColumn(
         "slice",
@@ -937,18 +914,6 @@ BACKFILL_LATE_REM = 7
 BACKFILL_REPLAY_MOD = 100  # event_id % 100 == 1: re-delivered (duplicate)
 BACKFILL_REPLAY_REM = 1
 
-# Scratch silver dirs removed at interpreter exit (same hygiene as the
-# file-skipping layout cache above: a 1024x scale run writes ~GB per
-# call and bench/fuzz call this repeatedly).
-_BACKFILL_DIRS: list[str] = []
-
-
-def _cleanup_backfill_dirs() -> None:
-    for d in _BACKFILL_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-_atexit.register(_cleanup_backfill_dirs)
 
 
 def streaming_backfill_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -979,7 +944,6 @@ def streaming_backfill_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition is one task's file); the merge re-reads only the affected
     partitions; dedup shuffles only those partitions' rows on event_id.
     """
-    import tempfile
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -994,8 +958,7 @@ def streaming_backfill_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_id") % BACKFILL_LATE_MOD == BACKFILL_LATE_REM)
         | (F.col("event_id") % BACKFILL_REPLAY_MOD == BACKFILL_REPLAY_REM)
     )
-    out = tempfile.mkdtemp(prefix="backfill_silver_")
-    _BACKFILL_DIRS.append(out)
+    out = scratch_dir("backfill_silver_")
     silver_schema = "event_id bigint, user_id bigint, v_centi bigint, date string"
     on_time.repartition("date").write.mode("overwrite").partitionBy(
         "date"
@@ -1087,7 +1050,6 @@ def backfill_dedup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar days, same bound as Delta's replaceWhere); the dedup is
     one map-side-combined groupBy on event_id over affected rows only.
     """
-    import tempfile
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -1126,8 +1088,7 @@ def backfill_dedup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    out = tempfile.mkdtemp(prefix="backfill_dedup_")
-    _BACKFILL_DIRS.append(out)
+    out = scratch_dir("backfill_dedup_")
     silver_schema = (
         "event_id bigint, user_id bigint, v_centi bigint,"
         " ingest_seq int, date string"
@@ -1248,7 +1209,6 @@ def merge_on_read_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     position stamp is a per-(date, fbucket) window — frames bounded by
     file size, the same bound a real writer's row groups give.
     """
-    import tempfile
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -1267,8 +1227,7 @@ def merge_on_read_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    out = tempfile.mkdtemp(prefix="mor_base_")
-    _BACKFILL_DIRS.append(out)
+    out = scratch_dir("mor_base_")
     base.repartition("date").write.mode("overwrite").partitionBy(
         "date"
     ).parquet(out)
@@ -1408,7 +1367,6 @@ def compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     live aggregates.  No driver loop, no per-file job — the 100 TB
     version is the same single write with more partitions.
     """
-    import tempfile
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -1426,8 +1384,7 @@ def compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
             Window.partitionBy("date", "fbucket").orderBy("event_id")
         ),
     )
-    out = tempfile.mkdtemp(prefix="compact_base_")
-    _BACKFILL_DIRS.append(out)
+    out = scratch_dir("compact_base_")
     base.repartition("date").write.mode("overwrite").partitionBy(
         "date"
     ).parquet(out)
@@ -1462,8 +1419,7 @@ def compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" 1 preceding), 0) div {COMPACT_EXEC_TARGET_ROWS}"
         ).alias("bin_id"),
     )
-    compacted_dir = tempfile.mkdtemp(prefix="compact_out_")
-    _BACKFILL_DIRS.append(compacted_dir)
+    compacted_dir = scratch_dir("compact_out_")
     (
         live.join(F.broadcast(bins), ["date", "fbucket"])
         .repartition("date", "bin_id")
@@ -1615,7 +1571,6 @@ def snapshot_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     table size.  Conflict granularity is the partition-value domain,
     so disjoint-partition writers never serialize against each other.
     """
-    import tempfile
 
     from velib_lakehouse_spark.sources import snapshots as snap
 
@@ -1623,8 +1578,7 @@ def snapshot_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").cast("long").alias("k"),
         F.col("o_orderpriority").alias("prio"),
     )
-    table = tempfile.mkdtemp(prefix="scc_table_")
-    _BACKFILL_DIRS.append(table)
+    table = scratch_dir("scc_table_")
     schema = "k bigint, prio string"
     urgent = {"1-URGENT"}
 
@@ -1790,7 +1744,6 @@ def snapshot_optimize_transactional(spark: SparkSession, sf_dir: str) -> DataFra
     a 1000-executor stream keeps committing while the compactor runs
     (Delta's documented OPTIMIZE concurrency contract).
     """
-    import tempfile
 
     from velib_lakehouse_spark.sources import snapshots as snap
 
@@ -1798,8 +1751,7 @@ def snapshot_optimize_transactional(spark: SparkSession, sf_dir: str) -> DataFra
         F.col("o_orderkey").cast("long").alias("k"),
         F.col("o_orderpriority").alias("prio"),
     )
-    table = tempfile.mkdtemp(prefix="sot_table_")
-    _BACKFILL_DIRS.append(table)
+    table = scratch_dir("sot_table_")
     schema = "k bigint, prio string"
     urgent = {"1-URGENT"}
 
@@ -1986,7 +1938,6 @@ def snapshot_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     indirection.  The source-retention hazard (vacuum kills clones) is
     documented at the protocol function.
     """
-    import tempfile
 
     from velib_lakehouse_spark.sources import snapshots as snap
 
@@ -1994,9 +1945,8 @@ def snapshot_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").cast("long").alias("k"),
         F.col("o_orderpriority").alias("prio"),
     )
-    src = tempfile.mkdtemp(prefix="scl_src_")
-    dst = tempfile.mkdtemp(prefix="scl_dst_")
-    _BACKFILL_DIRS.extend([src, dst])
+    src = scratch_dir("scl_src_")
+    dst = scratch_dir("scl_dst_")
     schema = "k bigint, prio string"
     urgent = {"1-URGENT"}
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from velib_lakehouse_spark.session import apply_safe_confs
+from velib_lakehouse_spark.tempdirs import scratch_dir
 
 
 def delta_available(spark: SparkSession) -> bool:
@@ -56,7 +57,6 @@ def csv_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     text is exact in any parser.  The oracle reads the SOURCE parquet —
     pinning that export -> CSV -> scan loses nothing.
     """
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -70,7 +70,7 @@ def csv_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("value_micro"),
     )
-    out = tempfile.mkdtemp(prefix="csv_scan_")
+    out = scratch_dir("csv_scan_")
     ev.write.mode("overwrite").option("header", "true").csv(out)
     back = read_any(spark, out, fmt="csv", schema=CSV_SCAN_SCHEMA, header="true")
     return back.groupBy("event_type").agg(
