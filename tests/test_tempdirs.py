@@ -1,7 +1,7 @@
-"""The registry queries that build a table leave nothing in the temp
-directory once their process exits: every scratch directory the package
-makes sits under ``tempdirs.scratch_dir``'s per-process root, which one
-exit hook removes."""
+"""The registry queries that build a table or ship the package leave
+nothing in the temp directory once their process exits: every scratch
+directory the package makes sits under ``tempdirs.scratch_dir``'s
+per-process root, which one exit hook removes."""
 
 from __future__ import annotations
 
@@ -16,7 +16,8 @@ ROOT = pathlib.Path(__file__).resolve().parents[1]
 
 # one query per kind of scratch-directory user: log tables, a snapshot,
 # the streaming sinks and checkpoints, a parquet drain, a view, a CSV
-# export, and the cached file-skipping layout
+# export, the cached file-skipping layout, and the package zip a pandas
+# UDF ships to the Python workers
 TABLE_BUILDERS = [
     "lake_partition_pruned",
     "lake_gold_snapshot",
@@ -28,6 +29,7 @@ TABLE_BUILDERS = [
     "streaming_windowed_counts",
     "ivm_incremental_rollup",
     "csv_roundtrip_scan",
+    "arrow_batch_stats",
 ]
 
 _RUN = """

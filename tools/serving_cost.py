@@ -12,16 +12,18 @@ route functions of ``serving.ROUTES`` once per round:
 
 It prints the first cold round on its own JSON line (``"mode": "first"``):
 that is the first miss in a fresh JVM, the one ``api_reads`` ``setup_s``
-includes.  Then, for each mode, one JSON line with the median of the last
-half of the rounds (the first ones include the JIT warm-up).  Each line
-holds Spark jobs, calls to ``load_table("events")``, wall seconds, and
-CPU seconds of this process and its descendants (the JVM and its Python
-workers).
+includes; its ``jvm`` object splits the JVM's own CPU in that round by
+thread class (``tools/jvm_cpu.py``).  Then, for each mode, one JSON line
+with the median of the last half of the rounds (the first ones include
+the JIT warm-up).  Each line holds Spark jobs, calls to
+``load_table("events")``, wall seconds, and CPU seconds of this process
+and its descendants (the JVM and its Python workers).
 """
 
 from __future__ import annotations
 
 import argparse
+import itertools
 import json
 import os
 import shutil
@@ -34,10 +36,13 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [os.path.join(ROOT, "perfbench"), ROOT]
 
 import gen  # noqa: E402
+import jvm_cpu  # noqa: E402
 import run as bench  # noqa: E402
 
 from velib_lakehouse_spark import serving  # noqa: E402
 from velib_lakehouse_spark.operators import velib  # noqa: E402
+
+_ROUND = itertools.count()  # one job group per round
 
 
 def _count_event_loads(loads: list[str]) -> None:
@@ -54,10 +59,10 @@ def _count_event_loads(loads: list[str]) -> None:
 def measure(spark, lake: str, rounds: int, cold: bool, loads: list[str]) -> list[dict]:
     sc = spark.sparkContext
     samples = []
-    for i in range(rounds):
+    for _ in range(rounds):
         if cold:
             serving._CACHE.clear()
-        group = f"serving-cost-{'cold' if cold else 'hit'}-{i}"
+        group = f"serving-cost-{next(_ROUND)}"
         sc.setJobGroup(group, group)
         del loads[:]
         cpu, wall = bench.process_cpu_s(), time.perf_counter()
@@ -97,8 +102,11 @@ def main() -> int:
         _count_event_loads(loads)
         spark = bench.start_session()
         try:
-            cold = measure(spark, lake, args.rounds, True, loads)
-            print(json.dumps({"mode": "first", **cold[0]}))
+            threads = jvm_cpu.ThreadCpu(spark)
+            threads.take()  # the session start
+            cold = measure(spark, lake, 1, True, loads)
+            print(json.dumps({"mode": "first", **cold[0], "jvm": threads.take()}))
+            cold += measure(spark, lake, args.rounds - 1, True, loads)
             print(json.dumps(median_line(cold, "cold")))
             hit = measure(spark, lake, args.rounds, False, loads)
             print(json.dumps(median_line(hit, "hit")))

@@ -7,6 +7,27 @@ generic deployment: AQE on, UTC session time zone, Arrow enabled for the
 pandas interop paths.  On a real cluster the same builder is used with
 ``master`` unset (picked up from spark-submit) — nothing here is
 local-mode specific except the defaults.
+
+The driver JVM this factory launches starts with
+``-XX:CompileThresholdScaling=5`` (``DRIVER_JIT_OPTS``): every JIT tier's
+compile thresholds are five times the HotSpot default.  A medallion step
+is a short job in a cold JVM -- the reference materializes each layer
+every 5 minutes in its own ``local[1]`` session, draining with
+``Trigger.AvailableNow`` -- and at the default thresholds HotSpot spends
+much of that job compiling Spark's own code, which stops being hot before
+the compiled code pays back.  JVM CPU by thread (``tools/tick_cost.py``,
+1,500 stations, 3 h history, 4 cores), default -> scaled: the C1/C2
+compiler threads used >= 5.2 -> 2.3 of the 15.5 -> 8.9 CPU-s of session
+start, >= 14.8 -> 8.1 of the 31.3 -> 24.1 CPU-s of the history drain
+(task threads 5.4 -> 5.9), and 2.6 -> 1.0 CPU-s of the first steady
+tick.  Whole-stage codegen compiles nothing new after the drain, so this
+is tier-up, not query compilation.  With the scaling, briefly-hot code
+stays in the interpreter or C1 while loops that run long still reach C2.
+Stopping at C1 (``-XX:TieredStopAtLevel=1``) saves more at start, but at
+a 1-day history a tick's CPU doubles, because C1 code runs slower.  The
+option applies only to the local-mode JVM started here: on a cluster
+spark-submit launches the executors and sets their options, and a
+session built elsewhere keeps its own JVM.
 """
 
 from __future__ import annotations
@@ -31,6 +52,9 @@ SAFE_RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
 }
 
+# Launch-time option of the driver JVM (see the module docstring).
+DRIVER_JIT_OPTS = "-XX:CompileThresholdScaling=5"
+
 
 def get_spark(
     app_name: str = "velib-lakehouse-spark",
@@ -44,6 +68,9 @@ def get_spark(
     ``shuffle_partitions`` defaults to the core count — at local scale the
     200-partition default just adds scheduling overhead; on a cluster the
     caller should size it to ~2-3x total cores (AQE coalesces down).
+    A ``spark.driver.extraJavaOptions`` in ``extra_confs`` is appended
+    after ``DRIVER_JIT_OPTS``; the JVM keeps the last copy of a repeated
+    ``-XX`` flag, so the caller's value wins.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     if shuffle_partitions is None:
@@ -75,7 +102,12 @@ def get_spark(
     )
     for k, v in SAFE_RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    for k, v in (extra_confs or {}).items():
+    confs = dict(extra_confs or {})
+    java_opts = " ".join(
+        filter(None, [DRIVER_JIT_OPTS, confs.pop("spark.driver.extraJavaOptions", "")])
+    )
+    builder = builder.config("spark.driver.extraJavaOptions", java_opts)
+    for k, v in confs.items():
         builder = builder.config(k, v)
 
     spark = builder.getOrCreate()
@@ -112,18 +144,20 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     When the driver process wasn't started from the repo root (any real
     harness), that import fails; zipping the package and ``addPyFile``-ing
     it makes every operator self-contained regardless of cwd or cluster
-    layout.  Idempotent per SparkContext.
+    layout.  Idempotent per SparkContext.  The zip sits in a
+    ``tempdirs.scratch_dir``, removed at process exit.
     """
     sc = spark.sparkContext
     app_id = sc.applicationId  # unique per context (id() could be reused)
     if app_id in _SHIPPED:
         return
-    import tempfile
     import zipfile
 
+    # imported here: the medallion core never ships the package
+    from velib_lakehouse_spark import tempdirs
+
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    fd, zpath = tempfile.mkstemp(prefix="velib_lakehouse_spark_", suffix=".zip")
-    os.close(fd)
+    zpath = os.path.join(tempdirs.scratch_dir("velib_pkg_"), "velib_lakehouse_spark.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _, files in os.walk(pkg_dir):
             for fn in files:
