@@ -8,8 +8,6 @@ plan: a join of two 8-bucket tables runs with ZERO Exchange operators.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from velib_lakehouse_spark.catalog import load_table
@@ -17,10 +15,10 @@ from velib_lakehouse_spark.sources.readers import read_any
 from tests.conftest import SF_DIR
 
 
-def test_bucketed_join_has_no_exchange(spark):
+def test_bucketed_join_has_no_exchange(spark, tmp_path):
     o = load_table(spark, SF_DIR, "orders")
     l = load_table(spark, SF_DIR, "lineitem")
-    base = tempfile.mkdtemp(prefix="buckets_")
+    base = str(tmp_path)
 
     (
         o.write.bucketBy(8, "o_orderkey")

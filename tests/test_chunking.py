@@ -4,8 +4,6 @@ pin the *intended* behavior on inputs where it is computable by hand)."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from velib_lakehouse_spark.catalog import TABLES, load_table
@@ -20,8 +18,8 @@ from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
-def crafted_dir(spark):
-    out = tempfile.mkdtemp(prefix="t_chunk_sf_")
+def crafted_dir(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("t_chunk_sf"))
     for t in TABLES:
         load_table(spark, SF_DIR, t).limit(0).write.mode("overwrite").parquet(
             f"{out}/{t}.parquet"

@@ -29,12 +29,11 @@ def test_symbols_stripped_whitespace_collapsed(spark):
     assert _clean(spark, "A  B\t(c)! [d]#e") == "a b c d e"
 
 
-def test_jsonl_shard_export_roundtrip_and_stability(spark):
+def test_jsonl_shard_export_roundtrip_and_stability(spark, tmp_path):
     """The shuffled-shard writer must produce a hive shard layout whose
     contents round-trip and are byte-stable across re-writes (the
     resumable-export contract)."""
     import os
-    import tempfile
 
     from velib_lakehouse_spark import registry
     from velib_lakehouse_spark.operators.training import (
@@ -44,7 +43,7 @@ def test_jsonl_shard_export_roundtrip_and_stability(spark):
     from tests.conftest import SF_DIR
 
     export = registry.QUERIES["export_shuffled_shards"](spark, SF_DIR)
-    out = tempfile.mkdtemp(prefix="t_jsonl_shards_")
+    out = str(tmp_path)
     write_jsonl_shards(export, out)
 
     shards = sorted(d for d in os.listdir(out) if d.startswith("shard="))

@@ -10,8 +10,6 @@ well-defined aggregate) out.
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from velib_lakehouse_spark import registry
@@ -109,8 +107,8 @@ EMPTY_TO_AGG = ["velib_alert_bands", "velib_health"]
 
 
 @pytest.fixture(scope="module")
-def empty_sf_dir(spark):
-    out = tempfile.mkdtemp(prefix="t_empty_sf_")
+def empty_sf_dir(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("t_empty_sf"))
     from velib_lakehouse_spark.catalog import TABLES, load_table
 
     for t in TABLES:

@@ -10,7 +10,6 @@ nested-lambda would time out the suite).
 
 from __future__ import annotations
 
-import tempfile
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -134,9 +133,9 @@ FUZZED_QUERIES = [
 
 
 @pytest.fixture(scope="module")
-def fuzz_base_dir(spark):
+def fuzz_base_dir(spark, tmp_path_factory):
     """All tables empty; each example overwrites documents.parquet."""
-    out = tempfile.mkdtemp(prefix="t_fuzz_sf_")
+    out = str(tmp_path_factory.mktemp("t_fuzz_sf"))
     for t in TABLES:
         load_table(spark, SF_DIR, t).limit(0).write.mode("overwrite").parquet(
             f"{out}/{t}.parquet"
@@ -226,8 +225,8 @@ events_strategy = st.lists(
 
 
 @pytest.fixture(scope="module")
-def stream_fuzz_dir(spark):
-    out = tempfile.mkdtemp(prefix="t_fuzz_stream_")
+def stream_fuzz_dir(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("t_fuzz_stream"))
     for t in TABLES:
         if t == "events":
             continue
@@ -557,10 +556,10 @@ tpch_orders_strategy = st.lists(
 
 
 @pytest.fixture(scope="module")
-def tpch_fuzz_dir(spark):
+def tpch_fuzz_dir(spark, tmp_path_factory):
     """Real sf0.001 dimensions, empty non-relational tables; each
     example overwrites orders.parquet + lineitem.parquet."""
-    out = tempfile.mkdtemp(prefix="t_fuzz_tpch_")
+    out = str(tmp_path_factory.mktemp("t_fuzz_tpch"))
     for t in TABLES:
         src = load_table(spark, SF_DIR, t)
         if t in ("orders", "lineitem"):
@@ -667,8 +666,8 @@ lines_strategy = st.lists(
 
 
 @pytest.fixture(scope="module")
-def tpch_delta_fuzz_dir(spark):
-    out = tempfile.mkdtemp(prefix="t_fuzz_tpchd_")
+def tpch_delta_fuzz_dir(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("t_fuzz_tpchd"))
     for t in TABLES:
         if t in ("orders", "lineitem"):
             continue

@@ -4,8 +4,6 @@ perceptual collapse), on hand-built corpora with known answers."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from velib_lakehouse_spark import registry
@@ -15,8 +13,8 @@ from tests.oracle_harness import compare
 
 
 @pytest.fixture(scope="module")
-def golden_dir(spark):
-    out = tempfile.mkdtemp(prefix="t_goldops_sf_")
+def golden_dir(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("t_goldops_sf"))
     for t in TABLES:
         load_table(spark, SF_DIR, t).limit(0).write.mode("overwrite").parquet(
             f"{out}/{t}.parquet"

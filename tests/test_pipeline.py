@@ -7,8 +7,9 @@ import subprocess
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
-from velib_lakehouse_spark import pipeline
+from velib_lakehouse_spark import pipeline, registry
 from velib_lakehouse_spark.pipeline import run_medallion
 from velib_lakehouse_spark.sources import snapshots
 from velib_lakehouse_spark.sources.snapshots import (
@@ -18,6 +19,7 @@ from velib_lakehouse_spark.sources.snapshots import (
 )
 from velib_lakehouse_spark.streaming import silver as silver_mod
 from tests.conftest import SF_DIR
+from tests.oracle_harness import compare
 
 
 def test_medallion_end_to_end(spark, tmp_path):
@@ -58,6 +60,12 @@ def test_medallion_end_to_end(spark, tmp_path):
     assert levels <= {"CRITICAL_EMPTY", "WARNING_LOW"}
     assert meta["alerts"] == gold.count()
     assert meta["critical"] == gold.filter("alert_level = 'CRITICAL_EMPTY'").count()
+    # and it is the registry's alert rule: gold equals the DuckDB mirror
+    # of velib_alerts over the same bronze
+    gold_ms = gold.withColumn(
+        "last_reported_ms", F.unix_millis("last_reported")
+    ).drop("last_reported")
+    assert compare(gold_ms, registry.ORACLE["velib_alerts"], SF_DIR) == []
 
     # a second run: streaming reprocesses nothing, gold gets version 1
     meta2 = run_medallion(spark, SF_DIR, lake)

@@ -311,15 +311,16 @@ def test_phash_near_identical_docs_pair_up(spark):
 # ---- shallow clone -----------------------------------------------------------
 
 
-def test_shallow_clone_isolation_and_cas(spark):
+def test_shallow_clone_isolation_and_cas(spark, tmp_path_factory):
     """Clone pins the source version (later source deletes invisible);
     clone writes never reach the source; a second clone into the same
     target loses the v0 CAS."""
     from velib_lakehouse_spark.sources import snapshots as snap
+    from velib_lakehouse_spark.sources.lake import shallow_clone
 
     schema = "k bigint, p string"
-    src = tempfile.mkdtemp(prefix="t_scl_src_")
-    dst = tempfile.mkdtemp(prefix="t_scl_dst_")
+    src = str(tmp_path_factory.mktemp("t_scl_src"))
+    dst = str(tmp_path_factory.mktemp("t_scl_dst"))
     df = spark.createDataFrame(
         [(i, "x" if i % 2 == 0 else "y") for i in range(10)], schema
     )
@@ -327,11 +328,11 @@ def test_shallow_clone_isolation_and_cas(spark):
         src, "overwrite", None, "base",
         lambda rv: (snap.stage_partition_files(df, src, "b1", "p"), []),
     )
-    entry = snap.shallow_clone(src, dst)
+    entry = shallow_clone(src, dst)
     assert entry["version"] == 0 and entry["action"] == "clone"
     # racing second clone loses the CAS
     with pytest.raises(FileExistsError):
-        snap.shallow_clone(src, dst)
+        shallow_clone(src, dst)
     # source diverges: delete partition x
     def stage_del(rv):
         kept = snap.read_table(spark, src, schema, version=rv).filter(
@@ -360,13 +361,13 @@ def test_shallow_clone_isolation_and_cas(spark):
     assert (100, "z") in dst_rows
 
 
-def test_shallow_clone_requires_empty_target_and_committed_source(spark):
-    from velib_lakehouse_spark.sources import snapshots as snap
+def test_shallow_clone_requires_empty_target_and_committed_source(spark, tmp_path_factory):
+    from velib_lakehouse_spark.sources.lake import shallow_clone
 
-    empty_src = tempfile.mkdtemp(prefix="t_scl_esrc_")
-    dst = tempfile.mkdtemp(prefix="t_scl_edst_")
+    empty_src = str(tmp_path_factory.mktemp("t_scl_esrc"))
+    dst = str(tmp_path_factory.mktemp("t_scl_edst"))
     with pytest.raises(FileNotFoundError):
-        snap.shallow_clone(empty_src, dst)
+        shallow_clone(empty_src, dst)
 
 
 # ---- connected_components_star ----------------------------------------------
@@ -418,11 +419,11 @@ def test_cc_star_matches_union_find(spark):
 # ---- vacuum_data -------------------------------------------------------------
 
 
-def test_vacuum_data_reclaims_and_breaks_time_travel(spark):
+def test_vacuum_data_reclaims_and_breaks_time_travel(spark, tmp_path):
     from velib_lakehouse_spark.sources import snapshots as snap
 
     schema = "k bigint, p string"
-    tbl = tempfile.mkdtemp(prefix="t_vac_")
+    tbl = str(tmp_path)
     v0 = spark.createDataFrame([(1, "x"), (2, "y")], schema)
     snap.optimistic_commit(
         tbl, "overwrite", None, "base",
@@ -446,20 +447,21 @@ def test_vacuum_data_reclaims_and_breaks_time_travel(spark):
         snap.read_table(spark, tbl, schema, version=0).collect()
 
 
-def test_vacuum_on_source_breaks_shallow_clone(spark):
+def test_vacuum_on_source_breaks_shallow_clone(spark, tmp_path_factory):
     """The documented CLONE hazard: vacuuming the source after it has
     rewritten the cloned files kills the clone's reads, loudly."""
     from velib_lakehouse_spark.sources import snapshots as snap
+    from velib_lakehouse_spark.sources.lake import shallow_clone
 
     schema = "k bigint, p string"
-    src = tempfile.mkdtemp(prefix="t_vac_src_")
-    dst = tempfile.mkdtemp(prefix="t_vac_dst_")
+    src = str(tmp_path_factory.mktemp("t_vac_src"))
+    dst = str(tmp_path_factory.mktemp("t_vac_dst"))
     df = spark.createDataFrame([(1, "x"), (2, "y")], schema)
     snap.optimistic_commit(
         src, "overwrite", None, "base",
         lambda rv: (snap.stage_partition_files(df, src, "b1", "p"), []),
     )
-    snap.shallow_clone(src, dst)
+    shallow_clone(src, dst)
     assert snap.read_table(spark, dst, schema).count() == 2
     # source rewrites everything, then vacuums its old bytes
     df2 = spark.createDataFrame([(9, "x")], schema)

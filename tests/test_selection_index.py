@@ -180,15 +180,13 @@ def test_quality_classifier_scores_and_verdicts(spark):
             assert 0.0 <= r[f] <= 1.0
 
 
-def test_quality_classifier_monotone_in_symbols(spark):
+def test_quality_classifier_monotone_in_symbols(spark, tmp_path):
     """A symbol-soup document must score below the same document
     without symbols (the weight is negative)."""
-    import tempfile
-
     from velib_lakehouse_spark.catalog import TABLES
     from velib_lakehouse_spark.operators.text import quality_classifier_score
 
-    out = tempfile.mkdtemp(prefix="t_qc_")
+    out = str(tmp_path)
     for t in TABLES:
         load_table(spark, SF_DIR, t).limit(0).write.mode("overwrite").parquet(
             f"{out}/{t}.parquet"
@@ -204,13 +202,11 @@ def test_quality_classifier_monotone_in_symbols(spark):
     assert rows[0]["score_micro"] > rows[1]["score_micro"]
 
 
-def test_zipf_slope_negative_and_steeper_for_zipfy_source(spark):
-    import tempfile
-
+def test_zipf_slope_negative_and_steeper_for_zipfy_source(spark, tmp_path):
     from velib_lakehouse_spark.catalog import TABLES
     from velib_lakehouse_spark.operators.text import zipf_slope_audit
 
-    out = tempfile.mkdtemp(prefix="t_zipf_")
+    out = str(tmp_path)
     for t in TABLES:
         load_table(spark, SF_DIR, t).limit(0).write.mode("overwrite").parquet(
             f"{out}/{t}.parquet"

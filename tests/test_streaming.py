@@ -9,7 +9,6 @@ and that restarting from the same checkpoint is idempotent (T2).
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 
 from pyspark.sql import functions as F
@@ -19,9 +18,9 @@ from velib_lakehouse_spark.streaming.silver import SILVER_SCHEMA, run_silver_str
 from tests.conftest import SF_DIR
 
 
-def test_silver_stream_partitioned_layout_and_idempotent_restart(spark):
-    out = tempfile.mkdtemp(prefix="t_silver_out_")
-    ckpt = tempfile.mkdtemp(prefix="t_silver_ckpt_")
+def test_silver_stream_partitioned_layout_and_idempotent_restart(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("t_silver_out"))
+    ckpt = str(tmp_path_factory.mktemp("t_silver_ckpt"))
 
     meta = run_silver_stream(spark, SF_DIR, out, ckpt)
     first = read_table(spark, out, SILVER_SCHEMA)
@@ -83,7 +82,7 @@ def test_streaming_sessions_agree_with_batch(spark):
     assert streamed <= batch
 
 
-def test_streaming_dedup_deterministic_winner_on_crafted_duplicates(spark):
+def test_streaming_dedup_deterministic_winner_on_crafted_duplicates(spark, tmp_path):
     """True duplicates with different payloads must resolve to the
     min-event_id row, not an arbitrary first-seen one (the fixtures have
     no duplicate (station, ts) pairs, so this crafts some)."""
@@ -106,7 +105,7 @@ def test_streaming_dedup_deterministic_winner_on_crafted_duplicates(spark):
             "props",
         )
     )
-    crafted_dir = tempfile.mkdtemp(prefix="t_dedup_events_")
+    crafted_dir = str(tmp_path)
     # streaming source globs 'events.parquet' — write one file of that name
     e.select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
@@ -128,7 +127,7 @@ def test_streaming_dedup_deterministic_winner_on_crafted_duplicates(spark):
     assert all(r.bikes_available < 1000.0 for r in got.collect())
 
 
-def test_stateful_enumerate_state_carries_across_batches(spark):
+def test_stateful_enumerate_state_carries_across_batches(spark, tmp_path):
     """Split events into two time-ordered files and force one file per
     micro-batch: ordinals must keep counting and the first gap of batch
     two must be measured against batch one's last event (state), so the
@@ -140,7 +139,7 @@ def test_stateful_enumerate_state_carries_across_batches(spark):
 
     e = load_table(spark, SF_DIR, "events").select("event_id", "ts", "user_id")
     cut = e.agg(F.expr("percentile(unix_millis(ts), 0.5)")).first()[0]
-    crafted_dir = tempfile.mkdtemp(prefix="t_state_events_")
+    crafted_dir = str(tmp_path)
     for suffix, part in (
         ("", e.filter(F.unix_millis("ts") <= cut)),
         ("_late", e.filter(F.unix_millis("ts") > cut)),
@@ -195,7 +194,7 @@ def test_transform_with_state_gated_on_protobuf(spark):
     assert not problems, "; ".join(problems)
 
 
-def test_dedup_within_watermark_expires_key_state(spark):
+def test_dedup_within_watermark_expires_key_state(spark, tmp_path):
     """dropDuplicatesWithinWatermark TTL semantics: a key re-arriving
     inside the delay is dropped; after the watermark passes the first
     arrival's ts + delay the state is evicted, so a fresh (non-late)
@@ -216,7 +215,7 @@ def test_dedup_within_watermark_expires_key_state(spark):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string"
     )
-    crafted_dir = tempfile.mkdtemp(prefix="t_wm_dedup_")
+    crafted_dir = str(tmp_path)
     batches = [
         [ev(1, 1000, 1, "view"), ev(2, 1030, 1, "view")],  # dup within delay
         [ev(3, 1400, 2, "click")],  # raises max event time to 1400

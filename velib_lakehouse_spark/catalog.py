@@ -5,13 +5,13 @@ Plays the role of the reference's reader helpers + path conventions
 src/assets/velib_alerte.py:23-34 partition-aware parquet read): a single
 place that knows where tables live and normalizes their schemas.
 
-Normalizations applied here (and nowhere else) so every operator sees a
-clean schema:
-
-* ``events.ts`` is stored as parquet TIMESTAMP(NANOS) which Spark reads
-  (under ``nanosAsLong``) as a nanosecond epoch long; converted to
-  TimestampType at microsecond precision — the same truncation DuckDB
-  applies when casting ns -> us, so oracle comparisons agree.
+The one normalization applied here (and nowhere else), so every
+operator sees a clean schema: ``events.ts`` arrives from outside the
+program in either of two shapes, parquet TIMESTAMP(NANOS) (read under
+``nanosAsLong`` as a nanosecond epoch long) or a naive timestamp[us]
+(read as TIMESTAMP_NTZ by a session without the inference conf); both
+become TimestampType at microsecond precision — the same truncation
+DuckDB applies when casting ns -> us, so oracle comparisons agree.
 """
 
 from __future__ import annotations
@@ -50,11 +50,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # naive us-timestamp + UTC session -> identical instants.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, tables: list[str] | None = None
-) -> None:
-    """Register each table as a temp view (for the Spark-SQL entry points)."""
-    for name in tables or TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -13,8 +13,8 @@ SURVEY.md §2.9).  These helpers package those idioms:
 All of them shuffle once on the partition key and nothing else — the
 window ordering rides the same hash partitioning, which is the plan you
 want on a cluster (one exchange per key-change, no driver involvement).
-Every ordering includes a unique tiebreak column so results are total-
-ordered and reproducible across engines.
+Every ordering includes a tiebreak column; with a unique one (event_id)
+results are total-ordered and reproducible across engines.
 """
 
 from __future__ import annotations
@@ -25,18 +25,17 @@ from pyspark.sql import functions as F
 from velib_lakehouse_spark.functions.exact import DEC
 
 
-def latest_per_key(
-    df: DataFrame, key: str, order: str, tiebreak: str, keep_rank: bool = False
-) -> DataFrame:
+def latest_per_key(df: DataFrame, key: str, order: str, tiebreak: str) -> DataFrame:
     """Dedup to the most recent row per key.
 
     Mirrors reference src/assets/velib_alerte.py:45-48 (row_number over
     PARTITION BY station ORDER BY last_reported DESC, rank == 1), with an
-    explicit unique tiebreak for determinism.
+    explicit tiebreak: ``event_id`` makes it total; gold breaks a
+    (station, ts) tie on ``bikes_available``.
     """
     w = Window.partitionBy(key).orderBy(F.col(order).desc(), F.col(tiebreak).desc())
     out = df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    return out if keep_rank else out.drop("rn")
+    return out.drop("rn")
 
 
 def net_flow(key: str, order: str, tiebreak: str, value: str) -> Column:

@@ -6,16 +6,21 @@ Thresholds are rescaled to the events value domain (0..~200):
 ``bikes <= 5`` -> ``value <= 60``, ``bikes < 3`` -> ``value < 50``,
 ``bikes == 0`` -> ``value < 10``.
 
+The history and alerts queries are the medallion's own transforms
+(``pipeline.build_history`` / ``build_alerts`` over
+``silver_transform``): the alerts query is gold's transform, so the
+registry checks the rule ``run_medallion`` commits.
+
 Determinism rules (SURVEY.md §7 hard parts):
 * no wall-clock — every time cutoff is derived from max(ts) in the data;
-* every window order includes a unique tiebreak (event_id);
+* every window order includes a tiebreak (event_id; gold's latest row
+  breaks a (station, ts) tie on bikes_available DESC);
 * timestamps are emitted as epoch-millis BIGINT; dates as 'YYYY-MM-DD'
   strings; double aggregates go through functions/exact.py.
 
 Scale notes: each query shuffles at most once per distinct key
-(station), dimension joins are broadcast, and the time filter lands on
-the scan (predicate pushdown) so a date-partitioned production layout
-would partition-prune.
+(station), and dimension joins are broadcast.  The alerts cutoff runs
+over the latest rows, one per station, in a single partition.
 """
 
 from __future__ import annotations
@@ -26,9 +31,9 @@ from pyspark.sql import functions as F
 from velib_lakehouse_spark.catalog import load_table
 from velib_lakehouse_spark.functions.collections import csv_scaled, ordered_collect
 from velib_lakehouse_spark.functions.exact import DEC
-from velib_lakehouse_spark.functions.timeseries import latest_per_key, net_flow
+from velib_lakehouse_spark.functions.timeseries import latest_per_key
 # the alert thresholds are the medallion's; they stay importable from here
-from velib_lakehouse_spark.pipeline import ALERT_MAX, CRITICAL_MAX, build_history
+from velib_lakehouse_spark.pipeline import ALERT_MAX, CRITICAL_MAX, build_alerts, build_history
 from velib_lakehouse_spark.streaming.silver import silver_transform
 
 # Rescaled serving threshold (events.value plays bikes_available).
@@ -57,17 +62,20 @@ def silver_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _history(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The medallion's ``build_history`` over the silver parse of ``events``."""
+    return build_history(silver_transform(load_table(spark, sf_dir, "events")))
+
+
 def history_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reconstructed ``velib_stats_history_silver`` (SURVEY.md §2.9):
-    the medallion's ``build_history`` over the silver parse of
-    ``events``, with the event time as epoch millis.
+    :func:`_history`, with the event time as epoch millis.
 
     Renames + per-station ``net_flow`` (lag, W3) + trailing 1h moving
     average (RANGE frame over epoch seconds, W4).  Both windows share one
     hash partitioning on station_code: a single shuffle feeds both.
     """
-    history = build_history(silver_transform(load_table(spark, sf_dir, "events")))
-    return history.select(
+    return _history(spark, sf_dir).select(
         "station_code",
         "bikes_available",
         "net_flow",
@@ -89,34 +97,22 @@ def dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The gold-building query Q3 (reference src/assets/velib_alerte.py:19-75).
-
-    history (lag over full data) -> last-4h time filter (P4, cutoff
-    derived from max(ts), never wall clock) -> dedup-to-latest (W1) ->
+    """The gold-building query Q3 (reference src/assets/velib_alerte.py:19-75):
+    the medallion's own gold transform, ``pipeline.build_alerts`` over
+    :func:`_history`, with the event time as epoch millis.  So this is
+    the alert rule ``run_medallion`` commits, not a second copy of it:
+    last-4h cutoff (P4, derived from max(ts), never wall clock) ->
+    latest row per station (W1, ``bikes_available DESC`` tiebreak) ->
     business rule (P5: bikes<thr AND trend<=0; NULL trend non-alerting)
-    -> alert level (P6: when/otherwise).  The 1-row max(ts) side is
-    broadcast, so the only shuffle is the station window.
+    -> alert level (P6: when/otherwise).
     """
-    e = load_table(spark, sf_dir, "events")
-    h = e.withColumn("net_flow", net_flow("user_id", "ts", "event_id", "value"))
-    cutoff = e.agg(F.max("ts").alias("max_ts"))
-    recent = (
-        h.crossJoin(F.broadcast(cutoff))
-        .filter(F.col("ts") >= F.col("max_ts") - F.expr("INTERVAL 4 HOURS"))
-        .drop("max_ts")
-    )
-    latest = latest_per_key(recent, "user_id", "ts", "event_id")
-    return (
-        latest.filter((F.col("value") < ALERT_MAX) & (F.col("net_flow") <= 0))
-        .select(
-            F.col("user_id").alias("station_code"),
-            F.col("value").alias("bikes_available"),
-            F.col("net_flow"),
-            F.unix_millis("ts").alias("last_reported_ms"),
-            F.when(F.col("value") < CRITICAL_MAX, "CRITICAL_EMPTY")
-            .otherwise("WARNING_LOW")
-            .alias("alert_level"),
-        )
+    return build_alerts(_history(spark, sf_dir)).select(
+        "station_code",
+        "bikes_available",
+        "net_flow",
+        "moving_avg_1h",
+        F.unix_millis("last_reported").alias("last_reported_ms"),
+        "alert_level",
     )
 
 
@@ -270,6 +266,24 @@ _DEDUP_LATEST_CTE = """
       PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
 """
 
+# the history enrichment (lag + 1 h RANGE frame), ``ts`` kept so the
+# alert mirror applies its 4 h cutoff on the timestamp itself
+_HISTORY_CTE = """
+  SELECT user_id AS station_code,
+         value AS bikes_available,
+         value - lag(value) OVER (
+             PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS net_flow,
+         ROUND(
+           CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER wr AS DOUBLE)
+           / COUNT(value) OVER wr, 6) AS moving_avg_1h,
+         ts,
+         strftime(ts, '%Y-%m-%d') AS "date"
+  FROM events
+  WINDOW wr AS (PARTITION BY user_id
+                ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
+                RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
+"""
+
 ORACLE: dict[str, str] = {
     "velib_silver_parse": """
         SELECT event_id,
@@ -281,20 +295,10 @@ ORACLE: dict[str, str] = {
                strftime(ts, '%Y-%m-%d') AS "date"
         FROM events
     """,
-    "velib_history_enrich": """
-        SELECT user_id AS station_code,
-               value AS bikes_available,
-               value - lag(value) OVER w AS net_flow,
-               ROUND(
-                 CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER wr AS DOUBLE)
-                 / COUNT(value) OVER wr, 6) AS moving_avg_1h,
-               epoch_ms(ts) AS last_reported_ms,
-               strftime(ts, '%Y-%m-%d') AS "date"
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC),
-               wr AS (PARTITION BY user_id
-                      ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-                      RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
+    "velib_history_enrich": f"""
+        SELECT station_code, bikes_available, net_flow, moving_avg_1h,
+               epoch_ms(ts) AS last_reported_ms, "date"
+        FROM ({_HISTORY_CTE})
     """,
     "velib_dedup_latest": f"""
         SELECT user_id AS station_code,
@@ -303,30 +307,22 @@ ORACLE: dict[str, str] = {
         FROM ({_DEDUP_LATEST_CTE})
     """,
     "velib_alerts": f"""
-        WITH h AS (
-          SELECT *, value - lag(value) OVER (
-                   PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                 ) AS net_flow
-          FROM events
-        ),
-        m AS (SELECT max(ts) AS max_ts FROM events),
+        WITH h AS ({_HISTORY_CTE}),
         recent AS (
-          SELECT h.* FROM h CROSS JOIN m
-          WHERE h.ts >= m.max_ts - INTERVAL 4 HOUR
+          SELECT * FROM h
+          WHERE ts >= (SELECT max(ts) FROM h) - INTERVAL 4 HOUR
         ),
         latest AS (
           SELECT * FROM recent
           QUALIFY row_number() OVER (
-              PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
+              PARTITION BY station_code ORDER BY ts DESC, bikes_available DESC) = 1
         )
-        SELECT user_id AS station_code,
-               value AS bikes_available,
-               net_flow,
+        SELECT station_code, bikes_available, net_flow, moving_avg_1h,
                epoch_ms(ts) AS last_reported_ms,
-               CASE WHEN value < {CRITICAL_MAX} THEN 'CRITICAL_EMPTY'
+               CASE WHEN bikes_available < {CRITICAL_MAX} THEN 'CRITICAL_EMPTY'
                     ELSE 'WARNING_LOW' END AS alert_level
         FROM latest
-        WHERE value < {ALERT_MAX} AND net_flow <= 0
+        WHERE bikes_available < {ALERT_MAX} AND net_flow <= 0
     """,
     "velib_sparkline": f"""
         WITH latest AS ({_DEDUP_LATEST_CTE}),

@@ -24,7 +24,9 @@ checked against a DuckDB oracle.
 
 from __future__ import annotations
 
+import os
 import shutil
+import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -42,6 +44,8 @@ from velib_lakehouse_spark.sources.snapshots import (
     read_snapshot,
     read_table,
     retire_partitions,
+    table_head,
+    try_commit,
     write_snapshot,
 )
 from velib_lakehouse_spark.streaming.silver import SILVER_SCHEMA, silver_transform
@@ -1900,6 +1904,65 @@ QUERIES["snapshot_optimize_transactional"] = snapshot_optimize_transactional
 
 
 # ---- shallow clone + divergent writers --------------------------------------
+#
+# Delta's CREATE TABLE ... SHALLOW CLONE on the table protocol of
+# ``sources/snapshots.py``: a shallow clone is a NEW TABLE whose first commit references the
+# source's live data files by absolute path — metadata-only, zero data
+# copied, independent log from that point on.  Writes to the clone
+# never touch the source; writes to the source never reach the clone
+# (it pinned a version).  The documented Delta hazard carries over
+# verbatim: a VACUUM on the source deletes files the clone still
+# references — the clone trades isolation-with-zero-copy for a
+# lifetime dependency on source retention.
+
+
+def shallow_clone(
+    src_table: str, dst_table: str, version: int | None = None
+) -> dict:
+    """Commit, as ``dst_table``'s FIRST log entry (v0), a ``clone``
+    action whose adds are ``src_table``'s live files at ``version``
+    (default: source head) by absolute path.  ``read_table`` resolves
+    adds with ``os.path.join(table_path, rel)``, which passes absolute
+    paths through unchanged — so no read-path change is needed for a
+    clone to serve the source's bytes.
+
+    The target must have an empty log: the CAS on version 0 makes two
+    racing cloners resolve to exactly one winner (the loser gets
+    ``FileExistsError``, Delta's CREATE-TABLE-collision behavior).
+    The fold treats ``clone`` as pure adds, which is exact because it
+    can only ever sit at version 0.
+    """
+    if table_head(dst_table) >= 0:
+        raise FileExistsError(
+            f"clone target {dst_table} already has a commit log"
+        )
+    src_head = version if version is not None else table_head(src_table)
+    if src_head < 0:
+        raise FileNotFoundError(f"clone source {src_table} has no commits")
+    src_abs = os.path.abspath(src_table)
+    adds = [
+        [os.path.join(src_abs, rel), part]
+        for rel, part in live_files(src_table, src_head)
+    ]
+    entry = {
+        "version": 0,
+        "txn": "shallow_clone",
+        "action": "clone",
+        "domain": None,
+        "read_version": -1,
+        "attempt": 1,
+        "adds": adds,
+        "removes": [],
+        "clone_of": {"table": src_abs, "version": src_head},
+        "conflicts": [],
+        "committed_at": time.time(),
+    }
+    if not try_commit(dst_table, 0, entry):
+        raise FileExistsError(
+            f"clone target {dst_table} already has a commit log"
+        )
+    return entry
+
 
 SCL_DEL_MOD = 3  # source's post-clone delete predicate: k % 3 == 0
 
@@ -1911,7 +1974,7 @@ def snapshot_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists for (experiment on production data without copying it or
     endangering it).
 
-    Script (all through ``sources/snapshots.py``):
+    Script (all through ``sources/snapshots.py`` and :func:`shallow_clone`):
 
     * source v0: overwrite with orders ``(k, prio)`` partitioned by
       priority; source v1: blind append of the urgent rows shifted by
@@ -1936,7 +1999,7 @@ def snapshot_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     they hold; divergent writes are ordinary staged commits on
     independent logs, and reads resolve absolute-path adds with zero
     indirection.  The source-retention hazard (vacuum kills clones) is
-    documented at the protocol function.
+    documented at :func:`shallow_clone` and ``snapshots.vacuum_data``.
     """
 
     from velib_lakehouse_spark.sources import snapshots as snap
@@ -1968,7 +2031,7 @@ def snapshot_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda rv: (snap.stage_partition_files(appended, src, "app_a1", "prio"), []),
     )
 
-    clone_entry = snap.shallow_clone(src, dst)
+    clone_entry = shallow_clone(src, dst)
     assert clone_entry["clone_of"]["version"] == 1, clone_entry
 
     def stage_delete(read_version: int):

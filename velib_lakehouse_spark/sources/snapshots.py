@@ -21,6 +21,10 @@ idea on plain parquet, and both medallion tables use it:
   ``vacuum_data`` deletes what no retained version reaches;
   ``retire_partitions`` chains them into partition retention.
 
+Only what the medallion needs lives here.  The showcase's shallow clone
+(``sources/lake.py:shallow_clone``) is a first commit of absolute-path
+adds; ``live_files`` and ``vacuum_data`` read those as they are.
+
 Real Delta is out of reach here (no delta-spark/Iceberg jars, no
 installs), so ``format("delta")`` cannot initialize; on a cluster with
 the jars, enable Delta's session extension and catalog and point these
@@ -62,17 +66,6 @@ from velib_lakehouse_spark.session import apply_safe_confs
 # predicates; `None` means the whole table (blind overwrite).
 
 _LOG_DIR = "_log"
-
-
-class CommitConflict(Exception):
-    """A commit raced a semantically conflicting commit and must
-    re-stage from a fresh snapshot.  ``kind`` follows Delta's
-    taxonomy; ``with_version`` is the commit it lost against."""
-
-    def __init__(self, kind: str, with_version: int):
-        self.kind = kind
-        self.with_version = with_version
-        super().__init__(f"{kind} vs commit {with_version}")
 
 
 def _log_dir(table_path: str) -> Path:
@@ -374,12 +367,10 @@ def optimistic_commit(
             other = _load(table_path, v)
             kind = _conflicts_with(action, domain, other)
             if kind is not None:
-                conflict = CommitConflict(kind, other["version"])
+                conflict = {"kind": kind, "with_version": other["version"]}
                 break
         if conflict is not None:
-            conflicts.append(
-                {"kind": conflict.kind, "with_version": conflict.with_version}
-            )
+            conflicts.append(conflict)
             read_version = head
             adds, removes = stage_fn(read_version)
             continue
@@ -538,66 +529,6 @@ def vacuum_log(table_path: str) -> int:
     return len(victims)
 
 
-# ---- shallow clone (Delta's CREATE TABLE ... SHALLOW CLONE) -----------------
-#
-# A shallow clone is a NEW TABLE whose first commit references the
-# source's live data files by absolute path — metadata-only, zero data
-# copied, independent log from that point on.  Writes to the clone
-# never touch the source; writes to the source never reach the clone
-# (it pinned a version).  The documented Delta hazard carries over
-# verbatim: a VACUUM on the source deletes files the clone still
-# references — the clone trades isolation-with-zero-copy for a
-# lifetime dependency on source retention.
-
-
-def shallow_clone(
-    src_table: str, dst_table: str, version: int | None = None
-) -> dict:
-    """Commit, as ``dst_table``'s FIRST log entry (v0), a ``clone``
-    action whose adds are ``src_table``'s live files at ``version``
-    (default: source head) by absolute path.  ``read_table`` resolves
-    adds with ``os.path.join(table_path, rel)``, which passes absolute
-    paths through unchanged — so no read-path change is needed for a
-    clone to serve the source's bytes.
-
-    The target must have an empty log: the CAS on version 0 makes two
-    racing cloners resolve to exactly one winner (the loser gets
-    ``FileExistsError``, Delta's CREATE-TABLE-collision behavior).
-    The fold treats ``clone`` as pure adds, which is exact because it
-    can only ever sit at version 0.
-    """
-    if table_head(dst_table) >= 0:
-        raise FileExistsError(
-            f"clone target {dst_table} already has a commit log"
-        )
-    src_head = version if version is not None else table_head(src_table)
-    if src_head < 0:
-        raise FileNotFoundError(f"clone source {src_table} has no commits")
-    src_abs = os.path.abspath(src_table)
-    adds = [
-        [os.path.join(src_abs, rel), part]
-        for rel, part in live_files(src_table, src_head)
-    ]
-    entry = {
-        "version": 0,
-        "txn": "shallow_clone",
-        "action": "clone",
-        "domain": None,
-        "read_version": -1,
-        "attempt": 1,
-        "adds": adds,
-        "removes": [],
-        "clone_of": {"table": src_abs, "version": src_head},
-        "conflicts": [],
-        "committed_at": time.time(),
-    }
-    if not try_commit(dst_table, 0, entry):
-        raise FileExistsError(
-            f"clone target {dst_table} already has a commit log"
-        )
-    return entry
-
-
 # ---- physical data vacuum (Delta VACUUM) ------------------------------------
 
 
@@ -621,9 +552,10 @@ def vacuum_data(table_path: str, keep_last: int = 1) -> dict:
 
     * time travel below the horizon dies at READ time (the log entry
       may survive, the bytes do not) — same failure surface as Delta;
-    * a SHALLOW CLONE whose source is vacuumed loses the cloned bytes:
-      the clone's absolute-path adds dangle, and its reads fail loudly.
-      Source retention must outlive clones (the CLONE contract).
+    * a SHALLOW CLONE (``sources/lake.py``) whose source is vacuumed
+      loses the cloned bytes: the clone's absolute-path adds dangle,
+      and its reads fail loudly.  Source retention must outlive clones
+      (the CLONE contract).
     """
     head = table_head(table_path)
     if head < 0:

@@ -3,10 +3,11 @@ src/assets/silver.py re-expressed).
 
 The reference drains a Kafka topic with ``Trigger.AvailableNow`` into
 date-partitioned parquet with a checkpoint (reference
-src/assets/silver.py:29-70).  Here the source is abstracted: tests, the
-pipeline and the benchmark use a *file* source (same Structured
+src/assets/silver.py:29-70).  Here the source is a *file* source over
+the bronze ``events`` files (``_event_stream``: same Structured
 Streaming engine, deterministic, no broker needed — SURVEY.md §7
-hard-part 4), and ``kafka_stream`` shows the production wiring.
+hard-part 4).  The reference's Kafka scan (src/assets/silver.py:29-36)
+needs the spark-sql-kafka package, which is not in this build.
 
 ``run_silver_stream`` drains the stream into the silver log table, one
 idempotent commit per micro-batch (sources/snapshots.py).  The registry's
@@ -64,21 +65,6 @@ def _event_stream(
     if os.path.isdir(tbl):
         return reader.parquet(tbl)
     return reader.option("pathGlobFilter", "events*.parquet").parquet(sf_dir)
-
-
-def kafka_stream(spark: SparkSession, brokers: str, topic: str) -> DataFrame:
-    """Production source: Kafka scan shaped like reference silver.py:29-36.
-
-    Requires the spark-sql-kafka package on the classpath (not present in
-    this build — wired but unused in tests).
-    """
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .load()
-    )
 
 
 def silver_transform(stream: DataFrame) -> DataFrame:
