@@ -31,8 +31,10 @@ SPARK_TO_ARROW = {
 CASES = list(registry.ORACLE.items())
 
 
+# Paired by name with test_oracle_parity.py::test_query_matches_oracle
+# (tests/conftest.py runs the two back to back on one build of the query).
 @pytest.mark.parametrize("name,sql", CASES, ids=[c[0] for c in CASES])
-def test_dtypes_match(spark, name, sql):
+def test_dtypes_match(registry_query, name, sql):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
@@ -42,7 +44,7 @@ def test_dtypes_match(spark, name, sql):
     con.close()
 
     problems = []
-    for col, spark_type in registry.QUERIES[name](spark, SF_DIR).dtypes:
+    for col, spark_type in registry_query(name).dtypes:
         ot = oracle_types.get(col)
         if ot is None:
             continue

@@ -23,9 +23,11 @@ def test_every_registered_query_has_oracle_entry_key():
     assert set(BOUNDED_UNPARTITIONED_WINDOWS) <= set(registry.QUERIES)
 
 
+# Paired by name with test_dtype_parity.py::test_dtypes_match
+# (tests/conftest.py runs the two back to back on one build of the query).
 @pytest.mark.parametrize("name,sql", CASES, ids=[c[0] for c in CASES])
-def test_query_matches_oracle(spark, name, sql):
-    df = registry.QUERIES[name](spark, SF_DIR)
+def test_query_matches_oracle(registry_query, name, sql):
+    df = registry_query(name)
     problems = compare(df, sql, SF_DIR)
     # Consumers that sort or hash result rows (pandas sort_values, value
     # hashing) reject array/map cells, so arrays are serialized in-query.

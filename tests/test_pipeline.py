@@ -154,14 +154,17 @@ def test_medallion_reads_no_gold_back(spark, tmp_path, monkeypatch):
 
 
 def test_core_imports_no_showcase_module():
-    """The medallion core (pipeline + serving) loads no registry showcase
-    module: the only query inventory it imports is ``operators.velib``,
-    whose queries serving answers from."""
+    """The medallion core (pipeline + serving) loads no registry code: no
+    query inventory (a module with ``QUERIES``), no ``operators`` module
+    (serving owns its query) and not the registry's ``functions.exact``
+    helpers.  The registry depends on the core, never the reverse."""
     probe = (
         "import sys\n"
         "import velib_lakehouse_spark.pipeline, velib_lakehouse_spark.serving\n"
         "print(sorted(n for n, m in list(sys.modules.items())"
-        " if n.startswith('velib_lakehouse_spark') and hasattr(m, 'QUERIES')))"
+        " if n.startswith('velib_lakehouse_spark.operators')"
+        " or n == 'velib_lakehouse_spark.functions.exact'"
+        " or (n.startswith('velib_lakehouse_spark') and hasattr(m, 'QUERIES'))))"
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     path = os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))
@@ -170,4 +173,4 @@ def test_core_imports_no_showcase_module():
         [sys.executable, "-c", probe], capture_output=True, text=True,
         check=True, env=env, cwd=repo,
     ).stdout
-    assert out.strip() == "['velib_lakehouse_spark.operators.velib']"
+    assert out.strip() == "[]"

@@ -15,7 +15,6 @@ import pytest
 
 from velib_lakehouse_spark import serving
 from velib_lakehouse_spark.catalog import TABLES
-from velib_lakehouse_spark.operators import velib
 from velib_lakehouse_spark.registry import ORACLE
 from tests.conftest import SF_DIR, SF_DIR_MED
 from tests.oracle_harness import run_oracle
@@ -83,13 +82,13 @@ def test_cache_miss_is_one_events_pass(spark, monkeypatch):
     at most 6 Spark jobs for both payloads (18 jobs and 3 loads when each
     serving query ran on its own)."""
     loads = []
-    load_table = velib.load_table
+    load_table = serving.load_table
 
     def counted(spark, sf_dir, name):
         loads.append(name)
         return load_table(spark, sf_dir, name)
 
-    monkeypatch.setattr(velib, "load_table", counted)
+    monkeypatch.setattr(serving, "load_table", counted)
     serving._CACHE.pop(os.path.abspath(SF_DIR), None)
     sc = spark.sparkContext
     try:
@@ -210,7 +209,7 @@ def test_failed_computation_is_not_cached(spark, lake, monkeypatch):
     def broken(*args, **kwargs):
         raise RuntimeError("engine down")
 
-    monkeypatch.setattr(velib, "station_summary", broken)
+    monkeypatch.setattr(serving, "station_summary", broken)
     with pytest.raises(RuntimeError, match="engine down"):
         serving.pipeline_health_payload(spark, root)
     assert os.path.abspath(root) not in serving._CACHE

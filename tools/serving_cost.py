@@ -40,20 +40,19 @@ import jvm_cpu  # noqa: E402
 import run as bench  # noqa: E402
 
 from velib_lakehouse_spark import serving  # noqa: E402
-from velib_lakehouse_spark.operators import velib  # noqa: E402
 
 _ROUND = itertools.count()  # one job group per round
 
 
 def _count_event_loads(loads: list[str]) -> None:
     """Wrap the ``load_table`` the serving queries call, recording names."""
-    orig = velib.load_table
+    orig = serving.load_table
 
     def load_table(spark, sf_dir, name):
         loads.append(name)
         return orig(spark, sf_dir, name)
 
-    velib.load_table = load_table
+    serving.load_table = load_table
 
 
 def measure(spark, lake: str, rounds: int, cold: bool, loads: list[str]) -> list[dict]:

@@ -14,6 +14,11 @@ windowed/batch gold -> serving SQL), built Spark-first:
   analysis, multimodal plumbing) — ``operators/{dedup,similarity,text,
   multimodal}.py``
 
+The medallion core is ``pipeline.py`` + ``serving.py`` (which owns the
+serving query) and what they import; it loads no ``operators`` module.
+The registry (``registry.py``, ``operators/``) depends on the core,
+never the other way round.
+
 Everything is stock PySpark (Catalyst does the optimizing); queries are
 written declaratively so predicate pushdown, column pruning, partition
 pruning and broadcast selection apply unchanged on a real cluster.

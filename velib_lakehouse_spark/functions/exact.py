@@ -21,6 +21,10 @@ Conventions (mirror these in oracle SQL):
 This doubles as the 100TB answer: decimal sums are associative, so
 map-side partial aggregation and AQE re-partitioning cannot change the
 result.
+
+``DEC`` (``decimal(18,4)``) is defined once, in the medallion core's
+``functions/timeseries.py``; this module imports it from there.  The
+rest of this module is registry-only and stays out of the core.
 """
 
 from __future__ import annotations
@@ -28,7 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-DEC = "decimal(18,4)"
+from velib_lakehouse_spark.functions.timeseries import DEC
+
 DEC_HI = "decimal(18,6)"
 
 
@@ -51,26 +56,6 @@ def dec_avg(col: Column | str, alias: str) -> Column:
 def dec_product(a: Column, b: Column) -> Column:
     """Exact product of two double columns (decimal domain)."""
     return a.cast(DEC_HI) * b.cast(DEC_HI)
-
-
-# ---- oracle-SQL (DuckDB) counterparts, for building mirror strings ----
-
-def sql_dec_sum(expr: str, alias: str) -> str:
-    return (
-        f"CAST(ROUND(SUM(CAST({expr} AS DECIMAL(18,4))), 2) AS DOUBLE)"
-        f" AS {alias}"
-    )
-
-
-def sql_dec_avg(expr: str, alias: str) -> str:
-    return (
-        f"ROUND(CAST(SUM(CAST({expr} AS DECIMAL(18,4))) AS DOUBLE)"
-        f" / COUNT({expr}), 6) AS {alias}"
-    )
-
-
-def sql_dec_product(a: str, b: str) -> str:
-    return f"(CAST({a} AS DECIMAL(18,6)) * CAST({b} AS DECIMAL(18,6)))"
 
 
 # ---- integer fixed-point fast path -----------------------------------------

@@ -8,7 +8,7 @@ SURVEY.md §2.9).  These helpers package those idioms:
 * ``latest_per_key``   — top-1-per-group dedup (row_number desc == 1)
 * ``net_flow``         — value minus previous value per key (lag)
 * ``trailing_avg``     — range-frame average over a trailing window of
-  seconds, computed in exact decimal (see functions/exact.py)
+  seconds, computed in exact decimal (``DEC``)
 
 All of them shuffle once on the partition key and nothing else — the
 window ordering rides the same hash partitioning, which is the plan you
@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from velib_lakehouse_spark.functions.exact import DEC
+# the exact-sum decimal type; functions/exact.py imports it from here
+DEC = "decimal(18,4)"
 
 
 def latest_per_key(df: DataFrame, key: str, order: str, tiebreak: str) -> DataFrame:

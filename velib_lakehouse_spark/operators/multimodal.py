@@ -129,15 +129,6 @@ AUDIO_FRAME = 16  # samples per analysis window (non-overlapping)
 AUDIO_CENTER = 128  # unsigned-byte PCM midpoint
 
 
-def decode_audio(payload: bytes) -> list[int]:
-    """Real audio decode hook — swaps in for ``_fake_pcm`` where
-    soundfile/ffmpeg exist.  Here the deterministic stand-in treats the
-    payload bytes AS the PCM stream, which keeps every downstream stage
-    (schema, batching, windowing, aggregation) real and oracle-checked.
-    """
-    raise NotImplementedError("audio codecs are not available in this build")
-
-
 def _fake_pcm(payload: bytes) -> list[int]:
     return list(payload)
 

@@ -9,7 +9,10 @@ Thresholds are rescaled to the events value domain (0..~200):
 The history and alerts queries are the medallion's own transforms
 (``pipeline.build_history`` / ``build_alerts`` over
 ``silver_transform``): the alerts query is gold's transform, so the
-registry checks the rule ``run_medallion`` commits.
+registry checks the rule ``run_medallion`` commits.  The serving
+queries (``sparkline``, ``alert_bands``, ``health``) are projections of
+``serving.station_summary``, the summary the API folds its payloads
+from.  This module depends on the core; the core never imports it.
 
 Determinism rules (SURVEY.md §7 hard parts):
 * no wall-clock — every time cutoff is derived from max(ts) in the data;
@@ -25,19 +28,17 @@ over the latest rows, one per station, in a single partition.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from velib_lakehouse_spark.catalog import load_table
-from velib_lakehouse_spark.functions.collections import csv_scaled, ordered_collect
-from velib_lakehouse_spark.functions.exact import DEC
+from velib_lakehouse_spark.functions.collections import csv_scaled
 from velib_lakehouse_spark.functions.timeseries import latest_per_key
 # the alert thresholds are the medallion's; they stay importable from here
 from velib_lakehouse_spark.pipeline import ALERT_MAX, CRITICAL_MAX, build_alerts, build_history
+# serving owns the per-station summary its payloads fold from
+from velib_lakehouse_spark.serving import TARGET_MAX, station_summary
 from velib_lakehouse_spark.streaming.silver import silver_transform
-
-# Rescaled serving threshold (events.value plays bikes_available).
-TARGET_MAX = 60.0  # reference: gold scan keeps bikes <= 5 (src/api.py:45)
 
 
 def silver_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,51 +117,11 @@ def alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def station_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One row per station: everything the two serving routes read.
-
-    One ``events`` scan, one ``row_number`` window on the station ordered
-    newest first (``ts DESC, event_id DESC``) and one ``groupBy`` on the
-    same key, so the plan has a single Exchange.  Columns:
-
-    * ``current_bikes``: the rank-1 (latest) value;
-    * ``sparkline_data``: the rank <= 5 readings in time order (W2 + A5,
-      the ``LIST(ORDER BY)`` idiom);
-    * ``value_sum``: the exact ``DECIMAL(18,4)`` sum of the values;
-    * ``n_events`` and ``latest_sync_ms``: the count and the newest
-      ``ts`` in epoch millis.
-
-    :func:`sparkline`, :func:`alert_bands` and :func:`health` are
-    projections of it, and ``serving`` folds both payloads from its
-    collected rows (at most one per station).
-    """
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        e.withColumn("rank", F.row_number().over(w))
-        .groupBy(F.col("user_id").alias("station_code"))
-        .agg(
-            F.max(F.when(F.col("rank") == 1, F.col("value"))).alias("current_bikes"),
-            ordered_collect(
-                F.col("value"),
-                F.unix_millis("ts"),
-                F.col("event_id"),
-                where=F.col("rank") <= 5,
-            ).alias("sparkline_data"),
-            F.sum(F.col("value").cast(DEC)).alias("value_sum"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.max(F.unix_millis("ts")).alias("latest_sync_ms"),
-        )
-    )
-
-
 def sparkline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serving query Q1 ``/alerts/critical`` (reference src/api.py:37-84):
     the stations whose latest value is <= ``TARGET_MAX``, each with its
     last 5 readings in time order and its current value.  A projection
-    of :func:`station_summary`; a NULL station never matches a target,
+    of ``serving.station_summary``; a NULL station never matches a target,
     as in the reference's ``IN`` filter."""
     return (
         station_summary(spark, sf_dir)
@@ -186,7 +147,7 @@ def sparkline_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 def alert_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The driver-side count-if bands folded into the engine (A7;
     reference src/api.py:73-74 computes them in Python post-hoc), over
-    each station's latest value in :func:`station_summary`."""
+    each station's latest value in ``serving.station_summary``."""
     latest = F.col("current_bikes")
     return station_summary(spark, sf_dir).agg(
         F.count_if(latest < CRITICAL_MAX).alias("critical_count"),
@@ -203,7 +164,7 @@ def health(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two single-row aggregate CTEs (A8) cross-joined (J3): expected
     station count from the dimension (customer plays the GBFS reference
     doc) vs. observed activity, rolled up from the per-station counters
-    of :func:`station_summary`; ``zombie_stations`` is the data-loss
+    of ``serving.station_summary``; ``zombie_stations`` is the data-loss
     audit (reference src/api.py:121).
     """
     c = load_table(spark, sf_dir, "customer")

@@ -11,13 +11,19 @@ with the number of landed files): if the listing matches the cached one,
 it returns the stored payload and runs no Spark job; otherwise it
 recomputes both payloads under a lock.
 
-A miss is one pass over ``events``: it collects the registry's
-``station_summary`` (``operators/velib.py``, one row per station, one
-Exchange) and counts ``customer``, then folds both payloads on the
-driver, as the reference does.  The registry's ``sparkline``,
-``alert_bands`` and ``health`` queries are the same fold as Spark
-projections of that summary.  Each version also stores each route's
-JSON body, encoded once, which the HTTP handler sends as is.
+This module owns its query, as the reference keeps its serving SQL in
+its API module: :func:`station_summary` says what is summarised per
+station, and ``_compute`` how both payloads fold from it.  A miss is
+one pass over ``events``: it collects that summary (one row per
+station, one Exchange) and counts ``customer``, then folds both
+payloads on the driver, as the reference does.  The registry's
+``sparkline``, ``alert_bands`` and ``health`` queries
+(``operators/velib.py``) import the summary from here and are the same
+fold as Spark projections of it; the core imports no registry module.
+Each version also stores each route's JSON body, encoded once, which
+the HTTP handler sends as is.  Once serving answers from what the tick
+committed instead of bronze, the Spark summary is registry-only and
+goes back to ``operators/velib.py``.
 
 Freshness contract: an answer reflects at least the files listed at
 request time.  This rests on one assumption, the same one Spark's file
@@ -28,11 +34,10 @@ lands while Spark reads the lake may be in the answer already; the next
 request lists it and recomputes.  Files Spark's reader skips (names
 starting with ``.`` or ``_``) are not part of the listing.
 
-Each endpoint is a function returning the JSON-able dict the FastAPI
-handler would emit; ``serve`` puts them on the stdlib HTTP server, and
-``build_app`` on FastAPI when it is installed (it is not in this build,
-so that wiring is import-gated).  The payload dicts are shared between
-requests: callers must not mutate them.
+Each endpoint is a function returning the JSON-able dict the
+reference's FastAPI handler emits; ``serve`` puts them on the stdlib
+HTTP server.  The payload dicts are shared between requests: callers
+must not mutate them.
 """
 
 from __future__ import annotations
@@ -45,9 +50,16 @@ import threading
 from decimal import ROUND_HALF_UP, Decimal
 from typing import NamedTuple
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
-from velib_lakehouse_spark.operators import velib
+from velib_lakehouse_spark.catalog import load_table
+from velib_lakehouse_spark.functions.collections import ordered_collect
+from velib_lakehouse_spark.functions.timeseries import DEC
+from velib_lakehouse_spark.pipeline import ALERT_MAX, CRITICAL_MAX
+
+# Rescaled serving threshold (events.value plays bikes_available).
+TARGET_MAX = 60.0  # reference: gold scan keeps bikes <= 5 (src/api.py:45)
 
 ALERTS = "/alerts/critical"
 HEALTH = "/health/pipeline"
@@ -95,25 +107,65 @@ def _lake_key(root: str) -> tuple:
     )
 
 
+def station_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row per station: everything the two serving routes read.
+
+    One ``events`` scan, one ``row_number`` window on the station ordered
+    newest first (``ts DESC, event_id DESC``) and one ``groupBy`` on the
+    same key, so the plan has a single Exchange.  Columns:
+
+    * ``current_bikes``: the rank-1 (latest) value;
+    * ``sparkline_data``: the rank <= 5 readings in time order (W2 + A5,
+      the ``LIST(ORDER BY)`` idiom);
+    * ``value_sum``: the exact ``DECIMAL(18,4)`` sum of the values;
+    * ``n_events`` and ``latest_sync_ms``: the count and the newest
+      ``ts`` in epoch millis.
+
+    ``_compute`` folds both payloads from its collected rows (at most
+    one per station); the registry's ``velib.sparkline``,
+    ``alert_bands`` and ``health`` are projections of it.
+    """
+    e = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
+    return (
+        e.withColumn("rank", F.row_number().over(w))
+        .groupBy(F.col("user_id").alias("station_code"))
+        .agg(
+            F.max(F.when(F.col("rank") == 1, F.col("value"))).alias("current_bikes"),
+            ordered_collect(
+                F.col("value"),
+                F.unix_millis("ts"),
+                F.col("event_id"),
+                where=F.col("rank") <= 5,
+            ).alias("sparkline_data"),
+            F.sum(F.col("value").cast(DEC)).alias("value_sum"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.max(F.unix_millis("ts")).alias("latest_sync_ms"),
+        )
+    )
+
+
 def _compute(spark: SparkSession, sf_dir: str) -> dict:
     """Both route payloads, folded on the driver from one collected
-    :func:`~velib_lakehouse_spark.operators.velib.station_summary` (one
-    row per station) and the ``customer`` count.
+    :func:`station_summary` (one row per station) and the ``customer``
+    count.
 
     The fold is what the registry's ``sparkline``, ``alert_bands`` and
     ``health`` projections compute in Spark; the exact decimal sum is
     rounded the way ``ROUND(x, 2)`` does (half up) before it becomes a
     float.
     """
-    rows = velib.station_summary(spark, sf_dir).collect()
-    total_expected = velib.load_table(spark, sf_dir, "customer").count()
+    rows = station_summary(spark, sf_dir).collect()
+    total_expected = load_table(spark, sf_dir, "customer").count()
     stations = [r for r in rows if r.station_code is not None]
     latest = [r.current_bikes for r in rows if r.current_bikes is not None]
     targets = sorted(
         (
             r
             for r in stations
-            if r.current_bikes is not None and r.current_bikes <= velib.TARGET_MAX
+            if r.current_bikes is not None and r.current_bikes <= TARGET_MAX
         ),
         key=lambda r: (r.current_bikes, r.station_code),
     )
@@ -130,9 +182,9 @@ def _compute(spark: SparkSession, sf_dir: str) -> dict:
                 }
                 for r in targets
             ],
-            "critical_count": sum(v < velib.CRITICAL_MAX for v in latest),
+            "critical_count": sum(v < CRITICAL_MAX for v in latest),
             "warning_count": sum(
-                velib.CRITICAL_MAX <= v < velib.ALERT_MAX for v in latest
+                CRITICAL_MAX <= v < ALERT_MAX for v in latest
             ),
             "total_stations": len(rows),
         },
@@ -193,10 +245,9 @@ ROUTES = {
 def serve(spark: SparkSession, sf_dir: str, host: str = "127.0.0.1", port: int = 0):
     """Serve the two reference endpoints over HTTP with the stdlib only.
 
-    FastAPI is not installable in this build (no network, no pip — see
-    DELTA_ATTEMPT.md for the sandbox egress probes), so the drop-in
-    proof uses ``http.server``: same paths as reference src/api.py,
-    same JSON payloads the FastAPI wiring would emit.  Returns a
+    The reference mounts these routes on FastAPI, which this build does
+    not ship (DELTA_ATTEMPT.md), so they run on ``http.server``: same
+    paths as reference src/api.py, same JSON payloads.  Returns a
     started ``ThreadingHTTPServer`` (daemon thread); callers own
     ``shutdown()``.  ``port=0`` binds an ephemeral port, exposed as
     ``server.server_address[1]``.
@@ -245,26 +296,3 @@ def serve(spark: SparkSession, sf_dir: str, host: str = "127.0.0.1", port: int =
     thread = threading.Thread(target=server.serve_forever, daemon=True)
     thread.start()
     return server
-
-
-def build_app(spark: SparkSession, sf_dir: str):
-    """Mount the endpoints on FastAPI when available (reference
-    src/api.py routes, same paths)."""
-    try:
-        from fastapi import FastAPI
-    except ImportError as exc:  # pragma: no cover - not in this build
-        raise ImportError(
-            "fastapi is not installed; use the *_payload functions directly"
-        ) from exc
-
-    app = FastAPI(title="velib-lakehouse-spark")
-
-    @app.get("/alerts/critical")
-    def alerts_route():  # pragma: no cover - needs fastapi
-        return critical_alerts_payload(spark, sf_dir)
-
-    @app.get("/health/pipeline")
-    def health_route():  # pragma: no cover - needs fastapi
-        return pipeline_health_payload(spark, sf_dir)
-
-    return app

@@ -1,11 +1,10 @@
 """Generic format reader (reference src/resources.py:106-120 generalized).
 
 A thin dispatch over ``DataFrameReader`` so pipelines name a format +
-path + options instead of hand-rolling reader chains.  Delta/Iceberg
-are wired behind availability probes — their jars are not in this build,
-so the lakehouse tables fall back to hive-partitioned parquet (same
-layout the reference uses; Delta adds ACID overwrite + time travel when
-the package is present).
+path + options instead of hand-rolling reader chains.  The Delta and
+Iceberg jars are not in this build, so the lakehouse tables are
+hive-partitioned parquet (same layout the reference uses) under the
+commit log of ``sources/snapshots.py``.
 """
 
 from __future__ import annotations
@@ -14,15 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from velib_lakehouse_spark.session import apply_safe_confs
 from velib_lakehouse_spark.tempdirs import scratch_dir
-
-
-def delta_available(spark: SparkSession) -> bool:
-    """True when the Delta Lake classes are on the JVM classpath."""
-    try:
-        spark._jvm.Class.forName("org.apache.spark.sql.delta.DeltaLog")
-        return True
-    except Exception:
-        return False
 
 
 def read_any(

@@ -316,6 +316,9 @@ def _conflicts_with(action: str, domain: set[str] | None, other: dict) -> str | 
     return "ConcurrentDeleteRead" if other_removes else None
 
 
+MAX_ATTEMPTS = 5  # CAS rounds before a transaction gives up
+
+
 def optimistic_commit(
     table_path: str,
     action: str,
@@ -323,7 +326,6 @@ def optimistic_commit(
     txn: str,
     stage_fn,
     prestaged: tuple[int, list, list] | None = None,
-    max_attempts: int = 5,
     stream_txn: dict | None = None,
 ) -> dict:
     """Stage-validate-CAS loop; returns the winning log entry.
@@ -345,7 +347,7 @@ def optimistic_commit(
         read_version = table_head(table_path)
         adds, removes = stage_fn(read_version)
     conflicts: list[dict] = []
-    for attempt in range(1, max_attempts + 1):
+    for attempt in range(1, MAX_ATTEMPTS + 1):
         commit_vs, ckpt_vs = _log_versions(table_path)
         head = _head(commit_vs, ckpt_vs)
         # validation needs EVERY commit in (read_version, head]; log
@@ -391,7 +393,7 @@ def optimistic_commit(
         if try_commit(table_path, head + 1, entry):
             return entry
         # lost the CAS race: loop re-validates against the winner
-    raise RuntimeError(f"txn {txn}: gave up after {max_attempts} attempts")
+    raise RuntimeError(f"txn {txn}: gave up after {MAX_ATTEMPTS} attempts")
 
 
 # ---- streaming micro-batch commits (the Delta `txn` action) ----------------
