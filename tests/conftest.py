@@ -12,7 +12,7 @@ SF_DIR_MED = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="velib-lakehouse-tests", cpus=4, shuffle_partitions=4)
+    spark = get_spark(app_name="velib-lakehouse-tests", cpus=4)
     yield spark
     spark.stop()
 

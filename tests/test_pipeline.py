@@ -156,14 +156,16 @@ def test_medallion_reads_no_gold_back(spark, tmp_path, monkeypatch):
 def test_core_imports_no_showcase_module():
     """The medallion core (pipeline + serving) loads no registry code: no
     query inventory (a module with ``QUERIES``), no ``operators`` module
-    (serving owns its query) and not the registry's ``functions.exact``
-    helpers.  The registry depends on the core, never the reverse."""
+    (serving owns its query), not the registry's ``functions.exact``
+    helpers and not ``catalog`` (serving reads bronze through the silver
+    stream's contract).  The registry depends on the core, never the
+    reverse."""
     probe = (
         "import sys\n"
         "import velib_lakehouse_spark.pipeline, velib_lakehouse_spark.serving\n"
         "print(sorted(n for n, m in list(sys.modules.items())"
         " if n.startswith('velib_lakehouse_spark.operators')"
-        " or n == 'velib_lakehouse_spark.functions.exact'"
+        " or n in ('velib_lakehouse_spark.functions.exact', 'velib_lakehouse_spark.catalog')"
         " or (n.startswith('velib_lakehouse_spark') and hasattr(m, 'QUERIES'))))"
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

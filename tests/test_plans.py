@@ -42,7 +42,7 @@ def test_sparkline_is_one_station_pass(spark):
     any kind (so no shuffled SortMergeJoin as ``events`` grows)."""
     plan = _plan(registry.QUERIES["velib_sparkline"](spark, SF_DIR))
     assert plan.count("Exchange") == 1
-    assert "Exchange hashpartitioning(user_id#" in plan
+    assert "Exchange hashpartitioning(station_code#" in plan
     assert "Join" not in plan and "CartesianProduct" not in plan
     assert plan.count("FileScan") == 1
     assert "/events.parquet" in plan

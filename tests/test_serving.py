@@ -12,9 +12,11 @@ import urllib.request
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.readwriter import DataFrameReader
 
 from velib_lakehouse_spark import serving
 from velib_lakehouse_spark.catalog import TABLES
+from velib_lakehouse_spark.pipeline import read_snapshot, run_medallion
 from velib_lakehouse_spark.registry import ORACLE
 from tests.conftest import SF_DIR, SF_DIR_MED
 from tests.oracle_harness import run_oracle
@@ -78,17 +80,17 @@ def test_served_payloads_equal_oracle(spark, sf_dir):
 
 
 def test_cache_miss_is_one_events_pass(spark, monkeypatch):
-    """A miss collects one per-station summary: one ``events`` load and
-    at most 6 Spark jobs for both payloads (18 jobs and 3 loads when each
-    serving query ran on its own)."""
-    loads = []
-    load_table = serving.load_table
+    """A miss collects one per-station summary: one read of the bronze
+    files and at most 5 Spark jobs for both payloads (18 jobs and 3
+    ``events`` loads when each serving query ran on its own)."""
+    reads = []
+    parquet = DataFrameReader.parquet
 
-    def counted(spark, sf_dir, name):
-        loads.append(name)
-        return load_table(spark, sf_dir, name)
+    def counted(self, *paths, **options):
+        reads.append(paths)
+        return parquet(self, *paths, **options)
 
-    monkeypatch.setattr(serving, "load_table", counted)
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
     serving._CACHE.pop(os.path.abspath(SF_DIR), None)
     sc = spark.sparkContext
     try:
@@ -98,8 +100,9 @@ def test_cache_miss_is_one_events_pass(spark, monkeypatch):
         jobs = sc.statusTracker().getJobIdsForGroup("serving-miss")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert loads.count("events") == 1
-    assert 0 < len(jobs) <= 6
+    assert reads.count((f"{SF_DIR}/events.parquet",)) == 1
+    assert len(reads) == 2  # bronze and customer.parquet
+    assert 0 < len(jobs) <= 5
 
 
 def test_cache_hit_runs_no_spark_job(spark):
@@ -123,6 +126,14 @@ def _land(dest: str, table) -> None:
     os.replace(tmp, dest)
 
 
+def _link_tables(root) -> None:
+    """Link every ``SF_DIR`` table but ``events`` into ``root``."""
+    root.mkdir(parents=True, exist_ok=True)
+    for t in TABLES:
+        if t != "events":
+            os.symlink(f"{SF_DIR}/{t}.parquet", root / f"{t}.parquet")
+
+
 @pytest.fixture
 def lake(tmp_path):
     """A copy of ``SF_DIR`` whose ``events.parquet`` is a directory holding
@@ -130,9 +141,7 @@ def lake(tmp_path):
     ``(lake, the remaining third)``."""
     root = tmp_path / "lake"
     (root / "events.parquet").mkdir(parents=True)
-    for t in TABLES:
-        if t != "events":
-            os.symlink(f"{SF_DIR}/{t}.parquet", root / f"{t}.parquet")
+    _link_tables(root)
     events = pq.read_table(f"{SF_DIR}/events.parquet")
     third = events.num_rows // 3
     for i in range(2):
@@ -140,6 +149,30 @@ def lake(tmp_path):
             events.slice(i * third, third), root / "events.parquet" / f"part-{i}.parquet"
         )
     return str(root), events.slice(2 * third)
+
+
+def test_per_fetch_bronze_files_are_read_whole(spark, tmp_path):
+    """Bronze landed as per-fetch files (``events.parquet`` and
+    ``events_late1.parquet``) is one table to serving and to the silver
+    stream alike: the payloads equal the oracle over one ``events.parquet``
+    holding the rows of both, and so does ``run_medallion``'s gold."""
+    split, merged = tmp_path / "split", tmp_path / "merged"
+    _link_tables(split)
+    _link_tables(merged)
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    third = events.num_rows // 3
+    pq.write_table(events.slice(0, third), split / "events.parquet")
+    pq.write_table(events.slice(third), split / "events_late1.parquet")
+    pq.write_table(events, merged / "events.parquet")
+
+    assert _served(spark, str(split)) == _expected(str(merged))
+
+    got = run_medallion(spark, str(split), str(tmp_path / "lake_split"))
+    want = run_medallion(spark, str(merged), str(tmp_path / "lake_merged"))
+    assert got["silver_rows"] == want["silver_rows"] == events.num_rows
+    g, w = read_snapshot(spark, got["gold_table"]), read_snapshot(spark, want["gold_table"])
+    assert w.count() > 0
+    assert g.exceptAll(w).count() == 0 and w.exceptAll(g).count() == 0
 
 
 def _get(port: int, route: str):

@@ -37,7 +37,7 @@ import sys
 from velib_lakehouse_spark import registry
 from velib_lakehouse_spark.session import get_spark
 
-spark = get_spark(cpus=2, shuffle_partitions=2)
+spark = get_spark(cpus=2)
 for name in sys.argv[2:]:
     assert registry.QUERIES[name](spark, sys.argv[1]).collect()
 spark.stop()

@@ -1,4 +1,4 @@
-"""Cost of the serving payloads: Spark jobs, ``events`` loads, wall and CPU.
+"""Cost of the serving payloads: Spark jobs, bronze reads, wall and CPU.
 
     python3 tools/serving_cost.py --ticks 24 --rounds 10
 
@@ -15,14 +15,15 @@ that is the first miss in a fresh JVM, the one ``api_reads`` ``setup_s``
 includes; its ``jvm`` object splits the JVM's own CPU in that round by
 thread class (``tools/jvm_cpu.py``).  Then, for each mode, one JSON line
 with the median of the last half of the rounds (the first ones include
-the JIT warm-up).  Each line holds Spark jobs, calls to
-``load_table("events")``, wall seconds, and CPU seconds of this process
-and its descendants (the JVM and its Python workers).
+the JIT warm-up).  Each line holds Spark jobs, parquet reads of the
+bronze files (``events*.parquet``), wall seconds, and CPU seconds of
+this process and its descendants (the JVM and its Python workers).
 """
 
 from __future__ import annotations
 
 import argparse
+import fnmatch
 import itertools
 import json
 import os
@@ -39,23 +40,30 @@ import gen  # noqa: E402
 import jvm_cpu  # noqa: E402
 import run as bench  # noqa: E402
 
+from pyspark.sql.readwriter import DataFrameReader  # noqa: E402
+
 from velib_lakehouse_spark import serving  # noqa: E402
+from velib_lakehouse_spark.streaming.silver import BRONZE_GLOB  # noqa: E402
 
 _ROUND = itertools.count()  # one job group per round
 
 
-def _count_event_loads(loads: list[str]) -> None:
-    """Wrap the ``load_table`` the serving queries call, recording names."""
-    orig = serving.load_table
+def _count_reads(reads: list[tuple]) -> None:
+    """Wrap the session's parquet reader, recording the paths of each read."""
+    orig = DataFrameReader.parquet
 
-    def load_table(spark, sf_dir, name):
-        loads.append(name)
-        return orig(spark, sf_dir, name)
+    def parquet(self, *paths, **options):
+        reads.append(paths)
+        return orig(self, *paths, **options)
 
-    serving.load_table = load_table
+    DataFrameReader.parquet = parquet
 
 
-def measure(spark, lake: str, rounds: int, cold: bool, loads: list[str]) -> list[dict]:
+def _bronze(paths: tuple) -> bool:
+    return any(fnmatch.fnmatch(os.path.basename(p), BRONZE_GLOB) for p in paths)
+
+
+def measure(spark, lake: str, rounds: int, cold: bool, reads: list[tuple]) -> list[dict]:
     sc = spark.sparkContext
     samples = []
     for _ in range(rounds):
@@ -63,7 +71,7 @@ def measure(spark, lake: str, rounds: int, cold: bool, loads: list[str]) -> list
             serving._CACHE.clear()
         group = f"serving-cost-{next(_ROUND)}"
         sc.setJobGroup(group, group)
-        del loads[:]
+        del reads[:]
         cpu, wall = bench.process_cpu_s(), time.perf_counter()
         for fn in serving.ROUTES.values():
             fn(spark, lake)
@@ -72,7 +80,7 @@ def measure(spark, lake: str, rounds: int, cold: bool, loads: list[str]) -> list
                 "wall_s": time.perf_counter() - wall,
                 "cpu_s": bench.process_cpu_s() - cpu,
                 "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
-                "events_loads": loads.count("events"),
+                "bronze_reads": sum(map(_bronze, reads)),
             }
         )
     return samples
@@ -97,17 +105,17 @@ def main() -> int:
     try:
         lake = os.path.join(work, "bronze")
         gen.make_lake(gen.StationFeed(1, 1500, 50), lake, args.ticks)
-        loads: list[str] = []
-        _count_event_loads(loads)
+        reads: list[tuple] = []
+        _count_reads(reads)
         spark = bench.start_session()
         try:
             threads = jvm_cpu.ThreadCpu(spark)
             threads.take()  # the session start
-            cold = measure(spark, lake, 1, True, loads)
+            cold = measure(spark, lake, 1, True, reads)
             print(json.dumps({"mode": "first", **cold[0], "jvm": threads.take()}))
-            cold += measure(spark, lake, args.rounds - 1, True, loads)
+            cold += measure(spark, lake, args.rounds - 1, True, reads)
             print(json.dumps(median_line(cold, "cold")))
-            hit = measure(spark, lake, args.rounds, False, loads)
+            hit = measure(spark, lake, args.rounds, False, reads)
             print(json.dumps(median_line(hit, "hit")))
         finally:
             bench.stop_session(spark)

@@ -27,4 +27,3 @@ pruning and broadcast selection apply unchanged on a real cluster.
 __version__ = "0.1.0"
 
 from velib_lakehouse_spark.session import get_spark  # noqa: F401
-from velib_lakehouse_spark.catalog import load_table  # noqa: F401

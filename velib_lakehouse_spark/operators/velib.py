@@ -11,8 +11,9 @@ The history and alerts queries are the medallion's own transforms
 ``silver_transform``): the alerts query is gold's transform, so the
 registry checks the rule ``run_medallion`` commits.  The serving
 queries (``sparkline``, ``alert_bands``, ``health``) are projections of
-``serving.station_summary``, the summary the API folds its payloads
-from.  This module depends on the core; the core never imports it.
+``serving.station_summary`` over the same silver parse, the summary the
+API folds its payloads from.  This module depends on the core; the core
+never imports it.
 
 Determinism rules (SURVEY.md §7 hard parts):
 * no wall-clock — every time cutoff is derived from max(ts) in the data;
@@ -41,6 +42,12 @@ from velib_lakehouse_spark.serving import TARGET_MAX, station_summary
 from velib_lakehouse_spark.streaming.silver import silver_transform
 
 
+def _silver(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The medallion's ``silver_transform`` over the catalog's ``events``
+    (which normalises either on-disk ``ts`` shape)."""
+    return silver_transform(load_table(spark, sf_dir, "events"))
+
+
 def silver_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bronze->silver parse+derive (reference src/assets/silver.py:40-49)
     as a batch query: the medallion's ``silver_transform`` over the
@@ -51,8 +58,7 @@ def silver_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     to_date).  ``props`` plays the raw Kafka value; the extracted ``k``
     plays the typed payload fields.  Pure map-side — no shuffle.
     """
-    silver = silver_transform(load_table(spark, sf_dir, "events"))
-    return silver.select(
+    return _silver(spark, sf_dir).select(
         "event_id",
         "station_code",
         "k",
@@ -64,8 +70,8 @@ def silver_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The medallion's ``build_history`` over the silver parse of ``events``."""
-    return build_history(silver_transform(load_table(spark, sf_dir, "events")))
+    """The medallion's ``build_history`` over :func:`_silver`."""
+    return build_history(_silver(spark, sf_dir))
 
 
 def history_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,7 +130,7 @@ def sparkline(spark: SparkSession, sf_dir: str) -> DataFrame:
     of ``serving.station_summary``; a NULL station never matches a target,
     as in the reference's ``IN`` filter."""
     return (
-        station_summary(spark, sf_dir)
+        station_summary(_silver(spark, sf_dir))
         .filter(F.col("station_code").isNotNull() & (F.col("current_bikes") <= TARGET_MAX))
         .select("station_code", "sparkline_data", "current_bikes")
     )
@@ -149,7 +155,7 @@ def alert_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference src/api.py:73-74 computes them in Python post-hoc), over
     each station's latest value in ``serving.station_summary``."""
     latest = F.col("current_bikes")
-    return station_summary(spark, sf_dir).agg(
+    return station_summary(_silver(spark, sf_dir)).agg(
         F.count_if(latest < CRITICAL_MAX).alias("critical_count"),
         F.count_if((latest >= CRITICAL_MAX) & (latest < ALERT_MAX)).alias(
             "warning_count"
@@ -169,7 +175,7 @@ def health(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     c = load_table(spark, sf_dir, "customer")
     ref = c.agg(F.count(F.lit(1)).alias("total_expected"))
-    obs = station_summary(spark, sf_dir).agg(
+    obs = station_summary(_silver(spark, sf_dir)).agg(
         F.max("latest_sync_ms").alias("latest_sync_ms"),
         F.count("station_code").alias("active_stations"),
         F.round(F.sum("value_sum"), 2).cast("double").alias("total_value"),

@@ -5,34 +5,38 @@ over the lake (reference src/api.py:37-84 ``/alerts/critical``,
 src/api.py:87-142 ``/health/pipeline``) and computes the severity bands
 in Python from the rows it fetched (src/api.py:73-74).  Here both
 payloads are kept in a module-level cache, one entry per lake directory,
-keyed by the listing of the ``events`` and ``customer`` files.  A
-request lists those files (one ``stat`` per file, so a hit's cost grows
-with the number of landed files): if the listing matches the cached one,
-it returns the stored payload and runs no Spark job; otherwise it
-recomputes both payloads under a lock.
+keyed by ``path -> (size, mtime)`` of each file they read.  A request
+walks those files (one ``stat`` per file, so a hit's cost grows with the
+number of landed files): if the key matches the cached one, it returns
+the stored payload and runs no Spark job; otherwise it recomputes both
+payloads under a lock.
 
-This module owns its query, as the reference keeps its serving SQL in
-its API module: :func:`station_summary` says what is summarised per
-station, and ``_compute`` how both payloads fold from it.  A miss is
-one pass over ``events``: it collects that summary (one row per
-station, one Exchange) and counts ``customer``, then folds both
-payloads on the driver, as the reference does.  The registry's
-``sparkline``, ``alert_bands`` and ``health`` queries
-(``operators/velib.py``) import the summary from here and are the same
-fold as Spark projections of it; the core imports no registry module.
-Each version also stores each route's JSON body, encoded once, which
-the HTTP handler sends as is.  Once serving answers from what the tick
-committed instead of bronze, the Spark summary is registry-only and
-goes back to ``operators/velib.py``.
+Bronze is read through the silver stream's contract
+(``streaming/silver.py``): the paths ``BRONZE_GLOB`` matches, read with
+``BRONZE_SCHEMA`` and mapped to silver's columns by
+``silver_transform``.  The key walks those same paths, so key and data
+agree.  This module owns its query, as the reference keeps its serving
+SQL in its API module: :func:`station_summary` says what is summarised
+per station of a silver-shaped frame, and ``_compute`` how both payloads
+fold from it, in one pass over bronze plus a ``customer`` count.  The
+registry's ``sparkline``, ``alert_bands`` and ``health``
+(``operators/velib.py``) are the same fold as Spark projections of the
+summary; the core imports no registry module and no ``catalog``.  Each
+version also stores each route's JSON body, encoded once, which the HTTP
+handler sends as is.  Once serving answers from what the tick committed,
+only the summary's input changes to silver, and the Spark summary goes
+back to ``operators/velib.py``.
 
-Freshness contract: an answer reflects at least the files listed at
-request time.  This rests on one assumption, the same one Spark's file
-index makes: landed files are immutable, and new data arrives under new
-file names (the Kafka/S3 append the reference uses, and what a tick
-landing does: write, then rename into the table directory).  A file that
-lands while Spark reads the lake may be in the answer already; the next
-request lists it and recomputes.  Files Spark's reader skips (names
-starting with ``.`` or ``_``) are not part of the listing.
+Freshness contract: an answer reflects at least the ``events*.parquet``
+files (each a file or a directory of part files) and ``customer.parquet``
+present at request time.  This rests on one assumption, the same one
+Spark's file index makes: landed files are immutable, and new data
+arrives under new file names (the Kafka/S3 append the reference uses,
+and what a tick landing does: write, then rename into the table
+directory).  A file that lands while Spark reads the lake may be in the
+answer already; the next request lists it and recomputes.  Files
+Spark's reader skips (names starting with ``.`` or ``_``) are not part
+of the key.
 
 Each endpoint is a function returning the JSON-able dict the
 reference's FastAPI handler emits; ``serve`` puts them on the stdlib
@@ -42,6 +46,7 @@ must not mutate them.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import logging
@@ -53,10 +58,10 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from velib_lakehouse_spark.catalog import load_table
 from velib_lakehouse_spark.functions.collections import ordered_collect
 from velib_lakehouse_spark.functions.timeseries import DEC
 from velib_lakehouse_spark.pipeline import ALERT_MAX, CRITICAL_MAX
+from velib_lakehouse_spark.streaming.silver import BRONZE_GLOB, BRONZE_SCHEMA, silver_transform
 
 # Rescaled serving threshold (events.value plays bikes_available).
 TARGET_MAX = 60.0  # reference: gold scan keeps bikes <= 5 (src/api.py:45)
@@ -67,7 +72,7 @@ _CENT = Decimal("0.01")
 
 
 class _Version(NamedTuple):
-    key: tuple  # the listing the payloads were computed from
+    key: dict  # path -> (st_size, st_mtime_ns) of each file the payloads read
     etag: str
     payloads: dict  # route -> payload dict
     bodies: dict  # route -> the payload encoded as the JSON response body
@@ -76,89 +81,95 @@ class _Version(NamedTuple):
 _log = logging.getLogger(__name__)
 _CACHE: dict[str, _Version] = {}  # abspath(sf_dir) -> the last computed version
 _LOCK = threading.Lock()
-_served = threading.local()  # the _Version this thread last served
 
 
-def _listing(path: str) -> tuple:
-    """``(name, st_size, st_mtime_ns)`` of each file Spark reads at ``path``:
-    a single parquet file, or a directory of part files."""
-    if not os.path.isdir(path):
+def _walk(path: str, key: dict) -> None:
+    """Add ``path -> (st_size, st_mtime_ns)`` to ``key`` for each file
+    Spark reads at ``path``: a single parquet file, or a directory of
+    part files (names starting with ``.`` or ``_`` skipped)."""
+    try:
+        entries = os.scandir(path)
+    except NotADirectoryError:
         st = os.stat(path)
-        return (("", st.st_size, st.st_mtime_ns),)
-    out = []
-    for root, dirs, names in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        for name in names:
-            if name.startswith((".", "_")):
+        key[path] = (st.st_size, st.st_mtime_ns)
+        return
+    with entries:
+        for entry in entries:
+            if entry.name.startswith((".", "_")):
                 continue
-            full = os.path.join(root, name)
             try:
-                st = os.stat(full)
-            except FileNotFoundError:  # renamed away since the walk listed it
+                if entry.is_dir():
+                    _walk(entry.path, key)
+                else:
+                    st = entry.stat()
+                    key[entry.path] = (st.st_size, st.st_mtime_ns)
+            except FileNotFoundError:  # renamed away since the scan listed it
                 continue
-            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
-    return tuple(sorted(out))
 
 
-def _lake_key(root: str) -> tuple:
-    return tuple(
-        (table, _listing(os.path.join(root, f"{table}.parquet")))
-        for table in ("events", "customer")
-    )
+def _lake(root: str) -> tuple[list[str], dict]:
+    """The bronze paths at ``root`` (the ``BRONZE_GLOB`` matches) and the
+    cache key: every file under them and under ``customer.parquet``."""
+    bronze = sorted(glob.glob(os.path.join(root, BRONZE_GLOB)))
+    key: dict = {}
+    for path in bronze + [os.path.join(root, "customer.parquet")]:
+        _walk(path, key)
+    return bronze, key
 
 
-def station_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One row per station: everything the two serving routes read.
+def station_summary(silver: DataFrame) -> DataFrame:
+    """One row per station of a silver-shaped frame (``silver_transform``'s
+    columns): everything the two serving routes read.
 
-    One ``events`` scan, one ``row_number`` window on the station ordered
-    newest first (``ts DESC, event_id DESC``) and one ``groupBy`` on the
-    same key, so the plan has a single Exchange.  Columns:
+    One scan, one ``row_number`` window on ``station_code`` ordered
+    newest first (``last_reported DESC, event_id DESC``) and one
+    ``groupBy`` on the same key, so the plan has a single Exchange.
+    Columns:
 
-    * ``current_bikes``: the rank-1 (latest) value;
+    * ``current_bikes``: the rank-1 (latest) ``bikes_available``;
     * ``sparkline_data``: the rank <= 5 readings in time order (W2 + A5,
       the ``LIST(ORDER BY)`` idiom);
-    * ``value_sum``: the exact ``DECIMAL(18,4)`` sum of the values;
+    * ``value_sum``: the exact ``DECIMAL(18,4)`` sum of the readings;
     * ``n_events`` and ``latest_sync_ms``: the count and the newest
-      ``ts`` in epoch millis.
+      ``last_reported`` in epoch millis.
 
     ``_compute`` folds both payloads from its collected rows (at most
     one per station); the registry's ``velib.sparkline``,
     ``alert_bands`` and ``health`` are projections of it.
     """
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
+    w = Window.partitionBy("station_code").orderBy(
+        F.col("last_reported").desc(), F.col("event_id").desc()
     )
+    bikes, ts_ms = F.col("bikes_available"), F.unix_millis("last_reported")
     return (
-        e.withColumn("rank", F.row_number().over(w))
-        .groupBy(F.col("user_id").alias("station_code"))
+        silver.withColumn("rank", F.row_number().over(w))
+        .groupBy("station_code")
         .agg(
-            F.max(F.when(F.col("rank") == 1, F.col("value"))).alias("current_bikes"),
+            F.max(F.when(F.col("rank") == 1, bikes)).alias("current_bikes"),
             ordered_collect(
-                F.col("value"),
-                F.unix_millis("ts"),
-                F.col("event_id"),
-                where=F.col("rank") <= 5,
+                bikes, ts_ms, F.col("event_id"), where=F.col("rank") <= 5
             ).alias("sparkline_data"),
-            F.sum(F.col("value").cast(DEC)).alias("value_sum"),
+            F.sum(bikes.cast(DEC)).alias("value_sum"),
             F.count(F.lit(1)).alias("n_events"),
-            F.max(F.unix_millis("ts")).alias("latest_sync_ms"),
+            F.max(ts_ms).alias("latest_sync_ms"),
         )
     )
 
 
-def _compute(spark: SparkSession, sf_dir: str) -> dict:
+def _compute(spark: SparkSession, root: str, bronze: list[str]) -> dict:
     """Both route payloads, folded on the driver from one collected
-    :func:`station_summary` (one row per station) and the ``customer``
-    count.
+    :func:`station_summary` over the ``bronze`` paths (read with
+    ``BRONZE_SCHEMA``, mapped by ``silver_transform``) and the
+    ``customer`` count.
 
     The fold is what the registry's ``sparkline``, ``alert_bands`` and
     ``health`` projections compute in Spark; the exact decimal sum is
     rounded the way ``ROUND(x, 2)`` does (half up) before it becomes a
     float.
     """
-    rows = station_summary(spark, sf_dir).collect()
-    total_expected = load_table(spark, sf_dir, "customer").count()
+    events = spark.read.schema(BRONZE_SCHEMA).parquet(*bronze)
+    rows = station_summary(silver_transform(events)).collect()
+    total_expected = spark.read.parquet(os.path.join(root, "customer.parquet")).count()
     stations = [r for r in rows if r.station_code is not None]
     latest = [r.current_bikes for r in rows if r.current_bikes is not None]
     targets = sorted(
@@ -204,25 +215,25 @@ def _compute(spark: SparkSession, sf_dir: str) -> dict:
 def _payloads(spark: SparkSession, sf_dir: str) -> dict:
     """Both route payloads for the lake version at ``sf_dir`` right now.
 
-    A hit on the cached listing returns the stored payloads without
-    touching Spark.  A miss lists the files again under the lock, so a
-    request that waited on another thread's computation reuses it, then
-    computes once and stores the result under that listing; a
-    computation that raises leaves no entry.
+    A hit on the cached key returns the stored payloads without touching
+    Spark.  A miss lists the files again under the lock, so a request
+    that waited on another thread's computation reuses it, then computes
+    once from the bronze paths of that listing and stores the result
+    under its key; a computation that raises leaves no entry.
     """
     root = os.path.abspath(sf_dir)
     version = _CACHE.get(root)
-    if version is None or version.key != _lake_key(root):
+    if version is None or version.key != _lake(root)[1]:
         with _LOCK:
-            key = _lake_key(root)
+            bronze, key = _lake(root)
             version = _CACHE.get(root)
             if version is None or version.key != key:
                 _CACHE.pop(root, None)
-                etag = '"%s"' % hashlib.sha1(repr(key).encode()).hexdigest()[:20]
-                payloads = _compute(spark, root)
+                listing = repr(sorted(key.items())).encode()
+                etag = '"%s"' % hashlib.sha1(listing).hexdigest()[:20]
+                payloads = _compute(spark, root, bronze)
                 bodies = {r: json.dumps(p).encode() for r, p in payloads.items()}
                 version = _CACHE[root] = _Version(key, etag, payloads, bodies)
-    _served.version = version
     return version.payloads
 
 
@@ -269,18 +280,17 @@ def serve(spark: SparkSession, sf_dir: str, host: str = "127.0.0.1", port: int =
             if fn is None:
                 self.send_error(404, "unknown route")
                 return
-            _served.version = None
             try:
                 status, body = 200, fn(spark, sf_dir)
             except Exception as exc:
                 _log.exception("GET %s failed", self.path)
                 # the status line holds one line of text: the error goes in the body
                 status, body = 500, {"error": type(exc).__name__, "detail": str(exc)}
-            version = _served.version if status == 200 else None
-            if version is not None and body is version.payloads.get(self.path):
-                data = version.bodies[self.path]
+            version = _CACHE.get(os.path.abspath(sf_dir))
+            if version is None or body is not version.payloads.get(self.path):
+                version, data = None, json.dumps(body).encode()
             else:
-                data = json.dumps(body).encode()
+                data = version.bodies[self.path]
             self.send_response(status)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(data)))

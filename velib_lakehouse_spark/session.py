@@ -59,22 +59,21 @@ DRIVER_JIT_OPTS = "-XX:CompileThresholdScaling=5"
 def get_spark(
     app_name: str = "velib-lakehouse-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (falls back to ``*``).
-    ``shuffle_partitions`` defaults to the core count — at local scale the
-    200-partition default just adds scheduling overhead; on a cluster the
-    caller should size it to ~2-3x total cores (AQE coalesces down).
+    Shuffle partitions follow the core count — at local scale the
+    200-partition default just adds scheduling overhead; on a cluster
+    size ``spark.sql.shuffle.partitions`` to ~2-3x total cores through
+    ``extra_confs`` (AQE coalesces down).
     A ``spark.driver.extraJavaOptions`` in ``extra_confs`` is appended
     after ``DRIVER_JIT_OPTS``; the JVM keeps the last copy of a repeated
     ``-XX`` flag, so the caller's value wins.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
+    shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

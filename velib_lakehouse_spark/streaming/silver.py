@@ -9,6 +9,11 @@ Streaming engine, deterministic, no broker needed — SURVEY.md §7
 hard-part 4).  The reference's Kafka scan (src/assets/silver.py:29-36)
 needs the spark-sql-kafka package, which is not in this build.
 
+This module is the one definition of bronze, used by the stream, by
+serving and by the registry: its schema and path pattern
+(``BRONZE_SCHEMA``, ``BRONZE_GLOB``) and its mapping to silver's columns
+(``silver_transform``).
+
 ``run_silver_stream`` drains the stream into the silver log table, one
 idempotent commit per micro-batch (sources/snapshots.py).  The registry's
 streaming showcase queries live in ``operators/streaming.py``.
@@ -24,23 +29,27 @@ from pyspark.sql import functions as F
 from velib_lakehouse_spark.session import apply_safe_confs
 from velib_lakehouse_spark.sources.snapshots import commit_stream_batch
 
-# The bronze events schema, fixed as the reference fixes its Kafka
-# payload schema (reference src/assets/silver.py:16).  Streaming needs
-# an explicit schema, and a fixed one costs no Spark job per query
-# start (inferring it from the files runs one).
+# The bronze contract, fixed as the reference fixes its Kafka payload
+# schema (reference src/assets/silver.py:16).  A fixed schema costs no
+# Spark job per read (inferring it runs one).  The pattern matches a
+# single file (the test data's ``events.parquet``), per-fetch files
+# (``events_late1.parquet``) or a directory of part files
+# (``perfbench/gen.py``), whose ``_``/``.`` files Spark skips.
 BRONZE_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string,"
     " value double, props string"
 )
+BRONZE_GLOB = "events*.parquet"
 
 
 def _event_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """File-source streaming scan of the events table (Kafka stand-in),
-    read with the fixed ``BRONZE_SCHEMA``.  A naive microsecond ``ts``
-    (the test data's and ``perfbench/gen.py``'s) reads as the UTC
-    instant with the same digits, whatever the session time zone.
+    """File-source streaming scan of the bronze files (Kafka stand-in):
+    ``BRONZE_GLOB`` under ``sf_dir``, read with ``BRONZE_SCHEMA``.  A
+    naive microsecond ``ts`` (the test data's and ``perfbench/gen.py``'s)
+    reads as the UTC instant with the same digits, whatever the session
+    time zone.
 
     ``max_files_per_trigger`` caps files per micro-batch (tests use it to
     force multi-batch runs and exercise state carry-over).
@@ -49,22 +58,7 @@ def _event_stream(
     reader = spark.readStream.schema(BRONZE_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    # Two on-disk layouts exist: events.parquet as a DIRECTORY of part
-    # files (any real writer, incl. tools/scale_stress.py) is streamed
-    # directly; otherwise the parent dir is scanned for events*.parquet
-    # FILES (driver testdata's single file; the multi-batch tests drop
-    # several).  The glob alone would silently match nothing in the
-    # directory case (part files are named part-*), and the direct path
-    # alone rejects single files (basePath must be a directory).
-    # NOTE: os.path.isdir means sf_dir MUST be a local filesystem path
-    # (every harness here passes one).  For object-store/HDFS URIs,
-    # swap in the Hadoop FileSystem API:
-    #   jvm = spark._jvm; pth = jvm.org.apache.hadoop.fs.Path(tbl)
-    #   pth.getFileSystem(spark._jsc.hadoopConfiguration()).isDirectory(pth)
-    tbl = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(tbl):
-        return reader.parquet(tbl)
-    return reader.option("pathGlobFilter", "events*.parquet").parquet(sf_dir)
+    return reader.parquet(os.path.join(sf_dir, BRONZE_GLOB))
 
 
 def silver_transform(stream: DataFrame) -> DataFrame:
@@ -125,5 +119,4 @@ def run_silver_stream(
     return {
         "rows_processed": sum(int(p["numInputRows"]) for p in progress),
         "n_batches": len(progress),
-        "sink_path": out_dir,
     }
