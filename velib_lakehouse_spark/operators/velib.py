@@ -11,8 +11,8 @@ The history and alerts queries are the medallion's own transforms
 ``silver_transform``): the alerts query is gold's transform, so the
 registry checks the rule ``run_medallion`` commits.  The serving
 queries (``sparkline``, ``alert_bands``, ``health``) are projections of
-``serving.station_summary`` over the same silver parse, the summary the
-API folds its payloads from.  This module depends on the core; the core
+``serving.station_summary`` of that silver parse, the summary the API
+folds its payloads from.  This module depends on the core; the core
 never imports it.
 
 Determinism rules (SURVEY.md §7 hard parts):
